@@ -76,6 +76,24 @@ object Bench {
     }
   }
 
+  /** Longest final stdout line a driver that keeps only the last ~2000
+    * characters of output (sbt's `[success]` trailer included) still
+    * receives whole.
+    */
+  private[graft] val HeadlineMax = 1500
+
+  /** The FINAL stdout line: the run's headline only. The per-query maps
+    * live in the `full` file. `failed` names the failed queries while
+    * the line stays under [[HeadlineMax]], else carries their count.
+    */
+  private[graft] def headline(total: String, runs: Int, sf: String, cpus: Int,
+      contended: Boolean, failed: Seq[String], nQueries: Int, full: String): String = {
+    def line(failedJson: String) =
+      s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,"sf":"$sf","cpus":$cpus,"contended":$contended,"failed":$failedJson,"nQueries":$nQueries,"full":"$full"}"""
+    val named = line(failed.map("\"" + _ + "\"").mkString("[", ",", "]"))
+    if (named.length < HeadlineMax) named else line(failed.size.toString)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -359,49 +377,28 @@ object Bench {
     if (loadNoisy)
       System.err.println(s"[bench] LOAD CLIMB >2x during: ${loadClimbQueries.mkString(",")}")
     val loadClimbJson = loadClimbQueries.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // The COMPLETE line (headline + per-query minima + medians + diag):
-    // printed for full-stdout captures and written to a file the repo
-    // commits, so the full maps always survive.
+    // The COMPLETE record (headline + per-query minima + medians + diag):
+    // printed for full-stdout captures and written to a file, so the full
+    // maps always survive. It is ~80 KB, so it must never be the LAST
+    // line: the round's driver keeps only a ~2 kB stdout tail.
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,"sf":"$sfDir","contended":$contended,"busySiblings":{"start":$busyStart,"end":$busyEnd},"loadNoisy":$loadNoisy,"loadClimbQueries":$loadClimbJson,"failed":$failedJson,"queries_min":$qsMin,"queries":$qs,"queries_med":$qs,"queries_runs":$qsRuns,"diag":$qsDiag}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,"sf":"$sfDir","cpus":$cpus,"contended":$contended,"busySiblings":{"start":$busyStart,"end":$busyEnd},"loadNoisy":$loadNoisy,"loadClimbQueries":$loadClimbJson,"failed":$failedJson,"queries_min":$qsMin,"queries":$qs,"queries_med":$qs,"queries_runs":$qsRuns,"diag":$qsDiag}"""
     System.out.println(line)
     // a SPARK_GRAFT_ONLY subset run must NEVER clobber the committed
     // round artifact: a later `git add -u` would silently promote a
     // 4-query iteration file to the round's bench (it happened — r12),
     // which is exactly the artifact drift tools/freshness.py polices.
-    // Subset runs default to /tmp; the full set defaults to the artifact.
+    // Subset runs default to /tmp; the full set defaults to an artifact
+    // stamped with the core count, so an 8-core rerun cannot overwrite
+    // the 32-core numbers.
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       if (only.isDefined) s"${sys.props("java.io.tmpdir")}/BENCH_SUBSET.json"
-      else "BENCH_LAST.json")
+      else s"BENCH_LAST_c$cpus.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
       (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case e: Throwable => System.err.println(s"[bench] BENCH_LAST write failed: $e") }
-    // The FINAL stdout line carries the COMPLETE per-query maps (r15
-    // VERDICT ask: the driver's PERF per-query comparison must never again
-    // depend on BENCH_LAST.json surviving a later run's overwrite), laid
-    // out so BOTH consumers can read it:
-    //  - a parser of the full stdout line gets the contract keys (metric/
-    //    value/unit/queries/sf) PLUS the full queries_min map;
-    //  - the round artifact keeps only the LAST ~2000 chars of stdout (r5
-    //    and r6 both captured an unparseable mid-line tail), so the big
-    //    maps go FIRST and the human-readable headline + slowest-N
-    //    trailer goes LAST — the archived tail still ends with the
-    //    headline numbers, exactly as before this change.
-    // Additions-only: every key the compact line used to carry is still
-    // present; queries_min/queries are the same maps the first line and
-    // BENCH_LAST.json carry.
-    val slowestFirst = results.collect { case (k, Some((med, _)), _) => (k, med) }
-      .sortBy(-_._2)
-    val headBudget = 1300
-    val head = new StringBuilder(
-      s""""metric":"total","value":$total,"unit":"sec","runs":$runs,"sf":"$sfDir","contended":$contended,"nQueries":${results.size},"failed":$failedJson,"full":"$outFile","slowest":{""")
-    var first = true
-    for ((k, med) <- slowestFirst) {
-      val entry = (if (first) "" else ",") + "\"" + k + "\":" + fmt(med)
-      if (head.length + entry.length < headBudget) { head.append(entry); first = false }
-    }
-    head.append("}}")
-    System.out.println(s"""{"queries_min":$qsMin,"queries":$qs,""" + head.toString)
+    catch { case e: Throwable => System.err.println(s"[bench] $outFile write failed: $e") }
+    System.out.println(headline(total, runs, sfDir, cpus.toInt, contended,
+      failedQueries, results.size, outFile))
     System.out.flush()
     spark.stop()
   }

@@ -173,7 +173,7 @@ object Graphs {
     // recoverable); unset, fast executor-local localCheckpoint blocks.
     val lcp = Checkpoints.truncating(checkpointDir.isDefined) _
     var release: () => Unit = () => ()
-    for (i <- 1 to iterations) {
+    for (_ <- 1 to iterations) {
       val contrib = e
         .join(ranks.withColumnRenamed("_n", "u"), "u")
         .select(col("v"), expr("rank_fp DIV _deg").as("_c"))
@@ -183,21 +183,11 @@ object Graphs {
           expr(s"_contrib DIV ${scale}L") * lit(damp) +
           expr(s"((_contrib % ${scale}L) * ${damp}L) DIV ${scale}L"))
           .as("rank_fp"))
-      // checkpoint every OTHER round (and the last): truncation exists to
-      // stop plan growth, and a 2-round-deep plan is still O(1) to analyze
-      // — while each checkpoint is a blocking count() job plus a block
-      // write, i.e. pure sequential driver latency × iterations (§5 fewer
-      // sequential jobs; r16). Rank algebra is unchanged — results are
-      // digit-identical, only job boundaries move.
-      if (i % 2 == 0 || i == iterations) {
-        val (next, nextRelease) = lcp(stepped)
-        next.count()
-        release()
-        ranks = next
-        release = nextRelease
-      } else {
-        ranks = stepped
-      }
+      val (next, nextRelease) = lcp(stepped)
+      next.count()
+      release()
+      ranks = next
+      release = nextRelease
     }
     graft.Caches.trackRelease(release)
     ranks.select(col("_n").as("node"), col("rank_fp"))
@@ -251,7 +241,7 @@ object Graphs {
     val lcp = Checkpoints.truncating(checkpointDir.isDefined) _
     var ranks = nodes.select(col("_n"), lit(scale).as("rank_fp"))
     var release: () => Unit = () => ()
-    for (i <- 1 to iterations) {
+    for (_ <- 1 to iterations) {
       val contrib = e
         .join(ranks.withColumnRenamed("_n", "u"), "u")
         .select(col("v"),
@@ -264,17 +254,11 @@ object Graphs {
               expr(s"_contrib DIV ${scale}L") * lit(damp) +
                 expr(s"((_contrib % ${scale}L) * ${damp}L) DIV ${scale}L"),
               lit(0L))).as("rank_fp"))
-      // every-other-round truncation (see pageRank): same algebra, fewer
-      // blocking checkpoint jobs
-      if (i % 2 == 0 || i == iterations) {
-        val (next, nextRelease) = lcp(stepped)
-        next.count()
-        release()
-        ranks = next
-        release = nextRelease
-      } else {
-        ranks = stepped
-      }
+      val (next, nextRelease) = lcp(stepped)
+      next.count()
+      release()
+      ranks = next
+      release = nextRelease
     }
     graft.Caches.trackRelease(release)
     ranks.select(col("_n").as("node"), col("rank_fp"))
@@ -336,7 +320,7 @@ object Graphs {
       .select(col("_n"),
         (coalesce(col("_vseed"), lit(0L)) * scale).as("rank_fp"))
     var release: () => Unit = () => ()
-    for (i <- 1 to iterations) {
+    for (_ <- 1 to iterations) {
       val contrib = e
         .join(ranks.withColumnRenamed("_n", "u"), "u")
         .select(col("v"), col("_vseed"), expr("rank_fp DIV _deg").as("_c"))
@@ -347,17 +331,11 @@ object Graphs {
           expr(s"_contrib DIV ${scale}L") * lit(damp) +
           expr(s"((_contrib % ${scale}L) * ${damp}L) DIV ${scale}L"))
           .as("rank_fp"))
-      // every-other-round truncation (see pageRank): same algebra, fewer
-      // blocking checkpoint jobs
-      if (i % 2 == 0 || i == iterations) {
-        val (next, nextRelease) = lcp(stepped)
-        next.count()
-        release()
-        ranks = next
-        release = nextRelease
-      } else {
-        ranks = stepped
-      }
+      val (next, nextRelease) = lcp(stepped)
+      next.count()
+      release()
+      ranks = next
+      release = nextRelease
     }
     graft.Caches.trackRelease(release)
     ranks.select(col("_n").as("node"), col("rank_fp"))

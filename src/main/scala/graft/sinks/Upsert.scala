@@ -2,11 +2,17 @@ package graft.sinks
 
 import java.net.URI
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** A maintained upsert table: copy-on-write over hash buckets, the batch
   * answer to "apply this CDC feed to a 100 TB table without rewriting
@@ -17,21 +23,33 @@ import org.apache.spark.sql.types.StructType
   * either rolls the whole batch forward or leaves the previous
   * generations untouched. Readers resolve generations through ONE
   * manifest file per batch (`_manifests/m-g<N>`, the full bucket→
-  * generation mapping, published atomically after every bucket is
-  * committed): a read snapshots a single manifest, so it sees all of a
-  * batch or none of it even while the next upsert is mid-commit
-  * (generation dirs are fresh paths — there is no delete-then-rename
-  * window at all). [[vacuum]] reclaims superseded generations once no
-  * reader needs them.
+  * generation mapping WITH each generation's part files, published
+  * atomically after every bucket is committed): a read snapshots a
+  * single manifest, so it sees all of a batch or none of it even while
+  * the next upsert is mid-commit (generation dirs are fresh paths —
+  * there is no delete-then-rename window at all). [[vacuum]] reclaims
+  * superseded generations once no reader needs them.
   *
   * Layout: `table/_bucket=<i>/gen=g<N>/part-*.parquet` (+ the
   * `_GRAFT_COMMITTED` marker per committed generation), metadata (bucket
   * count, primary key, schema) at `table/_graft_table`, one manifest per
-  * committed batch under `table/_manifests/`. The manifest makes every
-  * metadata operation O(1) file reads — the per-bucket generation glob
-  * survives only as [[recover]]'s rebuild source, so a 10k-bucket table
-  * with deep histories costs one small file read per read/upsert, not a
-  * listing storm.
+  * committed batch under `table/_manifests/`:
+  *
+  * {{{
+  *   #files
+  *   <bucket>=g<N>
+  *   \t<part file name>\t<length>\t<mtime ms>     (one line per part file)
+  * }}}
+  *
+  * A read lists nothing: the manifest names every file the scan opens
+  * (committed generations are immutable), so [[read]], `asOf` reads and
+  * an upsert's read of its dirty buckets run no Spark file-listing job
+  * and no per-bucket `listStatus`. The committed generations are listed
+  * once, at commit, to write the manifest; the per-bucket generation
+  * glob survives only as [[recover]]'s rebuild source. A legacy
+  * manifest (`bucket=gen` lines only, no `#files` header) still reads:
+  * its generation directories are listed on the driver, and the next
+  * upsert publishes a manifest with file lists.
   *
   * Scale shape: an upsert costs one shuffle of the changes plus a
   * rewrite of the dirty buckets only — with B buckets and a changeset
@@ -88,27 +106,80 @@ object Upsert {
       }
   }
 
-  private def hasData(f: FileSystem, gen: Path): Boolean =
-    f.listStatus(gen).exists(s => s.getPath.getName.startsWith("part-") && s.getLen > 0)
+  private def genDir(tableDir: String, b: Int, genName: String) =
+    new Path(s"$tableDir/_bucket=$b/gen=$genName")
+
+  /** A bucket's committed generation and the part files it serves. */
+  private case class Gen(name: String, files: Seq[FileStatus])
+
+  /** The part files of one committed generation directory — the only
+    * listing a generation ever gets: at commit (or when upgrading a
+    * legacy manifest), never per read.
+    */
+  private def listParts(f: FileSystem, gen: Path): Seq[FileStatus] =
+    f.listStatus(gen).toSeq
+      .filter(s => s.isFile && s.getPath.getName.startsWith("part-") && s.getLen > 0)
+      .sortBy(_.getPath.getName)
+
+  /** Fixed file set, no discovery: the scan opens exactly the manifest's
+    * part files, so planning it never touches the file system.
+    */
+  private class ManifestIndex(files: Seq[FileStatus]) extends FileIndex {
+    override def rootPaths: Seq[Path] = files.map(_.getPath.getParent).distinct
+    override def listFiles(partitionFilters: Seq[Expression],
+        dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      Seq(PartitionDirectory(InternalRow.empty, files.toArray))
+    override def inputFiles: Array[String] = files.map(_.getPath.toString).toArray
+    override def refresh(): Unit = ()
+    override def sizeInBytes: Long = files.map(_.getLen).sum
+    override def partitionSchema: StructType = new StructType()
+  }
+
+  // a file source relation reads its data schema as nullable
+  // (DataSource.resolveRelation does the same for spark.read)
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case o => o
+  }
+
+  /** The one scan-construction path for every Upsert read: the given
+    * generations' part files as a parquet relation with the table schema.
+    * No generations (an empty table, or only emptied buckets) is a scan
+    * of zero files.
+    */
+  private def scan(spark: SparkSession, schema: StructType, gens: Iterable[Gen]): DataFrame =
+    spark.baseRelationToDataFrame(HadoopFsRelation(
+      new ManifestIndex(gens.flatMap(_.files).toSeq), new StructType(),
+      nullable(schema).asInstanceOf[StructType], None, new ParquetFileFormat, Map.empty)(spark))
 
   // ---- manifest: one small file per committed batch --------------------
   //
   // `_manifests/m-g<N>` holds the COMPLETE bucket→generation mapping as of
-  // batch N, one `bucket=genName` line per bucket. Published via fresh-path
-  // create + rename after finishCommit and before the tx marker drops, so
-  // a crash window is always covered: marker live ⇒ recover re-runs
-  // finishCommit and rewrites the manifest from the authoritative glob.
+  // batch N: a `#files` header, then per bucket a `bucket=genName` line
+  // followed by one tab-indented `name<TAB>length<TAB>mtime` line per part
+  // file. Published via fresh-path create + rename after finishCommit and
+  // before the tx marker drops, so a crash window is always covered:
+  // marker live ⇒ recover re-runs finishCommit and rewrites the manifest
+  // from the authoritative glob.
+
+  private val filesHeader = "#files"
 
   private def manifestDir(tableDir: String) = new Path(s"$tableDir/_manifests")
 
   private def writeManifest(f: FileSystem, tableDir: String, genName: String,
-      mapping: Map[Int, String]): Unit = {
+      mapping: Map[Int, Gen]): Unit = {
     val dir = manifestDir(tableDir)
     f.mkdirs(dir)
     val tmp = new Path(dir, s".m-$genName.tmp")
     val out = f.create(tmp, true)
-    out.write(mapping.toSeq.sortBy(_._1)
-      .map { case (b, g) => s"$b=$g" }.mkString("\n").getBytes("UTF-8"))
+    val lines = filesHeader +: mapping.toSeq.sortBy(_._1).flatMap { case (b, g) =>
+      s"$b=${g.name}" +: g.files.map(s =>
+        s"\t${s.getPath.getName}\t${s.getLen}\t${s.getModificationTime}")
+    }
+    out.write(lines.mkString("\n").getBytes("UTF-8"))
     out.close()
     val dst = new Path(dir, s"m-$genName")
     if (f.exists(dst) && !f.delete(dst, false)) // recover rewrite: idempotent
@@ -127,29 +198,57 @@ object Upsert {
       .sortBy(_.getName).lastOption
   }
 
-  private def readManifest(f: FileSystem, p: Path): Map[Int, String] = {
+  /** Bucket → generation with its part files. A manifest without the
+    * `#files` header (written before manifests carried file lists) gets
+    * its generation directories listed here, once per read.
+    */
+  private def readManifest(f: FileSystem, tableDir: String, p: Path): Map[Int, Gen] = {
     val in = f.open(p)
     val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    text.linesIterator.filter(_.nonEmpty).map(_.split("=", 2)).collect {
-      case Array(b, g) => b.toInt -> g
+    val lines = text.linesIterator.filter(_.nonEmpty).toSeq
+    val listed = lines.headOption.contains(filesHeader)
+    val root = f.makeQualified(new Path(tableDir)).toString
+    val entries = ArrayBuffer.empty[(Int, String, ArrayBuffer[String])]
+    lines.foreach {
+      case l if l.startsWith("\t") => entries.last._3 += l.drop(1)
+      case l => l.split("=", 2) match {
+        case Array(b, g) => entries += ((b.toInt, g, ArrayBuffer.empty[String]))
+        case _ => () // the header
+      }
+    }
+    entries.map { case (b, g, fl) =>
+      val dir = genDir(root, b, g)
+      b -> Gen(g,
+        if (!listed) listParts(f, dir)
+        else fl.toSeq.map { line =>
+          val Array(name, len, mtime) = line.split("\t")
+          new FileStatus(len.toLong, false, 0, 0, mtime.toLong, new Path(dir, name))
+        })
     }.toMap
   }
 
-  /** Bucket → latest committed generation dir, as of `cap` (None =
-    * current): ONE manifest file read on the normal path; the per-bucket
-    * generation glob only when no manifest qualifies (legacy table, or
-    * asOf older than the retained manifests).
+  /** Bucket → latest committed generation, as of `cap` (None = current):
+    * ONE manifest file read on the normal path; the per-bucket generation
+    * glob (plus a listing of each latest generation) only when no
+    * manifest qualifies (legacy table, or asOf older than the retained
+    * manifests). Buckets with no committed generation are absent.
     */
   private def resolve(conf: Configuration, tableDir: String,
-      cap: Option[Int] = None): Seq[(Int, Option[Path])] = {
+      cap: Option[Int] = None): Map[Int, Gen] = {
     val f = fs(conf, tableDir)
     manifestAt(f, tableDir, cap) match {
-      case Some(m) =>
-        readManifest(f, m).toSeq.sortBy(_._1).map { case (b, g) =>
-          b -> Some(new Path(s"$tableDir/_bucket=$b/gen=$g"))
-        }
-      case None => latestGens(conf, tableDir, cap.map("gen=g%09d".format(_)))
+      case Some(m) => readManifest(f, tableDir, m)
+      case None => listedGens(conf, tableDir, cap.map("gen=g%09d".format(_)))
     }
+  }
+
+  /** [[latestGens]] with each latest generation's part files listed. */
+  private def listedGens(conf: Configuration, tableDir: String,
+      cap: Option[String] = None): Map[Int, Gen] = {
+    val f = fs(conf, tableDir)
+    latestGens(conf, tableDir, cap).collect {
+      case (b, Some(p)) => b -> Gen(p.getName.stripPrefix("gen="), listParts(f, p))
+    }.toMap
   }
 
   /** Rebuild the manifest from the authoritative per-bucket glob —
@@ -157,12 +256,9 @@ object Upsert {
     * manifests existed.
     */
   private def rebuildManifest(conf: Configuration, tableDir: String): Unit = {
-    val f = fs(conf, tableDir)
-    val mapping = latestGens(conf, tableDir).collect {
-      case (b, Some(p)) => b -> p.getName.stripPrefix("gen=")
-    }.toMap
+    val mapping = listedGens(conf, tableDir)
     if (mapping.nonEmpty)
-      writeManifest(f, tableDir, mapping.values.max, mapping)
+      writeManifest(fs(conf, tableDir), tableDir, mapping.values.map(_.name).max, mapping)
   }
 
   private def nextGen(conf: Configuration, tableDir: String): Int = {
@@ -179,11 +275,12 @@ object Upsert {
 
   /** Initial load: hash-bucket `base` by `pk` into `nBuckets` generation-0
     * directories. ONE partitioned Spark job writes every bucket into a
-    * staging dir; a driver pass renames each bucket into its gen-0 home
-    * and drops its committed marker — O(buckets) renames, the data moves
-    * once. Destroys anything already at `tableDir`; a crash mid-create
-    * leaves a partial gen-0 (re-run create — unmarked buckets are
-    * invisible to readers either way).
+    * staging dir; a driver pass renames each bucket into its gen-0 home,
+    * lists its part files for the manifest and drops its committed
+    * marker — O(buckets) renames, the data moves once. Destroys anything
+    * already at `tableDir`; a crash mid-create leaves a partial gen-0
+    * (re-run create — unmarked buckets are invisible to readers either
+    * way).
     */
   def create(base: DataFrame, tableDir: String, pk: Seq[String], nBuckets: Int): Unit = {
     require(nBuckets > 0, "nBuckets must be positive")
@@ -197,8 +294,8 @@ object Upsert {
     val staging = s"$tableDir/.create-stage"
     base.withColumn("_b", bucketOf(pk, nBuckets))
       .write.mode("overwrite").partitionBy("_b").parquet(staging)
-    (0 until nBuckets).foreach { b =>
-      val dst = new Path(s"$tableDir/_bucket=$b/gen=$gen0")
+    val mapping = (0 until nBuckets).map { b =>
+      val dst = genDir(tableDir, b, gen0)
       f.mkdirs(dst.getParent)
       val src = new Path(s"$staging/_b=$b")
       if (f.exists(src)) {
@@ -206,8 +303,9 @@ object Upsert {
           throw new java.io.IOException(s"create: rename $src -> $dst failed")
       } else f.mkdirs(dst) // bucket with no rows: empty committed gen-0
       f.create(new Path(dst, "_GRAFT_COMMITTED"), true).close()
-    }
-    writeManifest(f, tableDir, gen0, (0 until nBuckets).map(_ -> gen0).toMap)
+      b -> Gen(gen0, listParts(f, dst))
+    }.toMap
+    writeManifest(f, tableDir, gen0, mapping)
     if (!f.delete(new Path(staging), true) && f.exists(new Path(staging)))
       throw new java.io.IOException(s"create: cannot remove staging $staging")
   }
@@ -216,19 +314,16 @@ object Upsert {
     * generation, resolved through ONE manifest file — the read snapshots
     * the mapping atomically, so it never mixes two batches even while an
     * upsert is mid-commit (it sees the pre-batch state until the batch's
-    * manifest is published). `asOf` time-travels: the manifest of the
-    * latest batch ≤ `asOf` — the state right after [[upsert]] returned
-    * that generation number (valid until a [[vacuum]] reclaims the older
-    * generations).
+    * manifest is published). The scan opens the manifest's part files
+    * directly: no listing job, no per-bucket file-system call. `asOf`
+    * time-travels: the manifest of the latest batch ≤ `asOf` — the state
+    * right after [[upsert]] returned that generation number (valid until
+    * a [[vacuum]] reclaims the older generations).
     */
   def read(spark: SparkSession, tableDir: String,
       asOf: Option[Int] = None): DataFrame = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val meta = readMeta(conf, tableDir)
-    val paths = resolve(conf, tableDir, asOf).flatMap(_._2)
-    if (paths.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], meta.schema)
-    else spark.read.schema(meta.schema).parquet(paths.map(_.toString): _*)
+    scan(spark, readMeta(conf, tableDir).schema, resolve(conf, tableDir, asOf).values)
   }
 
   /** Apply a keyed I/U/D changeset ([[graft.operators.Merge.applyChanges]]
@@ -259,13 +354,7 @@ object Upsert {
       if (dirty.isEmpty) return g
     val f = fs(conf, tableDir)
     val current = resolve(conf, tableDir)
-    val curPaths = current
-      .filter { case (b, p) => dirty.contains(b) && p.exists(hasData(f, _)) }
-      .flatMap(_._2)
-    val cur =
-      if (curPaths.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], meta.schema)
-      else spark.read.schema(meta.schema).parquet(curPaths.map(_.toString): _*)
+    val cur = scan(spark, meta.schema, dirty.flatMap(current.get))
     // ONE partitioned job stages every dirty bucket's new generation
     // (with 500 dirty buckets of a 10k-bucket table that is one job, not
     // 500); the commit point is a marker file RECORDING the dirty set, so
@@ -284,10 +373,10 @@ object Upsert {
     // publish the batch to readers: ONE new manifest carrying the full
     // mapping — before this rename lands, readers still resolve the
     // previous manifest (consistent pre-batch state). Must precede the
-    // marker delete so a crash here is rolled forward by recover.
+    // marker delete so a crash here is rolled forward by recover. Each
+    // new generation is listed once, here, so no reader ever lists it.
     writeManifest(f, tableDir, genName,
-      current.collect { case (b, Some(p)) => b -> p.getName.stripPrefix("gen=") }.toMap
-        ++ dirty.map(_ -> genName))
+      current ++ dirty.map(b => b -> Gen(genName, listParts(f, genDir(tableDir, b, genName)))))
     f.delete(new Path(staging), true)
     f.delete(marker, false)
     g
@@ -305,7 +394,7 @@ object Upsert {
   private def finishCommit(f: FileSystem, tableDir: String, genName: String,
       dirty: Seq[Int], staging: String): Unit =
     dirty.foreach { b =>
-      val dst = new Path(s"$tableDir/_bucket=$b/gen=$genName")
+      val dst = genDir(tableDir, b, genName)
       if (!f.exists(new Path(dst, "_GRAFT_COMMITTED"))) {
         val src = new Path(s"$staging/_b=$b")
         f.mkdirs(dst.getParent)
