@@ -36,23 +36,19 @@ object Caches {
     releases += f
   }
 
-  /** `df.localCheckpoint()` whose blocks the next [[clear]] can free: the
+  /** Eager `localCheckpoint` whose blocks the next [[clear]] frees: the
     * checkpointed RDD lives *inside* the returned Dataset's plan, where
-    * `unpersist` on the handle can't reach it — identified instead by
-    * diffing the persistent-RDD registry around the call (registration
-    * happens at persist time, so the diff is exact; driver-side
-    * construction is effectively single-threaded). Operators that hand a
-    * locally-checkpointed frame to callers must use this, or the blocks
-    * squat in the MemoryStore for the session's life (Bench's leakedRdds
-    * audit counts exactly these).
+    * `unpersist` on the handle can't reach it — released through
+    * [[graft.operators.Checkpoints.truncating]], which finds it as the
+    * plan's LogicalRDD leaf. Operators that hand a locally-checkpointed
+    * frame to callers must use this, or the blocks squat in the
+    * MemoryStore for the session's life (Bench's leakedRdds audit counts
+    * exactly these).
     */
   private[graft] def localCheckpointTracked(df: DataFrame): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val out = df.localCheckpoint()
-    val ids = sc.getPersistentRDDs.keySet.toSet -- before
-    trackRelease(() =>
-      ids.foreach(i => sc.getPersistentRDDs.get(i).foreach(_.unpersist(false))))
+    val (out, release) = graft.operators.Checkpoints.truncating(reliable = false)(df)
+    out.queryExecution.toRdd.count()
+    trackRelease(release)
     out
   }
 

@@ -22,25 +22,17 @@ object Cluster {
     * (Kiveris et al., "Connected Components in MapReduce"), which this
     * API could swap in without changing callers.
     *
-    * Checkpointing: each round's labels are checkpointed to truncate the
-    * logical plan (which otherwise grows by a join+union+agg per round and
-    * blows up analysis/codegen after ~10 rounds — THE classic
-    * iterative-DataFrame failure), lazily, so materialization lands under
-    * the SAME action as the convergence aggregate — one Spark job per
-    * round. With `checkpointDir` unset the checkpoints are
-    * `localCheckpoint` blocks (fast, but they die with an executor — a
-    * lost block fails the job); a restartable production run passes
-    * `checkpointDir` pointing at durable storage and gets reliable
-    * `checkpoint()` instead (the round is persisted before checkpointing
-    * so the checkpoint write reads the cache, not a lineage recompute).
-    *
-    * Block hygiene: the blocks behind a superseded round are released as
+    * The rounds run on [[graft.operators.Checkpoints.fixpoint]]: each
+    * round's labels are checkpointed to truncate the logical plan (THE
+    * classic iterative-DataFrame failure is analysis/codegen blowing up
+    * after ~10 rounds of join+union+agg), the convergence aggregate is the
+    * round's one action, and a superseded round's blocks are released as
     * soon as the next round materializes — without this, up to `maxIter`
-    * full label snapshots squat in the MemoryStore for the life of the
-    * session (measured in round 4 as 8-15× slowdowns of *unrelated*
-    * queries sharing the JVM). The final round's blocks back the returned
-    * DataFrame, so they are handed to [[graft.Caches]] and freed by the
-    * session's next `Caches.clear`.
+    * full label snapshots squat in the MemoryStore for the session's life
+    * (measured in round 4 as 8-15× slowdowns of *unrelated* queries
+    * sharing the JVM). A restartable production run passes
+    * `checkpointDir` pointing at durable storage and gets reliable
+    * checkpoints instead of executor-local blocks.
     *
     * Returns one row per node appearing in `edges`: (id, component) with
     * component = min node id of the connected component. Early-exits when
@@ -48,26 +40,11 @@ object Cluster {
     */
   def connectedComponents(edges: DataFrame, src: String, dst: String,
       maxIter: Int = 20, checkpointDir: Option[String] = None): DataFrame = {
-    val spark = edges.sparkSession
-    val sc = spark.sparkContext
-    checkpointDir.foreach(sc.setCheckpointDir)
-    val reliable = checkpointDir.isDefined
-
-    // Lazy plan-truncating checkpoint + a releaser for its cached blocks.
-    // local mode: the checkpointed RDD lives inside the returned Dataset's
-    // plan where df.unpersist can't reach it; its blocks are identified by
-    // diffing the persistent-RDD registry around the call (registration
-    // happens at persist time, before materialization, so the diff is
-    // exact; the driver loop is single-threaded). reliable mode: persist
-    // first so the checkpoint job reads the cache instead of recomputing
-    // the round's lineage, then the releaser drops the cache — the
-    // checkpoint files (caller's durable dir) take over.
-    val cp = graft.operators.Checkpoints.truncating(reliable) _
-
-    // materialize the (possibly expensive) edge pipeline ONCE before the
+    // cache the (possibly expensive) edge pipeline ONCE before the
     // symmetrizing union — unionAll(edges, edges.swapped) would otherwise
     // run the upstream plan twice in the same job
-    val (e0, e0Release) = cp(edges.select(col(src).as("a"), col(dst).as("b")))
+    val e0 = edges.select(col(src).as("a"), col(dst).as("b"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val und = e0.unionAll(e0.select(col("b").as("a"), col("a").as("b")))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -76,20 +53,11 @@ object Cluster {
     // count rides along in the same aggregate (empty input == converged),
     // so no separate isEmpty job. decimal(38) sum: node ids may be 64-bit
     // hash fingerprints, whose long sum overflows (ANSI error/silent wrap).
-    def measure(df: DataFrame): (java.math.BigDecimal, Long) = {
-      val r = df.agg(
-        coalesce(sum(col("comp").cast("decimal(38,0)")), lit(0).cast("decimal(38,0)")),
-        count(lit(1))).head
-      (r.getDecimal(0), r.getLong(1))
-    }
-    var (labels, labelsRelease) = cp(
-      und.groupBy(col("a")).agg(min(col("b")).as("m"))
-        .select(col("a").as("id"), least(col("a"), col("m")).as("comp")))
-    val t0 = System.nanoTime()
-    var (pot, n) = measure(labels)
-    var iter = 0
-    var converged = n == 0L
-    while (iter < maxIter && !converged) {
+    var pot: java.math.BigDecimal = null
+    val (labels, converged) = graft.operators.Checkpoints.fixpoint(checkpointDir,
+        und.groupBy(col("a")).agg(min(col("b")).as("m"))
+          .select(col("a").as("id"), least(col("a"), col("m")).as("comp")),
+        maxIter) { (labels, round) =>
       val msgs = und.join(labels, und("a") === labels("id"))
         .select(und("b").as("id"), col("comp"))
       val propagated = labels.unionAll(msgs)
@@ -100,40 +68,31 @@ object Cluster {
       // 1-2 plain rounds, so the jump's extra self-join only switches on
       // once convergence drags — deep chains stay inside maxIter, shallow
       // graphs don't pay for them.
-      val (jumped, jumpRelease) =
-        if (iter < 2) (propagated, () => ())
-        else {
-          // lazy checkpoint consumed by BOTH self-join sides in the round's
-          // single job: whichever stage touches a partition first computes
-          // and caches it, the other reads the block (block-lock
-          // coordination) — no separate materialization job
-          val (p, pRel) = cp(propagated)
-          (p.join(p.select(col("id").as("_cid"), col("comp").as("_ccomp")),
-              col("comp") === col("_cid"))
-            .select(col("id"), least(col("comp"), col("_ccomp")).as("comp")), pRel)
-        }
-      val (next, nextRelease) = cp(jumped)
-      val (nextPot, _) = measure(next)
-      // next is materialized: everything upstream of it is now dead weight
-      labelsRelease(); jumpRelease()
-      converged = nextPot.compareTo(pot) == 0
-      pot = nextPot
-      labels = next
-      labelsRelease = nextRelease
-      iter += 1
+      if (round.n <= 2) propagated
+      else {
+        // lazy checkpoint consumed by BOTH self-join sides in the round's
+        // single job: whichever stage touches a partition first computes
+        // and caches it, the other reads the block (block-lock
+        // coordination) — no separate materialization job
+        val p = round.checkpoint(propagated)
+        p.join(p.select(col("id").as("_cid"), col("comp").as("_ccomp")),
+            col("comp") === col("_cid"))
+          .select(col("id"), least(col("comp"), col("_ccomp")).as("comp"))
+      }
+    } { labels =>
+      val r = labels.agg(
+        coalesce(sum(col("comp").cast("decimal(38,0)")), lit(0).cast("decimal(38,0)")),
+        count(lit(1))).head
+      val stop = r.getLong(1) == 0L || pot != null && r.getDecimal(0).compareTo(pot) == 0
+      pot = r.getDecimal(0)
+      stop
     }
     und.unpersist()
-    e0Release()
-    org.slf4j.LoggerFactory.getLogger(getClass).info(
-      s"connectedComponents: $iter rounds, $n labeled nodes, " +
-        f"${(System.nanoTime() - t0) / 1e9}%.2f s after edge materialization")
+    e0.unpersist()
     // partial labels are silently-wrong fragments — refuse to return them
     if (!converged) throw new IllegalStateException(
       s"connectedComponents did not converge in $maxIter rounds " +
         "(component diameter exceeds maxIter); raise maxIter")
-    // the survivor round's blocks back the returned frame — freed by the
-    // caller's next Caches.clear, not leaked for the session's life
-    graft.Caches.trackRelease(labelsRelease)
     labels
   }
 }

@@ -31,13 +31,7 @@ object Graphs {
     // canonical undirected edge set — cached: degrees, orientation and
     // the edge count each read it, and the caller's edge source may be
     // expensive (e.g. a similarity join)
-    val e = graft.Caches.track(
-      edges.select(least(col(src), col(dst)).as("u"),
-          greatest(col(src), col(dst)).as("v"))
-        .filter(col("u") =!= col("v"))
-        .filter(col("u").isNotNull && col("v").isNotNull)
-        .distinct()
-        .persist())
+    val e = canonical(edges, src, dst)
     // cached: both join branches of the orientation read it, and the node
     // count aggregate below reads it a third time
     val deg = graft.Caches.track(
@@ -104,94 +98,17 @@ object Graphs {
     * to outdeg−1 ppm per node per hop) is the price of exactness and is
     * identical in every engine.
     *
-    * Scale shape: the persisted state is one edge frame (u, v, outdeg(u))
-    * — degrees are folded in at build time so no per-round degree join is
-    * ever paid; an iteration is one join (ranks ⋈ edges on u) plus one
-    * shuffle keyed by the edge destination carrying (node, long) pairs,
-    * partial-aggregated map-side. No adjacency lists, no driver-side
-    * state. `edges` is symmetrized (undirected input), so every node
-    * holds in-edges and the rank vector never loses membership.
+    * `edges` is symmetrized (undirected input), so every node holds
+    * in-edges and the rank vector never loses membership. The rounds run
+    * in [[rankKernel]] with unit weights and a uniform restart.
     */
   def pageRank(edges: DataFrame, src: String, dst: String, iterations: Int,
       scale: Long = 1000000L, damp: Long = 850000L,
-      checkpointDir: Option[String] = None): DataFrame = {
-    require(iterations >= 1, "pageRank: iterations must be >= 1")
-    require(scale > damp && damp > 0, "pageRank: need scale > damp > 0")
-    checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
-    // canonicalize BEFORE distinct — a reversed duplicate (a,b)/(b,a)
-    // must collapse to one undirected edge, or its contributions double.
-    // Persisted: the symmetrizing union references it twice and the
-    // degree fold below references the union again — without this cache
-    // leaf the (possibly expensive) edge SOURCE is cloned into every
-    // branch (measured: the dist-1 fuzzy-join source executed 4× inside
-    // one materialization, tripling the query).
-    val undir = graft.Caches.track(
-      edges.select(least(col(src), col(dst)).as("u"),
-          greatest(col(src), col(dst)).as("v"))
-        .filter(col("u") =!= col("v"))
-        .filter(col("u").isNotNull && col("v").isNotNull)
-        .distinct()
-        .persist())
-    // fill BEFORE deriving: the degree fold references this cache three
-    // times in ONE job (union ×2 + the aggregate side); scans of an
-    // unfilled cache each race to compute the source concurrently
-    undir.count()
-    val sym = undir.union(undir.select(col("v").as("u"), col("u").as("v")))
-    // The degree rides ON the persisted edge frame: contributions divide
-    // rank(u) by outdeg(u) every round, so joining degrees per round
-    // would re-pay a join × iterations. One degree aggregate + one join
-    // at build time, then every iteration is a single join (ranks ⋈
-    // edges) + one partial-aggregated shuffle — the minimum an edge-
-    // partitioned PageRank round can do. Cached + filled eagerly: read
-    // every iteration, and a lazy leaf would re-derive the possibly-
-    // expensive edge source under the first round.
-    val deg = sym.groupBy(col("u")).agg(count(lit(1)).as("_deg"))
-    // the persisted edge frame is HASH-PARTITIONED ON u at build time:
-    // every iteration joins (ranks ⋈ e) on u, and a cache that already
-    // satisfies the join's clustering means the EDGE side — the largest
-    // frame in the loop, |E|×iterations rows moved otherwise — never
-    // re-shuffles; only the (|V|-sized) rank vector does. One build-time
-    // exchange buys `iterations` edge exchanges; the same trade a
-    // 1000-executor run wants, since e dwarfs ranks at any scale.
-    val e = graft.Caches.track(
-      sym.join(deg, "u")
-        .repartition(edges.sparkSession.sessionState.conf.numShufflePartitions,
-          col("u"))
-        .persist())
-    e.count()
-    var ranks = e.select(col("u").as("_n")).distinct()
-      .select(col("_n"), lit(scale).as("rank_fp"))
-    // per-round plan-TRUNCATING checkpoint (the CC rounds pattern,
-    // Cluster.connectedComponents): a persist alone leaves the logical
-    // plan nesting every previous round, so analysis + codegen re-walk a
-    // growing tree each iteration (measured: round time tripling by
-    // round 5 at sf0.1). Each round releases its predecessor's blocks,
-    // and the LAST round's blocks are handed to Caches so the
-    // session-level clear frees them after the caller consumes the
-    // result. With `checkpointDir` set the rounds are RELIABLE
-    // checkpoints in durable storage (executor loss mid-loop is
-    // recoverable); unset, fast executor-local localCheckpoint blocks.
-    val lcp = Checkpoints.truncating(checkpointDir.isDefined) _
-    var release: () => Unit = () => ()
-    for (_ <- 1 to iterations) {
-      val contrib = e
-        .join(ranks.withColumnRenamed("_n", "u"), "u")
-        .select(col("v"), expr("rank_fp DIV _deg").as("_c"))
-        .groupBy(col("v")).agg(sum(col("_c")).as("_contrib"))
-      val stepped = contrib.select(col("v").as("_n"),
-        (lit(scale - damp) +
-          expr(s"_contrib DIV ${scale}L") * lit(damp) +
-          expr(s"((_contrib % ${scale}L) * ${damp}L) DIV ${scale}L"))
-          .as("rank_fp"))
-      val (next, nextRelease) = lcp(stepped)
-      next.count()
-      release()
-      ranks = next
-      release = nextRelease
+      checkpointDir: Option[String] = None): DataFrame =
+    rankKernel("pageRank", iterations, scale, damp, checkpointDir) {
+      symmetric(edges, src, dst)
+        .select(col("u"), col("v"), lit(1L).as("w"), col("_W"), lit(1L).as("_r"))
     }
-    graft.Caches.trackRelease(release)
-    ranks.select(col("_n").as("node"), col("rank_fp"))
-  }
 
   /** WEIGHTED PageRank over a DIRECTED edge list — the form similarity
     * and interaction graphs actually need (an edge's strength is a
@@ -214,55 +131,19 @@ object Graphs {
   def pageRankWeighted(edges: DataFrame, src: String, dst: String,
       weight: String, iterations: Int,
       scale: Long = 1000000L, damp: Long = 850000L,
-      checkpointDir: Option[String] = None): DataFrame = {
-    require(iterations >= 1, "pageRankWeighted: iterations must be >= 1")
-    require(scale > damp && damp > 0, "pageRankWeighted: need scale > damp > 0")
-    checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
-    val dir0 = edges.select(col(src).as("u"), col(dst).as("v"),
-        col(weight).cast("long").as("w"))
-      .filter(col("u").isNotNull && col("v").isNotNull &&
-        col("w").isNotNull && col("w") > 0)
-      .groupBy(col("u"), col("v")).agg(sum(col("w")).as("w"))
-    val wsum = dir0.groupBy(col("u")).agg(sum(col("w")).as("_wsum"))
-    // weighted out-degree rides the persisted edge frame (the pageRank
-    // discipline: no per-round degree join); hash-partitioned on the
-    // per-round join key at build so the edge side never re-shuffles
-    // inside the loop (see pageRank)
-    val parts = edges.sparkSession.sessionState.conf.numShufflePartitions
-    val e = graft.Caches.track(
-      dir0.join(wsum, "u").repartition(parts, col("u")).persist())
-    e.count()
-    // same for the node frame: it is the BIG side of every round's
-    // restart-mass left join on _n
-    val nodes = graft.Caches.track(
-      e.select(col("u").as("_n")).union(e.select(col("v").as("_n")))
-        .distinct().repartition(parts, col("_n")).persist())
-    nodes.count()
-    val lcp = Checkpoints.truncating(checkpointDir.isDefined) _
-    var ranks = nodes.select(col("_n"), lit(scale).as("rank_fp"))
-    var release: () => Unit = () => ()
-    for (_ <- 1 to iterations) {
-      val contrib = e
-        .join(ranks.withColumnRenamed("_n", "u"), "u")
-        .select(col("v"),
-          expr("cast(rank_fp as decimal(38,0)) * w div _wsum").as("_c"))
-        .groupBy(col("v")).agg(sum(col("_c")).as("_contrib"))
-      val stepped =
-        nodes.join(contrib.withColumnRenamed("v", "_n"), Seq("_n"), "left")
-          .select(col("_n"),
-            (lit(scale - damp) + coalesce(
-              expr(s"_contrib DIV ${scale}L") * lit(damp) +
-                expr(s"((_contrib % ${scale}L) * ${damp}L) DIV ${scale}L"),
-              lit(0L))).as("rank_fp"))
-      val (next, nextRelease) = lcp(stepped)
-      next.count()
-      release()
-      ranks = next
-      release = nextRelease
+      checkpointDir: Option[String] = None): DataFrame =
+    rankKernel("pageRankWeighted", iterations, scale, damp, checkpointDir,
+        directed = true) {
+      val folded = edges.select(col(src).as("u"), col(dst).as("v"),
+          col(weight).cast("long").as("w"))
+        .filter(col("u").isNotNull && col("v").isNotNull &&
+          col("w").isNotNull && col("w") > 0)
+        .groupBy(col("u"), col("v")).agg(sum(col("w")).as("w"))
+      // a DECIMAL w makes the kernel's rank·w product decimal
+      folded.join(folded.groupBy(col("u")).agg(sum(col("w")).as("_W")), "u")
+        .select(col("u"), col("v"), col("w").cast("decimal(38,0)").as("w"),
+          col("_W"), lit(1L).as("_r"))
     }
-    graft.Caches.trackRelease(release)
-    ranks.select(col("_n").as("node"), col("rank_fp"))
-  }
 
   /** Personalized PageRank (Jeh & Widom 2003 "Scaling Personalized Web
     * Search" semantics, the [[pageRank]] fixed-point integer algebra):
@@ -286,58 +167,104 @@ object Graphs {
   def personalizedPageRank(edges: DataFrame, src: String, dst: String,
       sources: DataFrame, sourceCol: String, iterations: Int,
       scale: Long = 1000000L, damp: Long = 850000L,
-      checkpointDir: Option[String] = None): DataFrame = {
-    require(iterations >= 1, "personalizedPageRank: iterations must be >= 1")
-    require(scale > damp && damp > 0, "personalizedPageRank: need scale > damp > 0")
-    checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
-    val undir = graft.Caches.track(
+      checkpointDir: Option[String] = None): DataFrame =
+    rankKernel("personalizedPageRank", iterations, scale, damp, checkpointDir) {
+      val seeds = sources.select(col(sourceCol).cast("long").as("v"))
+        .filter(col("v").isNotNull).distinct()
+        .withColumn("_seed", lit(1L))
+      symmetric(edges, src, dst).join(seeds, Seq("v"), "left")
+        .select(col("u"), col("v"), lit(1L).as("w"), col("_W"),
+          coalesce(col("_seed"), lit(0L)).as("_r"))
+    }
+
+  /** The canonical undirected edge set (u < v; self-loops and null
+    * endpoints dropped), persisted. Canonicalized BEFORE distinct — a
+    * reversed duplicate (a,b)/(b,a) must collapse to one undirected edge,
+    * or its contributions double.
+    */
+  private def canonical(edges: DataFrame, src: String, dst: String): DataFrame =
+    graft.Caches.track(
       edges.select(least(col(src), col(dst)).as("u"),
           greatest(col(src), col(dst)).as("v"))
         .filter(col("u") =!= col("v"))
         .filter(col("u").isNotNull && col("v").isNotNull)
         .distinct()
         .persist())
+
+  /** [[canonical]] in both directions with the source's degree:
+    * (u, v, _W = outdeg(u)). The canonical set is persisted because the
+    * symmetrizing union references it twice and the degree fold
+    * references the union again — without the cache leaf the (possibly
+    * expensive) edge SOURCE is cloned into every branch (measured: the
+    * dist-1 fuzzy-join source executed 4× inside one materialization).
+    */
+  private def symmetric(edges: DataFrame, src: String, dst: String): DataFrame = {
+    val undir = canonical(edges, src, dst)
+    // fill BEFORE deriving: the degree fold references this cache three
+    // times in ONE job; scans of an unfilled cache each race to compute
+    // the source concurrently
     undir.count()
-    val seeds = sources.select(col(sourceCol).cast("long").as("v"))
-      .filter(col("v").isNotNull).distinct()
-      .withColumn("_vseed", lit(1L))
     val sym = undir.union(undir.select(col("v").as("u"), col("u").as("v")))
-    val deg = sym.groupBy(col("u")).agg(count(lit(1)).as("_deg"))
-    // (u, v, outdeg(u), seed(v)): the restart indicator joins ONCE at
-    // build time and thereafter rides the aggregate — no per-round join;
-    // hash-partitioned on the per-round join key (see pageRank)
-    val e = graft.Caches.track(
-      sym.join(deg, "u").join(seeds, Seq("v"), "left")
-        .select(col("u"), col("v"), col("_deg"),
-          coalesce(col("_vseed"), lit(0L)).as("_vseed"))
-        .repartition(edges.sparkSession.sessionState.conf.numShufflePartitions,
-          col("u"))
-        .persist())
+    sym.join(sym.groupBy(col("u")).agg(count(lit(1)).as("_W")), "u")
+  }
+
+  /** The one PageRank kernel. `edges` is (u, v, w, _W, _r): the edge u→v
+    * carries ⌊rank(u)·w / W(u)⌋ of u's rank, and `_r` ∈ {0, 1} is v's
+    * restart indicator. From rank₀(v) = r(v)·scale, one round is
+    *
+    *   rank'(v) = r(v)·(scale − damp) + ⌊damp · Σ_{u→v} ⌊rank(u)·w / W(u)⌋ / scale⌋
+    *
+    * with the damping product decomposed as in [[pageRank]]. Unit weights
+    * (w = 1, W = outdeg, 64-bit products) and a uniform restart (r ≡ 1)
+    * are the special cases. `directed`: a node can lack in-edges, so each
+    * round left-joins the node frame to keep its (uniform) restart mass.
+    *
+    * Scale shape: the persisted state is the edge frame, HASH-PARTITIONED
+    * ON u at build time — every round joins (ranks ⋈ e) on u, so the edge
+    * side (|E| rows × iterations otherwise) never re-shuffles and only the
+    * |V|-sized rank vector does; W(u) rides the frame, so no round pays a
+    * degree join. A round is that one join plus one shuffle keyed by the
+    * destination carrying (node, contribution, restart) rows,
+    * partial-aggregated map-side.
+    * The rounds run on [[Checkpoints.fixpoint]] with its per-round
+    * plan-truncating checkpoint — a persist alone leaves the logical plan
+    * nesting every previous round (measured: round time tripling by round
+    * 5 at sf0.1).
+    */
+  private def rankKernel(name: String, iterations: Int, scale: Long, damp: Long,
+      checkpointDir: Option[String], directed: Boolean = false)(
+      edges: => DataFrame): DataFrame = {
+    require(iterations >= 1, s"$name: iterations must be >= 1")
+    require(scale > damp && damp > 0, s"$name: need scale > damp > 0")
+    val built = edges
+    val parts = built.sparkSession.sessionState.conf.numShufflePartitions
+    // cached + filled eagerly: read every round, and a lazy leaf would
+    // re-derive the possibly-expensive edge source under the first round
+    val e = graft.Caches.track(built.repartition(parts, col("u")).persist())
     e.count()
-    val lcp = Checkpoints.truncating(checkpointDir.isDefined) _
-    var ranks = e.select(col("u").as("_n")).distinct()
-      .join(seeds.select(col("v").as("_n"), col("_vseed")), Seq("_n"), "left")
-      .select(col("_n"),
-        (coalesce(col("_vseed"), lit(0L)) * scale).as("rank_fp"))
-    var release: () => Unit = () => ()
-    for (_ <- 1 to iterations) {
-      val contrib = e
-        .join(ranks.withColumnRenamed("_n", "u"), "u")
-        .select(col("v"), col("_vseed"), expr("rank_fp DIV _deg").as("_c"))
-        .groupBy(col("v"))
-        .agg(sum(col("_c")).as("_contrib"), max(col("_vseed")).as("_s"))
-      val stepped = contrib.select(col("v").as("_n"),
-        (col("_s") * (scale - damp) +
-          expr(s"_contrib DIV ${scale}L") * lit(damp) +
-          expr(s"((_contrib % ${scale}L) * ${damp}L) DIV ${scale}L"))
-          .as("rank_fp"))
-      val (next, nextRelease) = lcp(stepped)
-      next.count()
-      release()
-      ranks = next
-      release = nextRelease
+    val restart =
+      if (!directed) e.groupBy(col("v").as("_n")).agg(max(col("_r")).as("_r"))
+      else {
+        // partitioned too: it is the BIG side of every round's left join
+        val nodes = graft.Caches.track(
+          e.select(col("u").as("_n")).union(e.select(col("v").as("_n")))
+            .distinct().repartition(parts, col("_n")).persist())
+        nodes.count()
+        nodes.withColumn("_r", lit(1L))
+      }
+    def round(ranks: DataFrame): DataFrame = {
+      val contrib = e.join(ranks.withColumnRenamed("_n", "u"), "u")
+        .groupBy(col("v").as("_n"))
+        .agg(sum(expr("rank_fp * w DIV _W")).as("_c"), max(col("_r")).as("_r"))
+      (if (directed) restart.join(contrib.drop("_r"), Seq("_n"), "left") else contrib)
+        .select(col("_n"), (col("_r") * (scale - damp) + coalesce(
+          expr(s"_c DIV ${scale}L") * lit(damp) +
+            expr(s"((_c % ${scale}L) * ${damp}L) DIV ${scale}L"),
+          lit(0L))).as("rank_fp"))
     }
-    graft.Caches.trackRelease(release)
+    val (ranks, _) = Checkpoints.fixpoint(checkpointDir,
+        round(restart.select(col("_n"), (col("_r") * scale).as("rank_fp"))),
+        iterations - 1)((ranks, _) => round(ranks)) { r => r.count(); false }
     ranks.select(col("_n").as("node"), col("rank_fp"))
   }
 
@@ -348,25 +275,22 @@ object Graphs {
     * frontier to the edge list, dedups, and anti-joins the visited set,
     * so a node is labeled exactly once, at its first (= minimal) hop.
     *
-    * Scale shape: the persisted state is the symmetrized edge list plus
-    * two node-sized frames (frontier, visited) per round, both
-    * plan-truncated via localCheckpoint with predecessor blocks released
-    * (the pageRank rounds discipline). A hop is one shuffle join
+    * Scale shape: the round state is the visited frame (node, dist); the
+    * frontier is its rows at the last hop. A hop is one shuffle join
     * (frontier ⋈ edges) + a distinct + an anti-join — all on 8-byte node
-    * keys; edge/source payloads never travel. Early-exits when the
-    * frontier empties, so maxHops is a bound, not a cost.
+    * keys; edge/source payloads never travel — and one checkpoint + count
+    * on [[Checkpoints.fixpoint]]. Stops when a hop adds no node, so
+    * maxHops is a bound, not a cost.
     */
   def bfsDistances(edges: DataFrame, src: String, dst: String,
       sources: DataFrame, sourceCol: String, maxHops: Int,
       checkpointDir: Option[String] = None): DataFrame = {
     require(maxHops >= 0, "bfsDistances: maxHops must be >= 0")
-    checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
     val undir = edges.select(col(src).as("u"), col(dst).as("v"))
       .filter(col("u") =!= col("v"))
       .filter(col("u").isNotNull && col("v").isNotNull)
-    // hash-partitioned on the per-hop join key (the pageRank discipline):
-    // every hop joins frontier ⋈ e on u, so the edge side — |E| rows ×
-    // maxHops otherwise — never re-shuffles inside the loop
+    // hash-partitioned on the per-hop join key (see rankKernel): the edge
+    // side never re-shuffles inside the loop
     val e = graft.Caches.track(
       undir.union(undir.select(col("v").as("u"), col("u").as("v")))
         .distinct()
@@ -374,46 +298,23 @@ object Graphs {
           col("u"))
         .persist())
     e.count()
-    val lcp = Checkpoints.truncating(checkpointDir.isDefined) _
-    val (seed, seedRelease) = lcp(
-      sources.select(col(sourceCol).cast("long").as("node"))
-        .filter(col("node").isNotNull).distinct()
-        .select(col("node"), lit(0L).as("dist")))
-    seed.count()
-    var visited = seed
-    var frontier = seed.select("node")
-    // sliding-window block release (the pageRank rounds discipline,
-    // shifted by one): round N still READS round N−1's visited (the
-    // anti-join) and frontier, so those blocks are released only after
-    // round N's frames materialize — at any moment at most two rounds of
-    // node-sized frames are live, not the whole BFS history. The FINAL
-    // visited/frontier pair outlives the loop (the caller consumes it),
-    // so its releases hand off to Caches.
-    var prevVisRelease: () => Unit = seedRelease
-    var prevNextRelease: () => Unit = () => ()
-    var hop = 1
-    var frontierSize = 1L
-    while (hop <= maxHops && frontierSize > 0) {
-      val (next, r1) = lcp(
-        frontier.join(e, frontier("node") === e("u"))
-          .select(e("v").as("node")).distinct()
-          .join(visited, Seq("node"), "left_anti")
-          .select(col("node"), lit(hop.toLong).as("dist")))
-      frontierSize = next.count()
-      if (frontierSize > 0) {
-        val (vis, r2) = lcp(visited.union(next))
-        vis.count()
-        // both of round N's frames are materialized — round N−1's can go
-        prevVisRelease(); prevNextRelease()
-        prevVisRelease = r2
-        prevNextRelease = r1
-        visited = vis
-        frontier = next.select("node")
-      } else r1()
-      hop += 1
-    }
-    graft.Caches.trackRelease(prevVisRelease)
-    graft.Caches.trackRelease(prevNextRelease)
-    visited
+    val seed = sources.select(col(sourceCol).cast("long").as("node"))
+      .filter(col("node").isNotNull).distinct()
+      .select(col("node"), lit(0L).as("dist"))
+    var size = -1L
+    Checkpoints.fixpoint(checkpointDir, seed, maxHops) { (visited, hop) =>
+      val next = visited.filter(col("dist") === hop.n - 1)
+        .join(e, col("node") === e("u"))
+        .select(e("v").as("node")).distinct()
+        .join(visited, Seq("node"), "left_anti")
+        .select(col("node"), lit(hop.n.toLong).as("dist"))
+      visited.union(next)
+    } { visited =>
+      // an empty frontier adds no node
+      val grown = visited.count()
+      val stop = grown == size
+      size = grown
+      stop
+    }._1
   }
 }

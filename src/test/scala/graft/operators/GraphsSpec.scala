@@ -219,12 +219,60 @@ class GraphsSpec extends SparkSpec {
           seeds, "n", 3, checkpointDir = Some(dir.getAbsolutePath))
         .as[(Long, Long)].collect().toMap
       assert(pprRel === pprPlain)
+      val wEdges = Seq((1L, 2L, 3L), (2L, 3L, 1L), (3L, 1L, 2L), (4L, 1L, 5L))
+        .toDF("s", "d", "w")
+      val wPlain = Graphs.pageRankWeighted(wEdges, "s", "d", "w", 3)
+        .as[(Long, Long)].collect().toMap
+      val beforeW = rddDirs()
+      val wRel = Graphs.pageRankWeighted(wEdges, "s", "d", "w", 3,
+          checkpointDir = Some(dir.getAbsolutePath))
+        .as[(Long, Long)].collect().toMap
+      assert(wRel === wPlain)
+      assert(rddDirs() >= beforeW + 3,
+        "each pageRankWeighted round should write a reliable checkpoint")
     } finally {
       graft.Caches.clear(spark, blocking = true)
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(); ()
       }
       rm(dir)
+    }
+  }
+
+  test("pageRankWeighted with unit weights on a symmetric graph equals pageRank") {
+    val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 1L))
+    val sym = (edges ++ edges.map(e => (e._2, e._1))).map { case (a, b) => (a, b, 1L) }
+    for (iters <- Seq(1, 4)) {
+      val weighted = Graphs.pageRankWeighted(sym.toDF("s", "d", "w"), "s", "d", "w", iters)
+        .as[(Long, Long)].collect().toMap
+      assert(weighted === pr(iters, edges: _*), s"iters=$iters")
+    }
+  }
+
+  test("personalizedPageRank with every node as a seed equals pageRank") {
+    val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L))
+    for (iters <- Seq(1, 4))
+      assert(ppr((1L to 6L), iters, edges: _*) === pr(iters, edges: _*), s"iters=$iters")
+  }
+
+  test("the PageRank and BFS loops leave no persisted blocks behind after Caches.clear") {
+    // the CC leak test (ClusterSpec) for the Graphs loops: superseded
+    // rounds are released immediately, the survivor via Caches.clear
+    val chain = (0L until 12L).map(i => (i, i + 1))
+    val runs = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "pageRank" -> (() => Graphs.pageRank(g(chain: _*), "s", "d", 4)),
+      "pageRankWeighted" -> (() => Graphs.pageRankWeighted(
+        chain.map { case (a, b) => (a, b, 2L) }.toDF("s", "d", "w"), "s", "d", "w", 4)),
+      "personalizedPageRank" -> (() => Graphs.personalizedPageRank(
+        g(chain: _*), "s", "d", Seq(0L).toDF("n"), "n", 4)),
+      "bfsDistances" -> (() => Graphs.bfsDistances(
+        g(chain: _*), "s", "d", Seq(0L).toDF("n"), "n", 20)))
+    for ((name, run) <- runs) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      assert(run().count() === 13L, name)
+      graft.Caches.clear(spark, blocking = true)
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(leaked.isEmpty, s"$name leaked persistent RDDs: $leaked")
     }
   }
 
