@@ -138,48 +138,8 @@ object Bench {
       if (shm.isDirectory && shm.canWrite) "/dev/shm/graft_local"
       else sys.props("java.io.tmpdir")
     })
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .config("spark.local.dir", localScratch)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // SPARK_GRAFT_AQE=false: experiment knob — AQE's nondeterministic
-      // stage numbering recompiles codegen units across reruns of multi-
-      // stage plans (measured as compile-churn on the incremental dedups)
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // the local SFs are MBs, not TBs: AQE's default 64 MB advisory size
-      // would coalesce every exchange to ~1 partition and serialize the
-      // CPU-heavy stages; target small partitions so all cores stay busy
-      // (at production scale the 64 MB default is correct)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "256k")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      // static conf, default 100: one pass over the full query set generates
-      // several hundred distinct codegen units, so at 100 the LRU cycles and
-      // EVERY rerun of EVERY query pays full janino recompilation — measured
-      // as multi-second medians on the largest fused plans (flagship_volume,
-      // salted_join) despite optimal physical plans. A long-lived production
-      // driver serving a query mix wants the same headroom.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
-      // the codegen stage ID in generated class names makes otherwise
-      // IDENTICAL code cache-miss whenever AQE renumbers stages — the
-      // multi-stage incremental dedups re-paid ~30 janino compiles per
-      // rerun. Without the ID the cache keys on the code itself.
-      .config("spark.sql.codegen.useIdInClassName",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_ID", "false"))
-      // session-clone classloader churn: every StreamingQuery start clones
-      // the session, and with artifact isolation on (Spark 4 default) the
-      // clone's fresh classloader misses the janino cache for every unit
-      // run on the stream thread — 13-30 recompiles (~0.5-1.2 s) per rerun
-      // on each stream_* query (see GraftSession.builder for the full
-      // story; graft.tools.CodegenCacheDiff is the instrument). This
-      // engine adds no session artifacts, so isolation is inert here and
-      // turning it off is semantics-identical.
-      .config("spark.sql.artifact.isolation.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_ARTIFACT_ISOLATION", "false"))
-      .config("spark.sql.warehouse.dir", sys.props("java.io.tmpdir") + "/graft_warehouse")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // SPARK_GRAFT_ONLY=q1,q2 restricts the set (local iteration); unset = all
@@ -239,37 +199,31 @@ object Bench {
     val acc = names.map { case (n, _) => n -> new Acc }.toMap
     def runOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit = {
       val a = acc(name)
-      // per-query conf pins (SparkEntry.confPinsFor — static pins plus
-      // the size-conditional iterative-graph pins): applied for the timed
-      // execution, previous values restored below so one query's pin can
-      // never leak into another's run
-      val pins = SparkEntry.confPinsFor(spark, name, sfDir)
-      val saved = pins.keys.map(k => k -> spark.conf.getOption(k)).toMap
-      pins.foreach { case (k, v) => spark.conf.set(k, v) }
       val (gc0, cc0, ct0) =
         (gcMillis(), CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
           CodegenMetrics.METRIC_SOURCE_CODE_SIZE.getCount)
       val (load0, jvms0) = loadMarker()
       a.loadRuns ::= load0
       a.jvmsRuns ::= jvms0
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).count(); true } catch {
-          case e: Throwable =>
-            // a swallowed failure would read as a (fast, green) result
-            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-            failed += name
-            false
-        }
-      // stop the clock BEFORE cleanup: unpersisting operator caches is
-      // bench bookkeeping, not query cost. Blocking, so the removal work
-      // cannot bleed into the next run's timed region.
-      val dt = (System.nanoTime() - t0) / 1e9
-      a.loadEndRuns ::= loadMarker()._1
-      saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
+      // per-query conf pins (SparkEntry.confPinsFor — static pins plus
+      // the size-conditional iterative-graph pins) hold for the timed
+      // execution only, so one query's pin can never leak into another's
+      val (ok, dt) = GraftSession.withConfs(spark, SparkEntry.confPinsFor(spark, name, sfDir)) {
+        val t0 = System.nanoTime()
+        val ok =
+          try { fn(spark, sfDir).count(); true } catch {
+            case e: Throwable =>
+              // a swallowed failure would read as a (fast, green) result
+              System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+              failed += name
+              false
+          }
+        // stop the clock BEFORE cleanup: unpersisting operator caches is
+        // bench bookkeeping, not query cost. Blocking, so the removal work
+        // cannot bleed into the next run's timed region.
+        (ok, (System.nanoTime() - t0) / 1e9)
       }
+      a.loadEndRuns ::= loadMarker()._1
       Caches.clear(spark, blocking = true)
       if (ok) a.times ::= dt
       // session-reset audit: after Caches.clear NOTHING graft created may

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -13,9 +13,10 @@ import graft.functions._
   * functions, so `spark.sql` users get the same surface as the Column
   * API, plus the graft optimizer rules.
   *
-  * Usage: `SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `--conf spark.sql.extensions=graft.GraftExtensions`; on an existing
-  * session, [[GraftExtensions.registerAll]].
+  * Usage: [[GraftSession.builder]] installs it on every graft session.
+  * A session built elsewhere gets it with
+  * `--conf spark.sql.extensions=graft.GraftExtensions`. It takes effect
+  * only when a session is created; there is no post-hoc registration.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -57,11 +58,8 @@ object GraftExtensions {
       : FunctionRegistry.FunctionBuilder =
     exprs => expression(f(column(exprs.head)))
 
-  /** One shared table: name → (usage doc, builder). Both the extension
-    * injection (new sessions) and [[registerAll]] (existing sessions)
-    * read it, so the two registration paths cannot drift.
-    */
-  val functions: Seq[(String, String, FunctionRegistry.FunctionBuilder)] = Seq(
+  /** The SQL function table: name → (usage doc, builder). */
+  private val functions: Seq[(String, String, FunctionRegistry.FunctionBuilder)] = Seq(
     // -- sketch expressions (custom codegen'd Catalyst expressions) -------
     ("minhash_signature", "minhash_signature(shingles[, k[, seed]]) - MinHash sketch",
       exprs => MinHashSignature(exprs.head,
@@ -133,22 +131,4 @@ object GraftExtensions {
         "group under (score DESC, id ASC); k-bounded buffer, no group sort",
       exprs => BoundedTopKPair(exprs(0), exprs(1),
         intArg(exprs, 2, "bounded_topk_pair", "k"))))
-
-  /** Register every graft SQL function on an already-built session (temp
-    * functions, session-scoped). For new sessions prefer
-    * `withExtensions(new GraftExtensions)`.
-    */
-  def registerAll(spark: SparkSession): Unit =
-    functions.foreach { case (name, _, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
-    }
-
-  /** Enable the graft optimizer rules on an already-built session. */
-  def enableOptimizations(spark: SparkSession): Unit = {
-    val rules = Seq(graft.plans.TopOneWindowToAggregate,
-      graft.plans.MaterializedViewRewrite)
-    val cur = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = cur ++ rules.filterNot(cur.contains)
-  }
 }

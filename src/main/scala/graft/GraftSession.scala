@@ -2,22 +2,73 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Session bootstrap for the graft engine.
+/** Session bootstrap for the graft engine: [[GraftSession.builder]] is
+  * its one session profile.
   *
   * The reference engine forces Kryo and broadcasts the Hadoop conf at
   * startup (reference: runtime/src/main/scala/com/asakusafw/spark/runtime/
   * SparkClient.scala:105-152); with Dataset/Tungsten encoders neither is
-  * needed. What we DO standardize: UTC session time zone (oracle parity),
-  * AQE on (runtime coalesce / skew-join replaces the reference's plan-time
-  * TINY/SMALL/LARGE/HUGE partition scaling, compiler/.../util/
-  * NumPartitions.scala:31-71), and a shuffle-partition count sized to the
-  * actual core count instead of Spark's default 200.
+  * needed.
   */
 object GraftSession {
 
-  /** Recommended builder for local execution. On a real cluster the same
-    * options apply except `master`; shuffle partitions should scale with
-    * executor cores × executors (AQE coalesces the excess at runtime).
+  /** The session profile. Every entry point builds its session here:
+    * Bench, Verify, the launcher, the probe mains, the benchmark harness
+    * and the test fixture. A caller adds only its master and shuffle
+    * partition count (the two parameters), `spark.local.dir`,
+    * `spark.ui.enabled`, an app name and the launcher's `graft.arg.*`
+    * batch arguments; `SessionProfileSpec` guards that. On a real cluster
+    * the same profile applies with the cluster's master.
+    *
+    *  - `spark.sql.shuffle.partitions`: the core count instead of Spark's
+    *    default 200. On a cluster, executor cores × executors; AQE
+    *    coalesces the excess at runtime.
+    *  - AQE with partition coalescing and skew-join splitting: runtime
+    *    sizing in place of the reference's plan-time TINY/SMALL/LARGE/HUGE
+    *    partition scaling (compiler/.../util/NumPartitions.scala:31-71).
+    *    The advisory partition size stays at Spark's default.
+    *  - `spark.sql.session.timeZone=UTC`: oracle parity; event-time casts
+    *    in [[normalizeTs]] rely on the pinned zone.
+    *  - `spark.sql.legacy.parquet.nanosAsLong`: fixture `events.parquet`
+    *    has been written as TIMESTAMP(NANOS), which Spark has no type for;
+    *    it is read as a long and converted in [[normalizeTs]].
+    *  - `spark.sql.codegen.cache.maxEntries=10000` (static conf, default
+    *    100): one pass over the query set generates several hundred
+    *    distinct codegen units, so at 100 the LRU cycles and every rerun
+    *    of every query pays full janino recompilation — measured as
+    *    multi-second medians on the largest fused plans (flagship_volume,
+    *    salted_join) despite optimal physical plans. A long-lived driver
+    *    serving a query mix needs the same headroom.
+    *  - `spark.sql.codegen.useIdInClassName=false`: identical generated
+    *    code must hit the codegen cache even when AQE renumbers stages
+    *    between plans and reruns. With the stage ID in the class name the
+    *    cache keys on the ID too, and multi-stage plans re-paid ~30 janino
+    *    compiles per execution (measured on the incremental dedups).
+    *  - `spark.sql.artifact.isolation.enabled=false` (static conf): Spark
+    *    4's per-session artifact isolation keys the janino compile cache
+    *    on the session's classloader identity (CodeGenerator.compile:
+    *    (HashableWeakReference(contextClassLoader), body)). Every
+    *    StreamingQuery start clones the session, so each stream (re)start
+    *    gets a fresh classloader and re-pays a full janino compile of
+    *    every codegen unit run on the stream thread, although the
+    *    generated bodies are byte-identical — measured as 13-30 compiles
+    *    (~0.5-1.2 s) per rerun on every stream_* query (stream_window
+    *    compilesRuns [23,13,13] → [23,0,0] with this off; the cache-key
+    *    diff tool graft.tools.CodegenCacheDiff showed the 13 recompiled
+    *    keys differing only in the classloader weak-ref). This engine
+    *    never calls addArtifact, so isolation is inert here and disabling
+    *    it is semantics-identical; a deployment that adds session JARs
+    *    should turn it back on and pay the restart recompiles.
+    *  - `spark.sql.warehouse.dir` under the temp dir, `spark.ui.enabled`
+    *    off: no stray `spark-warehouse/` in the working directory, no UI
+    *    server per run.
+    *  - [[GraftExtensions]], installed at build: the graft SQL functions
+    *    and optimizer rules are part of every session made from this
+    *    builder, including `newSession()` and the clones streaming queries
+    *    run on, so no query switches them on and a flow's plan does not
+    *    depend on which flows ran before it. One query can turn a rule
+    *    off with `spark.sql.optimizer.excludedRules` (e.g.
+    *    `graft.plans.TopOneWindowToAggregate`).
     */
   def builder(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession.Builder =
     SparkSession.builder()
@@ -28,34 +79,13 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
-      // fixture events.parquet stores TIMESTAMP(NANOS); Spark has no nanos
-      // type — read as long and convert in `table` below
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // identical generated code must HIT the codegen cache even when AQE
-      // renumbers stages between plans/reruns; the stage ID in the class
-      // name exists for stack-trace readability, and with it the cache
-      // keys on the ID too — multi-stage plans re-paid ~30 janino
-      // compiles per execution (measured on the incremental dedups)
+      .config("spark.sql.codegen.cache.maxEntries", "10000")
       .config("spark.sql.codegen.useIdInClassName", "false")
-      // Spark 4's per-session ARTIFACT isolation keys the janino compile
-      // cache on the session's classloader identity
-      // (CodeGenerator.compile: (HashableWeakReference(contextClassLoader),
-      // body)). Every StreamingQuery START clones the session, so each
-      // stream (re)start gets a fresh classloader and re-pays a full
-      // janino compile of every codegen unit executed on the stream
-      // thread even though the generated bodies are byte-identical —
-      // measured as 13-30 compiles (~0.5-1.2 s) per rerun on EVERY
-      // stream_* query (r16: stream_window compilesRuns [23,13,13] →
-      // [23,0,0] with this off; the cache-key diff tool
-      // graft.tools.CodegenCacheDiff showed the 13 recompiled keys
-      // differing ONLY in the classloader weak-ref). This engine never
-      // calls addArtifact, so per-session artifact isolation is inert
-      // here and disabling it is semantics-identical; a deployment that
-      // adds session JARs should flip it back on and eat the restart
-      // recompiles. Static conf — set at session creation only.
       .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.sql.warehouse.dir", sys.props("java.io.tmpdir") + "/graft_warehouse")
       .config("spark.ui.enabled", "false")
+      .withExtensions(new GraftExtensions)
 
   def local(): SparkSession = {
     val s = builder().getOrCreate()
@@ -129,7 +159,8 @@ object GraftSession {
   /** Run `body` with session confs pinned, restoring previous values
     * (or unsetting) afterwards — the shared form of the save/set/try/
     * finally-restore pattern the sinks and streaming drains need around
-    * plan-time settings.
+    * plan-time settings, and the one path the harnesses apply their
+    * per-query pins (`SparkEntry.confPinsFor`) through.
     */
   def withConfs[A](spark: SparkSession, pins: Map[String, String])(body: => A): A = {
     val saved = pins.keys.map(k => k -> spark.conf.getOption(k)).toMap

@@ -27,25 +27,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // small local SFs: stop AQE coalescing exchanges to ~1 partition
-      // (see Bench.scala; default 64m is right at production scale)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "256k")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      // identical generated code should hit the codegen cache across AQE
-      // stage renumbering (see GraftSession.builder)
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      // stream restarts re-pay janino per session-clone classloader with
-      // artifact isolation on; no artifacts here (see GraftSession.builder)
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.sql.warehouse.dir", sys.props("java.io.tmpdir") + "/graft_warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // fixture-drift tripwire: the driver regenerates the testdata between
@@ -74,20 +56,12 @@ object Verify {
     selected.foreach { case (name, fn) =>
       // same per-query conf pins as Bench (restored after the query)
       val pins = SparkEntry.confPinsFor(spark, name, sfDir)
-      val saved = pins.keys.map(k => k -> spark.conf.getOption(k)).toMap
-      pins.foreach { case (k, v) => spark.conf.set(k, v) }
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      try GraftSession.withConfs(spark, pins) {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      finally {
-        saved.foreach {
-          case (k, Some(v)) => spark.conf.set(k, v)
-          case (k, None) => spark.conf.unset(k)
-        }
-        if (leakCheck(spark, name)) leaks ::= name
-      }
+      finally if (leakCheck(spark, name)) leaks ::= name
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

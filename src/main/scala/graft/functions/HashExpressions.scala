@@ -347,12 +347,4 @@ object HashFunctions {
 
   def normalize_text(text: Column): Column =
     column(NormalizeText(expression(text)))
-
-  /** Register ALL graft SQL functions on a session (spark.sql usable) —
-    * delegates to the single shared table in [[graft.GraftExtensions]] so
-    * this path cannot drift from the extension injection. For new
-    * sessions prefer `withExtensions(new graft.GraftExtensions)`.
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    graft.GraftExtensions.registerAll(spark)
 }

@@ -25,8 +25,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * `1 = rn` / `rn <= 1`. Tie behavior: both forms return an arbitrary
   * minimal row when `s` is not a total order — same determinism contract.
   *
-  * Registered via [[graft.GraftExtensions]] or
-  * `spark.experimental.extraOptimizations`.
+  * Installed on every session by [[graft.GraftExtensions]]; turn it off
+  * for one query with `spark.sql.optimizer.excludedRules`.
   */
 object TopOneWindowToAggregate extends Rule[LogicalPlan] {
 

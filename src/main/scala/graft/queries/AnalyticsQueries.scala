@@ -351,7 +351,6 @@ object AnalyticsQueries {
       * match proves the rewrite is result-preserving.
       */
     "mv_rewrite" -> { (s, dir) =>
-      graft.GraftExtensions.enableOptimizations(s)
       def agg = table(s, dir, "orders")
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n"), min(col("o_orderkey")).as("min_key"),

@@ -571,12 +571,11 @@ object NorthStarQueries {
     },
 
     /** The whole text surface through `spark.sql` with the functions
-      * registered by [[graft.GraftExtensions]] — proves the SQL API is
+      * the session profile installs ([[graft.GraftExtensions]]) — proves the SQL API is
       * the same engine as the Column API (same one-pass expressions, same
       * results) through the external-oracle gate, not just a spec.
       */
     "sql_text_pipeline" -> { (s, dir) =>
-      graft.GraftExtensions.registerAll(s)
       tableSpread(s, dir, "documents").createOrReplaceTempView("graft_sql_docs")
       s.sql("""SELECT doc_id,
               |       token_count(text) AS n_tokens,

@@ -40,7 +40,6 @@ object RelationalQueries {
       * prune remains below the aggregate).
       */
     "top1_per_group" -> { (s, dir) =>
-      graft.GraftExtensions.enableOptimizations(s)
       val w = Window.partitionBy(col("l_orderkey"))
         .orderBy(col("l_shipdate").asc, col("l_linenumber").asc, col("l_quantity").asc)
       table(s, dir, "lineitem")

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.SparkSession
 
 /** Compile-churn attribution by diffing the codegen compile CACHE's keys
   * across reruns of a query: the cache is keyed on the RAW generated body
@@ -19,24 +18,7 @@ object CodegenCacheDiff {
     val dir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.1")
     val runs = args.drop(2).headOption.map(_.toInt).getOrElse(3)
     val dump = args.drop(3).headOption.getOrElse("/tmp/cgcache_diff")
-    // SPROBE_CONFS=k=v,k=v — extra session confs for conf-sensitivity
-    // experiments (e.g. artifact-isolation arms)
-    val extra = sys.env.get("SPROBE_CONFS").map(_.split(",").toSeq)
-      .getOrElse(Nil).map { kv =>
-        val Array(k, v) = kv.split("=", 2); (k, v)
-      }
-    val spark = extra.foldLeft(SparkSession.builder().master("local[32]")) {
-        case (b, (k, v)) => b.config(k, v)
-      }
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "256k")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // CodeGenerator.cache is private; reach it reflectively (probe-only

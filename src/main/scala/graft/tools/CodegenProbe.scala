@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.SparkSession
 
 /** Local perf-attribution helper: runs SparkEntry queries with the
   * codegen logger at DEBUG, counts janino compiles and dumps every
@@ -13,20 +12,7 @@ object CodegenProbe {
     val names = args.headOption.getOrElse("dedup_minhash_incremental").split(",").toSeq
     val dir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.1")
     val dump = args.drop(2).headOption.getOrElse("/tmp/codegen_dump")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "256k")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      // match Bench's session (see GraftSession.builder): without this a
-      // stream probe re-pays per-restart classloader compiles Bench no
-      // longer pays
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // dump every generated unit's source via the public comment-free text:

@@ -13,9 +13,6 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // mirror Bench's small-SF AQE sizing so profiles match bench behavior
-    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "256k")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     def time[A](label: String)(f: => A): A = {
@@ -56,7 +53,6 @@ object Explain {
             .filter(_.endsWith(".parquet")).sorted.mkString(", "))
         }
         println(s"[demo] read-back rows: " + spark.read.parquet(s"$out/orders").count())
-        graft.functions.HashFunctions.register(spark)
         spark.sql(
           s"""SELECT doc_id, size(word_shingles(split(text, ' '), 5)) AS n_sh,
              |       minhash_signature(word_shingles(split(text, ' '), 5))[0] AS mh0

@@ -1,13 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Batch launcher — the engine's `spark-execute` contract (reference:
   * bootstrap/src/main/java/com/asakusafw/spark/bootstrap/SparkBootstrap
   * .java:37-120, Context.java:44-71), re-expressed Spark-first: instead
   * of spawning a generated launcher class per jobflow, every flow is a
   * named entry in [[graft.SparkEntry.queries]] and the launcher drives
-  * the shared session. Invoked by `bin/graft-submit`; also runnable via
+  * one session built from the profile, [[graft.GraftSession.builder]]
+  * (the reference's `Launcher` → `SparkClient` path). Invoked by
+  * `bin/graft-submit`; also runnable via
   * `sbt "runMain graft.tools.Launcher ..."`.
   *
   * {{{
@@ -63,14 +63,9 @@ object Launcher {
       return
     }
     val c = parse(args.toList, Conf())
-    val builder = SparkSession.builder()
+    val builder = graft.GraftSession.builder(c.master,
+        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32").toInt)
       .appName(s"graft:${c.batchId}:${c.flowId}:${c.executionId}")
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", c.master))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.ui.enabled", sys.env.getOrElse("SPARK_GRAFT_UI", "false"))
     // batch arguments surface to operators as spark conf, the Spark-form
     // of the reference's ${var} batch-argument substitution

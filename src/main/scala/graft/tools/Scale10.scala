@@ -402,7 +402,7 @@ object Scale10 {
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     def selected(qs: Seq[String]) = only.fold(qs)(f => qs.filter(f))
     val spark = probeSession()
-    // probe-session sizing (same reasoning as Bench's advisory override):
+    // probe-session sizing:
     // the local pseudo-SFs are MBs-to-GBs, not TBs, and the synthesized
     // tables are many SMALL part files — under the production defaults
     // (128 MB file splits, 64 MB AQE advisory) FilePartition packing

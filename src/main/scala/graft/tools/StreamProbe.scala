@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.SparkSession
 
 /** Stream-floor attribution probe: runs a named stream query N times in
   * one JVM and, per run, splits wall time into (construct = wiring up to
@@ -24,16 +23,8 @@ object StreamProbe {
     val shm = new java.io.File("/dev/shm")
     val scratch = if (shm.isDirectory && shm.canWrite) "/dev/shm/graft_local"
       else sys.props("java.io.tmpdir")
-    val spark = SparkSession.builder().master("local[32]")
+    val spark = graft.GraftSession.builder("local[32]", 32)
       .config("spark.local.dir", scratch)
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "256k")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

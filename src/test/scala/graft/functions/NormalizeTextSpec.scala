@@ -50,7 +50,6 @@ class NormalizeTextSpec extends graft.SparkSpec {
   }
 
   test("SQL registration: normalize_text works through spark.sql") {
-    graft.GraftExtensions.registerAll(spark)
     val out = spark.sql("SELECT normalize_text('  Café  MENU  ') AS n")
       .as[String].collect()
     assert(out === Array("caf\u00e9 menu"))

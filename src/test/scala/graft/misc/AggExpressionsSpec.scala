@@ -37,7 +37,6 @@ class AggExpressionsSpec extends SparkSpec {
   }
 
   test("bounded_topk is registered as a SQL function") {
-    graft.GraftExtensions.registerAll(spark)
     Seq(("x", 1L), ("x", 8L), ("x", 5L)).toDF("g", "v")
       .createOrReplaceTempView("btk_in")
     val out = spark.sql("SELECT bounded_topk(v, 2) AS t FROM btk_in GROUP BY g")

@@ -133,8 +133,8 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("custom expressions usable from SQL after registration") {
-    // same registration path as spark.sql.extensions, applied post-hoc
-    graft.functions.HashFunctions.register(spark)
+    // registration happens once, when the builder installs spark.sql.extensions;
+    // the test itself makes no registration call
     val out = spark.sql(
       """SELECT simhash64(array('a','b')) AS sh,
         |       size(minhash_signature(array('x','y'))) AS k,
@@ -148,7 +148,6 @@ class ExtensionsSpec extends SparkSpec {
   test("full SQL surface: every registered function matches its Column-API twin") {
     import graft.functions.{TextFunctions => T}
     import spark.implicits._
-    graft.GraftExtensions.registerAll(spark)
     val docs = Seq(
       (1L, "The cat and the dog sat in the road, happy. Contact a@b.com!"),
       (2L, "der und von zu das mit sich ist der die und den von der zu"),
@@ -192,7 +191,6 @@ class ExtensionsSpec extends SparkSpec {
 
   test("sig_match_frac matches the composable HOF form and poisons mismatches") {
     import spark.implicits._
-    graft.GraftExtensions.registerAll(spark)
     // random-ish signature pairs; the HOF form is the executable spec
     val sigs = Seq.tabulate(50) { i =>
       val a = Seq.tabulate(16)(j => graft.functions.Hash64.mix(i * 16L + j))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
-import graft.{GraftExtensions, GraftSession, SparkSpec}
+import graft.{GraftSession, SparkSpec}
 
 class MaterializedViewSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
@@ -27,7 +27,6 @@ class MaterializedViewSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     scansOf(df).exists(_.relation.location.rootPaths.exists(_.toString.contains("graft_mv_spec")))
 
   test("an identical rebuilt query is served from the view, results unchanged") {
-    GraftExtensions.enableOptimizations(spark)
     val direct = agg().orderBy("o_orderpriority").collect()
     MaterializedViews.register(spark, "spec_mv", agg(), mvPath)
     try {
@@ -38,7 +37,6 @@ class MaterializedViewSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("a non-identical query (extra filter) is NOT rewritten") {
-    GraftExtensions.enableOptimizations(spark)
     MaterializedViews.register(spark, "spec_mv", agg(), mvPath)
     try {
       val q = GraftSession.table(spark, dir, "orders")
@@ -51,7 +49,6 @@ class MaterializedViewSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("self-join substitutes BOTH sides without attribute collisions") {
-    GraftExtensions.enableOptimizations(spark)
     MaterializedViews.register(spark, "spec_mv", agg(), mvPath)
     try {
       // both sides must stay plan-identical to the definition — a
@@ -66,7 +63,6 @@ class MaterializedViewSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("a pruning projection over the view definition is not rewritten (documented exact-match)") {
-    GraftExtensions.enableOptimizations(spark)
     MaterializedViews.register(spark, "spec_mv", agg(), mvPath)
     try {
       val q = agg().select(col("o_orderpriority"), col("n"))
@@ -76,7 +72,6 @@ class MaterializedViewSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("re-registration refreshes from base (no self-read of the stale view)") {
-    GraftExtensions.enableOptimizations(spark)
     try {
       // three cycles at ONE path: each refresh recomputes the definition
       // from the base table while the registry still holds the previous
@@ -92,7 +87,6 @@ class MaterializedViewSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("deregistered views stop rewriting") {
-    GraftExtensions.enableOptimizations(spark)
     MaterializedViews.register(spark, "spec_mv", agg(), mvPath)
     MaterializedViews.deregister("spec_mv")
     assert(!readsMv(agg()))

@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{GraftExtensions, SparkSpec}
+import graft.{GraftSession, SparkSpec}
 
 class TopOneRuleSpec extends SparkSpec {
   import spark.implicits._
@@ -18,12 +18,12 @@ class TopOneRuleSpec extends SparkSpec {
       .toDF("k", "s", "v")
 
     // baseline without the rule
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == TopOneWindowToAggregate)
-    val expected = top1(df).collect().toSet
-    assert(top1(df).queryExecution.optimizedPlan.toString.contains("Window"))
+    val expected = GraftSession.withConfs(spark,
+        Map("spark.sql.optimizer.excludedRules" -> TopOneWindowToAggregate.ruleName)) {
+      assert(top1(df).queryExecution.optimizedPlan.toString.contains("Window"))
+      top1(df).collect().toSet
+    }
 
-    GraftExtensions.enableOptimizations(spark)
     val optimized = top1(df)
     val planStr = optimized.queryExecution.optimizedPlan.toString
     // the Window node must be gone; Spark's WindowGroupLimit (a map-side
@@ -37,7 +37,6 @@ class TopOneRuleSpec extends SparkSpec {
   }
 
   test("rule leaves desc orders and rank() untouched") {
-    GraftExtensions.enableOptimizations(spark)
     val df = Seq((1, 5), (1, 2)).toDF("k", "s")
     val wDesc = Window.partitionBy($"k").orderBy($"s".desc)
     val descPlan = df.withColumn("rn", row_number().over(wDesc)).filter($"rn" === 1)
