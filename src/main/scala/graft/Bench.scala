@@ -205,24 +205,19 @@ object Bench {
       val (load0, jvms0) = loadMarker()
       a.loadRuns ::= load0
       a.jvmsRuns ::= jvms0
-      // per-query conf pins (SparkEntry.confPinsFor — static pins plus
-      // the size-conditional iterative-graph pins) hold for the timed
-      // execution only, so one query's pin can never leak into another's
-      val (ok, dt) = GraftSession.withConfs(spark, SparkEntry.confPinsFor(spark, name, sfDir)) {
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).count(); true } catch {
-            case e: Throwable =>
-              // a swallowed failure would read as a (fast, green) result
-              System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-              failed += name
-              false
-          }
-        // stop the clock BEFORE cleanup: unpersisting operator caches is
-        // bench bookkeeping, not query cost. Blocking, so the removal work
-        // cannot bleed into the next run's timed region.
-        (ok, (System.nanoTime() - t0) / 1e9)
-      }
+      val t0 = System.nanoTime()
+      val ok =
+        try { fn(spark, sfDir).count(); true } catch {
+          case e: Throwable =>
+            // a swallowed failure would read as a (fast, green) result
+            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+            failed += name
+            false
+        }
+      // stop the clock BEFORE cleanup: unpersisting operator caches is
+      // bench bookkeeping, not query cost. Blocking, so the removal work
+      // cannot bleed into the next run's timed region.
+      val dt = (System.nanoTime() - t0) / 1e9
       a.loadEndRuns ::= loadMarker()._1
       Caches.clear(spark, blocking = true)
       if (ok) a.times ::= dt
@@ -246,22 +241,7 @@ object Bench {
       a.gcMs += gcMillis() - gc0
       a.leaked += leftovers.size
     }
-    // SPARK_GRAFT_ROTATE=1: instead of `runs` back-to-back runs per query,
-    // make `runs` full passes over the set with the start offset rotated
-    // ~1/runs of the list per pass — every query sees `runs` DIFFERENT
-    // predecessors, so a slowdown that travels with a neighbor (leaked
-    // blocks, page-cache eviction, machine load spikes) shows up as
-    // median-min spread instead of silently biasing one victim's median.
-    // Default off: back-to-back runs are the established timing baseline.
-    if (sys.env.get("SPARK_GRAFT_ROTATE").contains("1")) {
-      val step = math.max(1, names.size / math.max(1, runs))
-      for (p <- 0 until runs) {
-        val off = (p * step) % math.max(1, names.size)
-        (names.drop(off) ++ names.take(off)).foreach { case (n, fn) => runOnce(n, fn) }
-      }
-    } else {
-      names.foreach { case (n, fn) => (1 to runs).foreach(_ => runOnce(n, fn)) }
-    }
+    names.foreach { case (n, fn) => (1 to runs).foreach(_ => runOnce(n, fn)) }
     val results = names.map { case (name, _) =>
       val a = acc(name)
       val diag = Map("compiles" -> a.compiles, "genUnits" -> a.genUnits,

@@ -159,8 +159,9 @@ object GraftSession {
   /** Run `body` with session confs pinned, restoring previous values
     * (or unsetting) afterwards — the shared form of the save/set/try/
     * finally-restore pattern the sinks and streaming drains need around
-    * plan-time settings, and the one path the harnesses apply their
-    * per-query pins (`SparkEntry.confPinsFor`) through.
+    * plan-time settings. The pins are visible to every flow on `spark`
+    * while `body` runs; a flow that must not share them runs on
+    * `spark.newSession()` instead (as `metadata_agg` does).
     */
   def withConfs[A](spark: SparkSession, pins: Map[String, String])(body: => A): A = {
     val saved = pins.keys.map(k => k -> spark.conf.getOption(k)).toMap

@@ -80,152 +80,15 @@ object SparkEntry {
     */
   val indexServingSetup: Seq[String] = Seq("stream_ann_topk", "ann_ivf_incremental")
 
-  /** Per-query session-conf pins, applied by Bench/Verify around a
-    * query's execution (previous values restored afterwards). Results
-    * never depend on a pin — a harness that ignores them is merely
-    * slower. Currently empty; the mechanism stays for tuning decisions
-    * that survive an A/B.
-    *
-    * Closed experiment (round 6): `dedup_minhash_incremental`'s compile
-    * churn (~110-130 janino compiles per 3 runs, the highest in the set)
-    * was A/B'd with AQE pinned off — its 5-stage plan is fully static, so
-    * AQE replanning looked like the suspect. Across 6 isolated runs per
-    * arm at sf0.1, per-run minima ranged 2.4-6.9 s in BOTH arms with
-    * identical compile counts (119) and no arm consistently ahead; one
-    * early 2.4x "win" did not reproduce. The churn and the spread are
-    * environment-class (janino cache + machine load), not a plan defect
-    * and not AQE's doing — per the variance discipline, judge this query
-    * on queries_min across the full set, and don't pin.
+  /** Measured row count of table `t` under `dir`, for a query that picks
+    * its plan arm from its input size (`bitext_mine` and
+    * `bitext_mine_incremental`). One column-free count() per (dir, table)
+    * per JVM, memoized so later runs of the flow read it for free.
     */
-  def confPins: Map[String, Map[String, String]] = Map(
-    // footer-only aggregation: COUNT/MIN/MAX from parquet row-group stats.
-    // aggregatePushdown only exists on the DSv2 read path, so parquet is
-    // removed from the v1 fallback list FOR THIS QUERY ONLY; values are
-    // exact with or without the pins (the v1 path computes the same
-    // answer from data pages — slower, never different)
-    "metadata_agg" -> Map(
-      "spark.sql.parquet.aggregatePushdown" -> "true",
-      "spark.sql.sources.useV1SourceList" -> ""))
-    // closed experiment (round 10): triangle_count with the same pin read
-    // 2.58/2.31 isolated vs 2.79 isolated baseline — but the full-set
-    // unpinned run measured 2.35, i.e. the delta is inside isolated-vs-
-    // full-set variance. Not a round structure (single plan), no stable
-    // win: per the variance discipline, don't pin.
-
-  /** The iterative-graph family's node-domain tables: the rank/frontier
-    * vector is a subset of these tables' keys, so their combined row
-    * count upper-bounds |V| — the quantity the size class below gates
-    * on. (pagerank walks the customer name graph; the other three walk
-    * the part–supplier fulfillment graph.)
-    */
-  private val graphNodeDomain: Map[String, Seq[String]] = Map(
-    "pagerank" -> Seq("customer"),
-    "pagerank_weighted" -> Seq("supplier", "part"),
-    "pagerank_personalized" -> Seq("supplier", "part"),
-    "shortest_path" -> Seq("supplier", "part"))
-
-  /** TINY size class bound: pin only below 10^5 nodes, where the whole
-    * rank vector is a few MB and per-stage overhead dominates any data
-    * cost. Mirrors the reference's plan-time size classes (reference
-    * compiler/src/main/scala/com/asakusafw/spark/compiler/util/
-    * NumPartitions.scala:31-71, TINY→1 partition) — the one place this
-    * repo overrides its otherwise AQE-delegated partition sizing.
-    */
-  private val TinyGraphNodes = 100000L
-
-  // iterative rounds on a tiny (≲10^5-node) rank vector: each round is a
-  // join + partial agg over kB-scale frames, so the cost is pure
-  // per-stage overhead — AQE re-plans every round's stages (~0.15 s
-  // each) and 32-task shuffles schedule 4x the tasks the data needs.
-  // A/B at sf0.1, 2 isolated idle runs per arm, queries_min: baseline
-  // (AQE on, 32 parts) 4.76 s; AQE off 3.59/3.99; AQE off + 8 parts
-  // 3.34/2.80 — a stable ~1.6x. The same pin holds across the whole
-  // iterative-graph family (same round structure): weighted 2.95→1.77,
-  // personalized 3.00→2.03, shortest_path 2.13→1.87. Results are
-  // pin-independent (exact integer algebra; Verify applies the same
-  // pins). The pin is SIZE-CONDITIONAL (round 11): above TinyGraphNodes
-  // the default AQE-on path wins and is what ships — a 100 TB run never
-  // sees the pin, and the pseudo-sf1 scale probe exercises the big arm.
-  private val tinyGraphPins = Map(
-    "spark.sql.adaptive.enabled" -> "false",
-    "spark.sql.shuffle.partitions" -> "8")
-
-  /** The deletion-neighborhood pair joins' source tables: above the tiny
-    * class their pair-emitting self-join is the dominant stage, and
-    * shuffled-hash beats sort-merge there (r12 StageDump at the 100x
-    * probe: the SMJ's two SortExecs were ~25% of the stage's CPU,
-    * decade ratio 8.6x -> 7.5x with preferSortMergeJoin=false). Below it
-    * the default planning wins — AQE broadcast-promotes the small
-    * candidate frame at runtime, which an explicit shuffle_hash hint (or
-    * this pin) would forgo for no benefit (A/B'd: fuzzy_join2
-    * 1.67 -> 2.21 s at sf0.1 with the hint baked in, stable across runs). Same
-    * pin-off-at-tiny / default-at-big structure as [[tinyGraphPins]],
-    * gated on measured input rows, not the fixture.
-    */
-  private val pairJoinDomain: Map[String, Seq[String]] = Map(
-    "fuzzy_join" -> Seq("customer"),
-    "fuzzy_join2" -> Seq("part"))
-
-  private val bigPairJoinPins = Map(
-    "spark.sql.join.preferSortMergeJoin" -> "false")
-
-  /** ssjoin_prefix's verify joins (candidates ⋈ ordered token sets):
-    * below this document count AQE's default planning runs and
-    * broadcast-promotes the ordered-sets frame — the right call in the
-    * toy regime. At or above it broadcasts are pinned OFF, because that
-    * is the plan every LARGER scale gets anyway: the ordered-sets frame
-    * grows with the corpus, so the broadcast arm is a transient the
-    * operator passes through exactly once on its way up — r12's SCALE100
-    * measured that transition as a misleading 14.2×/decade headline
-    * (shuffle-to-shuffle was 6.4×, output pairs exactly 10.0×). Pinning
-    * the big class onto the shuffle arm makes pseudo-sf1 and pseudo-sf10
-    * plan identically, so the decade ratio measures operator growth, not
-    * a planner threshold. Same pin-off-at-tiny / fixed-at-big structure
-    * as [[tinyGraphPins]]/[[bigPairJoinPins]], gated on measured rows.
-    */
-  private val ssjoinDomain: Map[String, Seq[String]] = Map(
-    "ssjoin_prefix" -> Seq("documents"))
-
-  private val SsjoinBroadcastOffDocs = 20000L
-
-  private val ssjoinPins = Map(
-    "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-
-  // one footer-cheap count() per (dir, table) per JVM — outside every
-  // harness's timed region (pins are computed before the clock starts)
   private val rowsMemo = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   private[graft] def tableRows(spark: SparkSession, dir: String, t: String): Long =
     rowsMemo.computeIfAbsent(s"$dir/$t", _ =>
       try spark.read.parquet(s"$dir/$t.parquet").count()
-      // unreadable → assume big: never pin a shape we could not measure
+      // unreadable → assume big: never take the small arm unmeasured
       catch { case _: Throwable => Long.MaxValue / 4 })
-
-  /** The pins a harness (Bench/Verify/Scale10) applies around `name`'s
-    * execution against `dir`: the static [[confPins]] entry plus, for the
-    * iterative-graph family, the tiny-input pins iff the measured node
-    * domain is below [[TinyGraphNodes]] — derived from the data, not from
-    * the fixture the pin was tuned on.
-    */
-  def confPinsFor(spark: SparkSession, name: String, dir: String): Map[String, String] = {
-    val base = confPins.getOrElse(name, Map.empty)
-    val graph = graphNodeDomain.get(name) match {
-      case Some(tables)
-          if tables.map(tableRows(spark, dir, _)).sum < TinyGraphNodes =>
-        tinyGraphPins
-      case _ => Map.empty[String, String]
-    }
-    val pair = pairJoinDomain.get(name) match {
-      case Some(tables)
-          if tables.map(tableRows(spark, dir, _)).sum >= TinyGraphNodes =>
-        bigPairJoinPins
-      case _ => Map.empty[String, String]
-    }
-    val ssjoin = ssjoinDomain.get(name) match {
-      case Some(tables)
-          if tables.map(tableRows(spark, dir, _)).sum >= SsjoinBroadcastOffDocs =>
-        ssjoinPins
-      case _ => Map.empty[String, String]
-    }
-    base ++ graph ++ pair ++ ssjoin
-  }
 }

@@ -54,11 +54,8 @@ object Verify {
     // here surfaces the offending operator by name the day it lands.
     var leaks = List.empty[String]
     selected.foreach { case (name, fn) =>
-      // same per-query conf pins as Bench (restored after the query)
-      val pins = SparkEntry.confPinsFor(spark, name, sfDir)
-      try GraftSession.withConfs(spark, pins) {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-      } catch { case e: Throwable =>
+      try fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+      catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       finally if (leakCheck(spark, name)) leaks ::= name

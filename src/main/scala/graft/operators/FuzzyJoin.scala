@@ -73,11 +73,10 @@ object FuzzyJoin {
     val b = guarded.select(col("_k"), col("_id").as("b"))
     // the pair join carries NO join-strategy hint, deliberately, in both
     // directions (A/B'd r12 at the 100x probe + sf0.1 idle bench):
-    // - at scale, shuffled-hash beats sort-merge here (the two SortExecs
+    // - at scale, shuffled-hash beat sort-merge here (the two SortExecs
     //   were ~25% of the pair stage's CPU: 3886s -> 2987s, decade ratio
-    //   8.6x -> 7.5x) — [[graft.SparkEntry.confPinsFor]] pins
-    //   preferSortMergeJoin=false when the pair-source table exceeds the
-    //   tiny class, mirroring what a cluster job sets;
+    //   8.6x -> 7.5x with preferSortMergeJoin=false); no workload runs
+    //   this join at that scale yet, so the default planning ships;
     // - at small scale an explicit shuffle_hash hint BLOCKS AQE's
     //   runtime broadcast promotion of the small candidate frame and
     //   cost fuzzy_join2 1.67 -> 2.21 s at sf0.1 (stable across runs).

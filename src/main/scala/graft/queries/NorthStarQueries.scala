@@ -28,14 +28,13 @@ object NorthStarQueries {
   private val AnnQueries = 10
   private val AnnK = 5
 
-  /** Size pin for `bitext_mine`: measured corpus rows at or above this
-    * switch the query from the exact brute-force arm to the IVF-pruned
-    * one. Unlike the plan-shape pins, this pin changes RESULTS (IVF
-    * forward recall is approximate), so the threshold sits ABOVE every
-    * oracle-checked fixture (sf0.001–sf0.1 all run the exact arm and
-    * replay the exact-ranking oracle at any of them) and engages only at
-    * the pseudo scales — same structure as the ssjoin broadcast-off pin
-    * at the same 20k: the SECOND measured decade (pseudo-sf1 → sf10) is
+  /** Size threshold for `bitext_mine`: measured corpus rows at or above
+    * this switch the query from the exact brute-force arm to the
+    * IVF-pruned one. The arm changes RESULTS (IVF forward recall is
+    * approximate), so the threshold sits ABOVE every oracle-checked
+    * fixture (sf0.001–sf0.1 all run the exact arm and replay the
+    * exact-ranking oracle at any of them) and engages only at the pseudo
+    * scales: the SECOND measured decade (pseudo-sf1 → sf10) is
     * IVF-to-IVF, while the first crosses the arm transition and is read
     * as such.
     */
@@ -780,15 +779,15 @@ object NorthStarQueries {
       * decade probes measure corpus growth (linear), not batch × corpus
       * (quadratic) — and the Scale10 synthesis only shifts ids, so the
       * slice selects the same batch at every pseudo scale. Above
-      * [[BitextIvfMinCorpusRows]] measured corpus rows the size pin
-      * switches to the IVF-pruned arm ([[graft.similarity.Bitext
+      * [[BitextIvfMinCorpusRows]] measured corpus rows
+      * ([[graft.SparkEntry.tableRows]]) the query switches to the
+      * IVF-pruned arm ([[graft.similarity.Bitext
       * .mineIvf]] — candidates from nProbe cells, exact re-rank, exact
-      * reverse direction). The pin threshold (20k) sits above EVERY
+      * reverse direction). The threshold (20k) sits above EVERY
       * oracle-checked fixture — IVF forward recall is approximate, so no
       * scale the exact-ranking oracle replays may plan it — and the
-      * second measured decade (pseudo-sf1 → sf10) is IVF at both ends,
-      * the same structure as the ssjoin broadcast-off pin at the same
-      * 20k. Plant ids ride at +9e11, above the largest strided
+      * second measured decade (pseudo-sf1 → sf10) is IVF at both ends.
+      * Plant ids ride at +9e11, above the largest strided
       * pseudo-scale id, so a plant can never collide with an organic
       * vector.
       */
@@ -812,7 +811,7 @@ object NorthStarQueries {
       * the stored index with zero corpus re-scan: probe-join on cell id,
       * exact re-rank, exact reverse leg from index vectors. Same fixture
       * and the SAME oracle SQL as `bitext_mine` verbatim: below the
-      * [[BitextIvfMinCorpusRows]] pin the batch probes ALL 16 cells
+      * [[BitextIvfMinCorpusRows]] threshold the batch probes ALL 16 cells
       * (nProbe = nCells ⇒ pair-for-pair equal to the exact arm, the
       * Round14Spec-pinned equivalence), so every oracle-checked scale
       * replays the exact double-precision ranking; at the pseudo scales

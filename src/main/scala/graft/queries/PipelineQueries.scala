@@ -155,16 +155,23 @@ object PipelineQueries {
     /** Footer-only aggregation (parquet aggregate pushdown, DSv2):
       * COUNT/MIN/MAX answered from row-group statistics without reading a
       * single data page — the 100 TB "how big is this table" query at
-      * metadata cost. Enabled per-query via `SparkEntry.confPins`
-      * (aggregatePushdown + the DSv2 read path); the values are exact
-      * either way, so a harness that ignores the pins is merely slower.
-      * MetadataAggSpec pins PushedAggregation in the scan.
+      * metadata cost. Pushdown exists only on the DSv2 read path, so the
+      * aggregate runs on a child session (`newSession`, same
+      * SparkContext) with `aggregatePushdown` on and parquet removed from
+      * the v1 fallback list; its one row comes back on `s` with the same
+      * schema. The caller's session confs are never touched, so no
+      * concurrent flow sees them. MetadataAggSpec checks
+      * PushedAggregation in the scan.
       */
     "metadata_agg" -> { (s, dir) =>
-      s.read.parquet(s"$dir/lineitem.parquet")
+      val footer = s.newSession()
+      footer.conf.set("spark.sql.parquet.aggregatePushdown", "true")
+      footer.conf.set("spark.sql.sources.useV1SourceList", "")
+      val agg = footer.read.parquet(s"$dir/lineitem.parquet")
         .agg(count(lit(1)).as("n"),
           min(col("l_orderkey")).as("min_key"), max(col("l_orderkey")).as("max_key"),
           min(col("l_partkey")).as("min_part"), max(col("l_partkey")).as("max_part"))
+      s.createDataFrame(java.util.Arrays.asList(agg.collect(): _*), agg.schema)
     },
 
     /** Write-side file sizing ([[graft.sinks.Sized.rebalancedWrite]]):

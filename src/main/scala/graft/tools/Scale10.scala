@@ -77,11 +77,10 @@ object Scale10 {
     // exchanges are id-only (expect ~linear); gopher_repetition and
     // gopher_dup_ngrams are per-row passes with zero exchanges (expect
     // ~10x flat); bitext_mine holds its source batch FIXED (the id-slice
-    // pin in the query). Its FIRST decade crosses the exact→IVF arm
-    // transition (the 20k size pin engages at pseudo-sf1, not at sf0.1 —
-    // IVF recall is approximate, so no oracle-checked scale may plan it,
-    // same structure as ssjoin's broadcast-off pin); the second decade
-    // is IVF at both ends
+    // in the query). Its FIRST decade crosses the exact→IVF arm
+    // transition (the query's 20k size threshold engages at pseudo-sf1,
+    // not at sf0.1 — IVF recall is approximate, so no oracle-checked
+    // scale may plan it); the second decade is IVF at both ends
     "url_blocklist", "gopher_repetition", "gopher_dup_ngrams", "bitext_mine",
     // round-15 ask: the remaining round-14 row-local curation operators
     // (composed Gopher gate, line-stat + keep-first line dedup — all
@@ -143,10 +142,7 @@ object Scale10 {
     "boilerplate_strip",
     // round-13 ask: the curation heavyweights — the suffix-ish substring
     // family is the costliest text op in the bench (substring_clean
-    // 1.6 s at sf0.1) and had no decade entry; ssjoin_prefix's entry now
-    // measures the SHUFFLE arm at both ends (the size-conditional
-    // broadcast-off pin in SparkEntry engages at ≥20k documents, i.e. at
-    // pseudo-sf1 AND pseudo-sf10 but not at sf0.1)
+    // 1.6 s at sf0.1) and had no decade entry
     "substring_clean", "substring_spans",
     // round-14 ask: second decade for the new curation front —
     // url_blocklist (id-only exchanges), gopher_repetition and
@@ -433,39 +429,29 @@ object Scale10 {
     // every ratio.
 
     def timeQuery(name: String, dir: String): Seq[Double] = {
+      // every flow runs on the one probe session, with no per-query conf
       val fn = graft.SparkEntry.queries(name)
-      // size-conditional pins: the SAME pin decision Bench/Verify make
-      // for this (query, input) — at sf0.1 the tiny-graph arm pins, at
-      // pseudo-sf1 the node domain exceeds the TINY class and the
-      // default AQE-on path runs, which is exactly what the probe
-      // should measure
-      val pins = graft.SparkEntry.confPinsFor(spark, name, dir)
-      graft.GraftSession.withConfs(spark, pins) {
-        (1 to runs).map { _ =>
-          val t0 = System.nanoTime()
-          fn(spark, dir).count()
-          val dt = (System.nanoTime() - t0) / 1e9
-          graft.Caches.clear(spark, blocking = true)
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-          dt
-        }
+      (1 to runs).map { _ =>
+        val t0 = System.nanoTime()
+        fn(spark, dir).count()
+        val dt = (System.nanoTime() - t0) / 1e9
+        graft.Caches.clear(spark, blocking = true)
+        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+        dt
       }
     }
 
     /** One probe row: time at `dirA` then `dirB`, lint the `dirB`
-      * executed plan UNDER THE SAME PINS the timed run used (the audit
-      * must inspect the plan that was measured, not the default-conf
-      * one), emit a JSON fragment.
+      * executed plan on the same session the timed runs used, emit a
+      * JSON fragment.
       */
     def probeRow(q: String, dirA: String, dirB: String,
         aKey: String, bKey: String): String = {
       val a = timeQuery(q, dirA)
       val b = timeQuery(q, dirB)
-      val pins = graft.SparkEntry.confPinsFor(spark, q, dirB)
       val (gate, info) =
-        try graft.GraftSession.withConfs(spark, pins) {
-          PlanLint.lint(graft.SparkEntry.queries(q)(spark, dirB))
-        } catch { case _: Throwable => (Map("error" -> 1), Map.empty[String, Int]) }
+        try PlanLint.lint(graft.SparkEntry.queries(q)(spark, dirB))
+        catch { case _: Throwable => (Map("error" -> 1), Map.empty[String, Int]) }
       graft.Caches.clear(spark, blocking = true)
       System.gc()
       val ratio = b.min / math.max(a.min, 1e-9)

@@ -33,15 +33,12 @@ object StageDump {
     spark.conf.set("spark.sql.files.maxPartitionBytes", "16m")
     spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
-    val pins = graft.SparkEntry.confPinsFor(spark, q, dir)
-    graft.GraftSession.withConfs(spark, pins) {
-      (1 to runs).foreach { i =>
-        val t0 = System.nanoTime()
-        val n = graft.SparkEntry.queries(q)(spark, dir).count()
-        println(f"[stagedump] run $i: rows=$n time=${(System.nanoTime() - t0) / 1e9}%.2fs")
-        graft.Caches.clear(spark, blocking = true)
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      }
+    (1 to runs).foreach { i =>
+      val t0 = System.nanoTime()
+      val n = graft.SparkEntry.queries(q)(spark, dir).count()
+      println(f"[stagedump] run $i: rows=$n time=${(System.nanoTime() - t0) / 1e9}%.2fs")
+      graft.Caches.clear(spark, blocking = true)
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
     }
     val app = spark.sparkContext.applicationId
     // uiWebUrl, not a hardcoded :4040 — with another Spark UI up this

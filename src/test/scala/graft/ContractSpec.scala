@@ -20,12 +20,6 @@ class ContractSpec extends SparkSpec {
       assert(name.matches("[a-z][a-z0-9_]*"), s"bad query name: '$name'")
   }
 
-  test("confPins only reference declared queries") {
-    val q = SparkEntry.queries.keySet
-    for (name <- SparkEntry.confPins.keys)
-      assert(q.contains(name), s"confPins entry for unknown query: '$name'")
-  }
-
   test("no duplicate query names across the query modules") {
     // built from SparkEntry.queryModules — the SAME list the driver
     // surface merges, so a new module is under this guard automatically

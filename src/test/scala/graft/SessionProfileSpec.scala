@@ -13,14 +13,6 @@ import org.apache.spark.sql.functions.{col, row_number}
   */
 class SessionProfileSpec extends SparkSpec {
 
-  private lazy val root: File =
-    Iterator.iterate(new File(sys.props("user.dir")).getAbsoluteFile)(_.getParentFile)
-      .takeWhile(_ != null).find(d => new File(d, "build.sbt").isFile)
-      .getOrElse(fail("no build.sbt above the working directory"))
-
-  /** The sf0.01 fixture tables frozen in the repo for the benchmark. */
-  private lazy val dir = new File(root, "perfbench/template").getPath
-
   private def top1Frame(s: SparkSession): DataFrame = {
     import s.implicits._
     val w = Window.partitionBy(col("k")).orderBy(col("s").asc)
@@ -41,7 +33,7 @@ class SessionProfileSpec extends SparkSpec {
     val s = spark.newSession()
     val before = top1Frame(s).queryExecution.optimizedPlan.canonicalized
     for (q <- Seq("top1_per_group", "mv_rewrite", "sql_text_pipeline"))
-      SparkEntry.queries(q)(s, dir).count()
+      SparkEntry.queries(q)(s, templateDir).count()
     Caches.clear(s, blocking = true)
     val after = top1Frame(s).queryExecution.optimizedPlan.canonicalized
     assert(after == before, s"before:\n$before\nafter:\n$after")
@@ -52,20 +44,29 @@ class SessionProfileSpec extends SparkSpec {
       Option(d.listFiles).toSeq.flatten.flatMap { f =>
         if (f.isDirectory) scalaFiles(f) else if (f.getName.endsWith(".scala")) Seq(f) else Nil
       }
-    val files = Seq("src/main/scala", "perfbench/src").flatMap(p => scalaFiles(new File(root, p)))
+    val files = Seq("src/main/scala", "perfbench/src").flatMap(p => scalaFiles(new File(repoRoot, p)))
       .filterNot(_.getName == "GraftSession.scala")
-    assert(files.size > 50, s"source scan found only ${files.size} files under $root")
+    assert(files.size > 50, s"source scan found only ${files.size} files under $repoRoot")
     val allowed = Set("\"spark.local.dir\"", "\"spark.ui.enabled\"")
     val configKey = """\.config\(\s*(s?"[^"]*"|[^,)]*)""".r
     val violations = files.flatMap { f =>
       val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      val rel = root.toPath.relativize(f.toPath)
+      val rel = repoRoot.toPath.relativize(f.toPath)
       val builders =
         if (src.contains("SparkSession.builder(")) Seq(s"$rel calls SparkSession.builder(") else Nil
       val keys = configKey.findAllMatchIn(src).map(_.group(1).trim)
         .filterNot(k => allowed(k) || k.startsWith("s\"graft.arg."))
         .map(k => s"$rel passes a builder key $k")
-      builders ++ keys
+      // per-query session pins are a second configuration path: a flow
+      // runs in a harness exactly as graft-submit runs it (the character
+      // class keeps this guard itself out of a plain grep for the name)
+      val pins =
+        if ("conf[P]ins".r.findFirstIn(src).isDefined) Seq(s"$rel mentions the per-query pin map")
+        else Nil
+      val harnessConfs =
+        if (Set("Bench.scala", "Verify.scala")(f.getName) && src.contains("withConfs("))
+          Seq(s"$rel calls withConfs(") else Nil
+      builders ++ keys ++ pins ++ harnessConfs
     }
     assert(violations.isEmpty, violations.mkString("\n"))
   }

@@ -1,5 +1,7 @@
 package graft
 
+import java.io.File
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,6 +16,16 @@ trait SparkSpec extends AnyFunSuite {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** The repository root: the nearest directory above the working
+    * directory that holds build.sbt. */
+  lazy val repoRoot: File =
+    Iterator.iterate(new File(sys.props("user.dir")).getAbsoluteFile)(_.getParentFile)
+      .takeWhile(_ != null).find(d => new File(d, "build.sbt").isFile)
+      .getOrElse(fail("no build.sbt above the working directory"))
+
+  /** The sf0.01 fixture tables frozen in the repo for the benchmark. */
+  lazy val templateDir: String = new File(repoRoot, "perfbench/template").getPath
 }
 
 /** Reference-style micro-models (FIXTURES.md §A): Foo the master, Bar the

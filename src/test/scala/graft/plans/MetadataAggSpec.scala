@@ -1,45 +1,53 @@
 package graft.plans
 
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 
-/** Parquet aggregate pushdown: with the DSv2 read path and
-  * `aggregatePushdown` on, a global COUNT/MIN/MAX must reach the scan as
-  * PushedAggregation — answered from row-group statistics, no data pages
-  * read. The 100 TB table-stats query at metadata cost.
+/** Parquet aggregate pushdown: `metadata_agg` answers a global
+  * COUNT/MIN/MAX from row-group statistics (PushedAggregation in the
+  * scan, no data pages read) on the caller's plain session, without
+  * changing that session's confs. The 100 TB table-stats query at
+  * metadata cost.
   */
-class MetadataAggSpec extends SparkSpec with AdaptiveSparkPlanHelper {
+class MetadataAggSpec extends SparkSpec {
+
+  private val keys = Seq("spark.sql.parquet.aggregatePushdown", "spark.sql.sources.useV1SourceList")
 
   test("count/min/max push into the parquet scan as PushedAggregation") {
-    val pins = Map(
-      "spark.sql.parquet.aggregatePushdown" -> "true",
-      "spark.sql.sources.useV1SourceList" -> "")
-    val saved = pins.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    pins.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
-      val q = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-        .agg(count(lit(1)).as("n"), min(col("l_orderkey")).as("min_key"),
-          max(col("l_orderkey")).as("max_key"))
-      q.count()
-      val plan = q.queryExecution.executedPlan
-      val scans = collect(plan) {
-        case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => s
+    val before = keys.map(spark.conf.getOption)
+    // the aggregate runs on a child session, so its plan is read from the
+    // SparkContext's SQL execution events rather than the returned frame
+    val plans = ArrayBuffer.empty[String]
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          plans.synchronized(plans += s.physicalPlanDescription)
+        case _ =>
       }
-      assert(scans.nonEmpty, plan.toString)
-      assert(scans.head.toString.contains("PushedAggregation"),
-        s"aggregation not pushed to the scan:\n${scans.head}")
-      // the pushed answer must equal the data-path answer
-      val pushed = q.collect().head
-      pins.keys.foreach(spark.conf.unset)
-      val plain = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-        .agg(count(lit(1)), min(col("l_orderkey")), max(col("l_orderkey")))
-        .collect().head
-      assert(pushed === plain)
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
+    spark.sparkContext.addSparkListener(listener)
+    val got =
+      try {
+        val rows = SparkEntry.queries("metadata_agg")(spark, templateDir).collect()
+        eventually(timeout(30.seconds)) {
+          assert(plans.synchronized(plans.exists(_.contains("PushedAggregation"))),
+            s"aggregation not pushed to the scan:\n${plans.synchronized(plans.mkString("\n"))}")
+        }
+        rows
+      } finally spark.sparkContext.removeSparkListener(listener)
+    // the pushed answer must equal the data-path answer
+    val plain = spark.read.parquet(s"$templateDir/lineitem.parquet")
+      .agg(count(lit(1)), min(col("l_orderkey")), max(col("l_orderkey")),
+        min(col("l_partkey")), max(col("l_partkey")))
+      .collect()
+    assert(got.toSeq === plain.toSeq)
+    assert(keys.map(spark.conf.getOption) === before)
   }
 }

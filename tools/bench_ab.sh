@@ -1,85 +1,47 @@
 #!/bin/bash
-# Paired-binaries bench A/B — the round-15 regression instrument.
+# Paired-binaries bench A/B: graft.Bench on two commits, same host, same
+# minutes.
 #
-# Two consecutive rounds (r13, r14) read "+13%/+27%" against older
-# committed bench floors; a manual same-host same-hour A/B then proved
-# HEAD binaries ~2.4% FASTER than the r12 code on the very queries that
-# "regressed" — the cross-week floor comparison measures the HOST, not
-# the code. This script institutionalizes that A/B: it checks out the
-# previous round's close commit into a worktree, compiles it, and runs
-# the same query subset ALTERNATING old/new binaries (each pass pairs
-# the two sides inside the same minutes of host weather), then emits
-# per-query paired min ratios to BENCH_AB.json. Judge regressions on
-# these ratios (<= 1.05 = clean), never on floors from other weeks.
+# Floors from other days measure the host, not the code: a same-host A/B
+# once showed code that read "+13%/+27%" against older committed floors
+# to be ~2.4% FASTER. This script exports OLD_SHA with `git archive`,
+# compiles both sides, and runs the same query subset ALTERNATING old/new
+# binaries (each pass pairs the two sides inside the same minutes of host
+# weather), then writes per-query paired min ratios to BENCH_AB.json.
+# Judge regressions on these ratios (<= 1.05 = clean).
 #
-# Usage: tools/bench_ab.sh [OLD_SHA]
-#   OLD_SHA defaults to the parent of the newest driver drop commit
-#   ("round NN: verdict/..."), i.e. the previous round's close.
+# Usage: QUERIES=q1,q2 tools/bench_ab.sh [OLD_SHA]
+#   OLD_SHA defaults to HEAD^ (the parent of the change under test)
 # Env:
-#   QUERIES  comma list; default = top-15 by the committed bench's
-#            queries_min UNION every query whose committed floor moved
-#            >20% between OLD_SHA's bench artifact and HEAD's
+#   QUERIES  comma list of SparkEntry query names (required)
 #   PASSES   alternating passes per binary (default 3)
 #   RUNS     Bench runs per query per pass (default 2)
 #   OUT      output artifact (default BENCH_AB.json)
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-# awk reads the whole stream (no early exit): an exit here SIGPIPEs
-# git log, which pipefail+set -e turns into a silent 141 abort
-OLD_SHA=${1:-$(git log --format='%H %s' |
-  awk '!found && /^[0-9a-f]+ round [0-9]+/ { print $1; found = 1 }')}
-if [[ -z "$OLD_SHA" ]]; then
-  echo "[bench_ab] no driver drop commit found and no OLD_SHA given" >&2
+if [[ -z "${QUERIES:-}" ]]; then
+  echo "[bench_ab] set QUERIES=q1,q2,... (the flows the change touches)" >&2
   exit 1
 fi
-OLD_SHA=$(git rev-parse "${OLD_SHA}^")   # the close commit the drop graded
+OLD_SHA=$(git rev-parse "${1:-HEAD^}")
 NEW_SHA=$(git rev-parse HEAD)
 PASSES=${PASSES:-3}
 RUNS=${RUNS:-2}
 OUT=${OUT:-BENCH_AB.json}
-WT=/tmp/graft_ab_old
-
-QUERIES=${QUERIES:-$(python3 - "$OLD_SHA" <<'EOF'
-import json, subprocess, sys
-old_sha = sys.argv[1]
-def bench_at(ref):
-    r = subprocess.run(["git", "show", f"{ref}:BENCH_LAST.json"],
-                       capture_output=True, text=True)
-    return json.loads(r.stdout) if r.returncode == 0 else {}
-new = bench_at("HEAD").get("queries_min") or {}
-old = bench_at(old_sha).get("queries_min") or {}
-import math
-top = sorted((q for q, v in new.items() if v is not None),
-             key=lambda q: -new[q])[:15]
-moved = [q for q in new if q in old and new[q] and old[q]
-         and (new[q] / old[q] > 1.2 or new[q] / old[q] < 0.8)]
-# the two committed artifacts may have different provenance (builder idle
-# close vs driver ambient re-run) — then "moved >20%" sweeps up half the
-# suite and measures the hosts, not the code. Keep the 10 biggest movers;
-# the paired run itself is the instrument that settles them.
-moved = sorted(moved, key=lambda q: -abs(math.log(new[q] / old[q])))[:10]
-print(",".join(sorted(set(top) | set(moved))))
-EOF
-)}
-if [[ -z "$QUERIES" ]]; then
-  echo "[bench_ab] empty query subset (no committed BENCH_LAST.json?)" >&2
-  exit 1
-fi
+OLD_DIR=$(mktemp -d /tmp/graft_ab_old.XXXXXX)
 echo "[bench_ab] old=$OLD_SHA new=$NEW_SHA"
 echo "[bench_ab] subset: $QUERIES"
 
-cleanup() { git worktree remove --force "$WT" 2>/dev/null || true; }
-trap cleanup EXIT
-cleanup
-git worktree add --detach "$WT" "$OLD_SHA" >/dev/null
+trap 'rm -rf "$OLD_DIR"' EXIT
+git archive "$OLD_SHA" | tar -x -C "$OLD_DIR"
 
 echo "[bench_ab] compiling both binaries"
 sbt -batch compile >/dev/null
-(cd "$WT" && sbt -batch compile >/dev/null)
+(cd "$OLD_DIR" && sbt -batch compile >/dev/null)
 
 JAVA_OPTS=(
-  -Xmx32g -XX:+UseG1GC
+  -Xmx8g -XX:+UseG1GC
   --add-exports java.base/sun.nio.ch=ALL-UNNAMED
   --add-opens java.base/java.lang=ALL-UNNAMED
   --add-opens java.base/java.lang.invoke=ALL-UNNAMED
@@ -100,7 +62,7 @@ run_side() {  # side classes_root pass
   # JSON — the merge intersects, so mixed subsets are safe
   SPARK_GRAFT_ONLY="$QUERIES" SPARK_GRAFT_RUNS="$RUNS" \
   SPARK_GRAFT_SF_DIR=${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1} \
-  SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
+  SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-$(nproc)} \
   SPARK_GRAFT_BENCH_OUT="$out" \
     java "${JAVA_OPTS[@]}" -cp "$root/target/scala-2.13/classes:/opt/spark/jars/*" \
     graft.Bench >/dev/null 2>&1
@@ -112,7 +74,7 @@ run_side() {  # side classes_root pass
 
 for pass in $(seq 1 "$PASSES"); do
   echo "[bench_ab] pass $pass/$PASSES: old"
-  run_side old "$WT" "$pass"
+  run_side old "$OLD_DIR" "$pass"
   echo "[bench_ab] pass $pass/$PASSES: new"
   run_side new "$PWD" "$pass"
 done
