@@ -345,11 +345,18 @@ object Dedup {
     * candidate join (verification re-fetches signatures by id from the
     * one-row-per-doc frame instead — the same fetch-by-id-after-pairing
     * shape FuzzyJoin uses for strings).
+    *
+    * `_bucket` is a PERSISTED CONTRACT: [[minhashIndex]] frames that
+    * pipelines store between batches key on it, so its encoding must
+    * never change. Band `b` is
+    * `xxhash64(concat_ws(",", slice(_sig, b*rows + 1, rows)))` — XXH64,
+    * seed 42, over the band's values in decimal joined by commas.
+    * [[graft.functions.BandHashes]] computes exactly that in one pass,
+    * and BandHashesSpec checks it bit for bit against the composable form.
     */
   private def mhBandRows(sigs: DataFrame, bands: Int, rows: Int): DataFrame =
     sigs.select(col("_id"), col("_sig"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => xxhash64(concat_ws(",", slice(col("_sig"), b * rows + 1, lit(rows)))))))
+      posexplode(HashFunctions.band_hashes(col("_sig"), bands, rows)))
       .withColumnsRenamed(Map("pos" -> "_band", "col" -> "_bucket"))
 
   /** Estimated Jaccard: fraction of equal signature positions — a single
@@ -404,6 +411,8 @@ object Dedup {
     * Size: bands rows of (8B + 8B + 8B·bands·rows) per doc — signature
     * data, never text. Rebuild is embarrassingly parallel, so pipelines
     * typically append each accepted batch's banded rows to the index home.
+    * The `_bucket` values are a persisted contract (see [[mhBandRows]]):
+    * an index written by any earlier build joins with batches banded now.
     */
   def minhashIndex(df: DataFrame, id: String, shingles: Column,
       bands: Int = 16, rows: Int = 8, seed: Long = 42L): DataFrame =

@@ -2,10 +2,12 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData, XXH64}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** 64-bit mixing / hashing primitives shared by the sketch expressions.
@@ -66,7 +68,8 @@ case class MinHashSignature(child: Expression, k: Int, seed: Long)
 
 object MinHashSignature {
   def compute(arr: ArrayData, k: Int, seed: Long): ArrayData = {
-    val sig = Array.fill(k)(Long.MaxValue)
+    val sig = new Array[Long](k)
+    java.util.Arrays.fill(sig, Long.MaxValue)
     var i = 0
     val n = arr.numElements()
     while (i < n) {
@@ -81,7 +84,100 @@ object MinHashSignature {
       }
       i += 1
     }
-    new GenericArrayData(sig)
+    UnsafeArrayData.fromPrimitiveArray(sig)
+  }
+}
+
+/** LSH band buckets of a MinHash signature, one pass: element `b` is
+  * `xxhash64(concat_ws(",", slice(sig, b*rows + 1, rows)))` — XXH64 with
+  * Spark's default seed 42 over the band's values written in decimal and
+  * joined by commas. The composable form runs that lambda on the
+  * interpreted higher-order-function path (cast to string array, concat,
+  * hash, per band per doc); this writes the same bytes into one reused
+  * buffer and hashes them in place.
+  *
+  * The result is BIT-IDENTICAL to the composable form, including its edge
+  * cases: null elements are skipped as `concat_ws` skips them, a band past
+  * the end of a short signature hashes the empty string, and a null
+  * signature hashes every band as empty (`concat_ws` of a null array is
+  * ""), so the result is never null. Persisted MinHash indexes key on
+  * these values (see [[graft.dedup.Dedup.minhashIndex]]).
+  */
+case class BandHashes(child: Expression, bands: Int, rows: Int) extends UnaryExpression {
+  require(bands >= 1 && rows >= 1, "band_hashes: need bands >= 1 and rows >= 1")
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = false
+
+  override def eval(input: InternalRow): Any =
+    BandHashes.compute(child.eval(input).asInstanceOf[ArrayData], bands, rows,
+      new Array[Byte](BandHashes.bufferSize(rows)))
+
+  // the digit buffer is per generated-class instance (one per task
+  // thread), reused across rows and bands
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    val buf = ctx.addMutableState("byte[]", "bandBuf",
+      v => s"$v = new byte[${BandHashes.bufferSize(rows)}];")
+    ev.copy(code = code"""
+      |${c.code}
+      |${CodeGenerator.javaType(dataType)} ${ev.value} = graft.functions.BandHashes.compute(
+      |  ${c.isNull} ? null : ${c.value}, $bands, $rows, $buf);
+      |""".stripMargin, isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): BandHashes =
+    copy(child = newChild)
+}
+
+object BandHashes {
+  /** Spark's `xxhash64` default seed. */
+  private final val Seed = 42L
+  private val MinValueDigits = Long.MinValue.toString.getBytes("US-ASCII")
+  private val Pow10 = Array.iterate(1L, 19)(_ * 10)
+
+  /** One band's text: `rows` values of at most 20 characters plus commas. */
+  def bufferSize(rows: Int): Int = rows * 21
+
+  def compute(sig: ArrayData, bands: Int, rows: Int, buf: Array[Byte]): ArrayData = {
+    val n = if (sig == null) 0 else sig.numElements()
+    val out = new Array[Long](bands)
+    var b = 0
+    while (b < bands) {
+      var i = b * rows
+      val until = math.min(i + rows, n)
+      var len = 0
+      while (i < until) {
+        if (!sig.isNullAt(i)) {
+          if (len > 0) { buf(len) = ','; len += 1 }
+          len = putDecimal(buf, len, sig.getLong(i))
+        }
+        i += 1
+      }
+      out(b) = XXH64.hashUnsafeBytes(buf, Platform.BYTE_ARRAY_OFFSET, len, Seed)
+      b += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
+  /** `v` in decimal (as `Long.toString`) at `buf(pos)`; returns the end. */
+  private def putDecimal(buf: Array[Byte], pos: Int, v: Long): Int = {
+    if (v == Long.MinValue) {
+      System.arraycopy(MinValueDigits, 0, buf, pos, MinValueDigits.length)
+      return pos + MinValueDigits.length
+    }
+    var start = pos
+    var x = v
+    if (x < 0) { buf(start) = '-'; start += 1; x = -x }
+    var digits = 1
+    while (digits < 19 && x >= Pow10(digits)) digits += 1
+    var i = start + digits - 1
+    while (i >= start) {
+      buf(i) = ('0' + (x % 10)).toByte
+      x /= 10
+      i -= 1
+    }
+    start + digits
   }
 }
 
@@ -313,6 +409,93 @@ object SigMatchFrac {
   }
 }
 
+/** Size of the intersection of two SORTED arrays of (df, token) structs —
+  * the exact verify step of [[graft.operators.SetJoin.prefixJaccard]], in
+  * one merge pass. Both arrays must be in `sort_array` ascending order:
+  * nulls first, then by the long field, then by the string field's bytes
+  * (`binaryCompare`, the order `sort_array` uses for strings). Counts
+  * distinct common elements, as `size(array_intersect(a, b))` does: a null
+  * element present on both sides counts once, and duplicates count once.
+  *
+  * The generic `array_intersect` hashes every element of both arrays into
+  * a fresh set per call; this walks the two arrays once with no
+  * allocation beyond the element views. Null input → null.
+  */
+case class SortedIntersectSize(left: Expression, right: Expression)
+    extends BinaryExpression {
+
+  override def dataType: DataType = IntegerType
+
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    if (Seq(left, right).forall(e => SortedIntersectSize.isOrdArray(e.dataType)))
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+      s"sorted_intersect_size needs two array<struct<bigint, string>>, got " +
+        s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
+
+  override def nullSafeEval(a: Any, b: Any): Any =
+    SortedIntersectSize.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.SortedIntersectSize.compute($a, $b)")
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression)
+      : SortedIntersectSize = copy(left = newLeft, right = newRight)
+}
+
+object SortedIntersectSize {
+  private def isOrdArray(t: DataType): Boolean = t match {
+    case ArrayType(StructType(Array(StructField(_, LongType, _, _),
+        StructField(_, StringType, _, _))), _) => true
+    case _ => false
+  }
+
+  /** The element at `i` (null for a null element or past the end). */
+  @inline private def at(arr: ArrayData, n: Int, i: Int): InternalRow =
+    if (i >= n || arr.isNullAt(i)) null else arr.getStruct(i, 2)
+
+  /** `sort_array` ascending order: nulls first at both levels. */
+  private def compare(x: InternalRow, y: InternalRow): Int = {
+    if (x == null || y == null) return (if (x == null) 0 else 1) - (if (y == null) 0 else 1)
+    val xn = x.isNullAt(0)
+    val yn = y.isNullAt(0)
+    if (xn != yn) return if (xn) -1 else 1
+    if (!xn) {
+      val c = java.lang.Long.compare(x.getLong(0), y.getLong(0))
+      if (c != 0) return c
+    }
+    val xs = x.isNullAt(1)
+    val ys = y.isNullAt(1)
+    if (xs != ys) return if (xs) -1 else 1
+    if (xs) 0 else x.getUTF8String(1).binaryCompare(y.getUTF8String(1))
+  }
+
+  def compute(a: ArrayData, b: ArrayData): Int = {
+    val na = a.numElements()
+    val nb = b.numElements()
+    var i = 0
+    var j = 0
+    var x = at(a, na, 0)
+    var y = at(b, nb, 0)
+    var count = 0
+    while (i < na && j < nb) {
+      val c = compare(x, y)
+      if (c < 0) { i += 1; x = at(a, na, i) }
+      else if (c > 0) { j += 1; y = at(b, nb, j) }
+      else {
+        count += 1
+        // step both sides past every copy of the common element
+        val m = x
+        i += 1; x = at(a, na, i)
+        while (i < na && compare(x, m) == 0) { i += 1; x = at(a, na, i) }
+        j += 1; y = at(b, nb, j)
+        while (j < nb && compare(y, m) == 0) { j += 1; y = at(b, nb, j) }
+      }
+    }
+    count
+  }
+}
+
 /** Column wrappers + SQL registration for the sketch expressions.
   * Spark 4 moved Column↔Expression bridging to classic.ExpressionUtils.
   */
@@ -344,6 +527,12 @@ object HashFunctions {
 
   def sig_match_frac(a: Column, b: Column): Column =
     column(SigMatchFrac(expression(a), expression(b)))
+
+  def band_hashes(sig: Column, bands: Int, rows: Int): Column =
+    column(BandHashes(expression(sig), bands, rows))
+
+  def sorted_intersect_size(a: Column, b: Column): Column =
+    column(SortedIntersectSize(expression(a), expression(b)))
 
   def normalize_text(text: Column): Column =
     column(NormalizeText(expression(text)))

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.HashFunctions
+
 /** EXACT set-similarity self-join (Jaccard ≥ τ) via prefix filtering —
   * the AllPairs/PPJoin candidate scheme (Bayardo et al., WWW 2007;
   * Chaudhuri et al., ICDE 2006). Unlike the banded MinHash/SimHash paths
@@ -24,8 +26,8 @@ import org.apache.spark.sql.functions._
   * and prefixes hold each set's RAREST tokens, so the candidate join's
   * key distribution is exactly the df-smallest tail of the vocabulary:
   * stopwords never fan out. A 100-TB corpus pays |prefix| ≈ (1−τ)·|x|
-  * postings per set on low-df keys, then an array-intersect verify on
-  * surviving candidates only.
+  * postings per set on low-df keys, then a merge-count verify
+  * ([[graft.functions.SortedIntersectSize]]) on surviving candidates only.
   */
 object SetJoin {
 
@@ -43,19 +45,19 @@ object SetJoin {
     val dfreq = tok.groupBy(col("_t")).agg(count(lit(1)).as("_df"))
     // per-set tokens sorted (df asc, token asc) — the in-group sort is
     // bounded by the set size; the collect_list groups by the set's own
-    // id, so no cross-document buffer exists
+    // id, so no cross-document buffer exists. `_ord` serves both the
+    // prefix (its head) and the verify (a merge pass over two of them).
     val ordered = graft.Caches.track(tok.join(dfreq, "_t")
       .groupBy(col("_id"))
       .agg(sort_array(collect_list(struct(col("_df"), col("_t")))).as("_ord"))
-      .select(col("_id"),
-        transform(col("_ord"), s => s.getField("_t")).as("_ordtoks"),
-        size(col("_ord")).as("_len"))
+      .select(col("_id"), col("_ord"), size(col("_ord")).as("_len"))
       .persist())
     // prefix length p = len − ⌈τ·len⌉ + 1, integer ceil = (num·len + den − 1) div den
     val p = (col("_len") - expr(s"(_len * $num + ${den - 1}) DIV $den") + lit(1))
       .cast("int")
     val prefix = ordered.select(col("_id"), col("_len"),
-      explode(slice(col("_ordtoks"), lit(1), greatest(p, lit(1)))).as("_t"))
+      explode(slice(col("_ord"), lit(1), greatest(p, lit(1)))).as("_e"))
+      .select(col("_id"), col("_len"), col("_e._t").as("_t"))
     // candidates: prefix-token collision + size filter den·min ≥ num·max
     val a = prefix.select(col("_id").as("id_a"), col("_len").as("_la"), col("_t"))
     val b = prefix.select(col("_id").as("id_b"), col("_len").as("_lb"), col("_t"))
@@ -64,18 +66,25 @@ object SetJoin {
       .filter(lit(den) * least(col("_la"), col("_lb")) >=
         lit(num) * greatest(col("_la"), col("_lb")))
       .select(col("id_a"), col("id_b")).distinct()
-    // exact verify on candidates only
+    // exact verify on candidates only: one merge-count pass over the two
+    // (df, token)-sorted sets (a token has one df, so equal elements are
+    // equal tokens)
     val withSets = cand
-      .join(ordered.select(col("_id").as("id_a"), col("_ordtoks").as("_sa"),
+      .join(ordered.select(col("_id").as("id_a"), col("_ord").as("_sa"),
         col("_len").as("_la")), "id_a")
-      .join(ordered.select(col("_id").as("id_b"), col("_ordtoks").as("_sb"),
+      .join(ordered.select(col("_id").as("id_b"), col("_ord").as("_sb"),
         col("_len").as("_lb")), "id_b")
+    // den·inter ≥ num·uni with uni = la + lb − inter, written as
+    // (den + num)·inter ≥ num·(la + lb) so `inter` appears once: the
+    // optimizer inlines it into the pushed-down join condition once per
+    // reference, and each reference is one more merge pass per pair
     withSets
       .select(col("id_a"), col("id_b"),
-        size(array_intersect(col("_sa"), col("_sb"))).cast("long").as("inter"),
+        HashFunctions.sorted_intersect_size(col("_sa"), col("_sb")).cast("long").as("inter"),
         col("_la"), col("_lb"))
+      .filter(lit(den.toLong + num) * col("inter") >=
+        lit(num.toLong) * (col("_la") + col("_lb")).cast("long"))
       .select(col("id_a"), col("id_b"), col("inter"),
         (col("_la") + col("_lb") - col("inter")).cast("long").as("uni"))
-      .filter(lit(den.toLong) * col("inter") >= lit(num.toLong) * col("uni"))
   }
 }

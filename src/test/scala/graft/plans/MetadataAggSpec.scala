@@ -50,4 +50,16 @@ class MetadataAggSpec extends SparkSpec {
     assert(got.toSeq === plain.toSeq)
     assert(keys.map(spark.conf.getOption) === before)
   }
+
+  test("one footer child session per caller session, reused across calls") {
+    val before = keys.map(spark.conf.getOption)
+    val footer = graft.queries.PipelineQueries.footerSession(spark)
+    assert(footer ne spark)
+    assert(graft.queries.PipelineQueries.footerSession(spark) eq footer)
+    assert(footer.conf.get("spark.sql.parquet.aggregatePushdown") === "true")
+    // another caller session gets its own child
+    val other = spark.newSession()
+    assert(graft.queries.PipelineQueries.footerSession(other) ne footer)
+    assert(keys.map(spark.conf.getOption) === before)
+  }
 }

@@ -46,6 +46,12 @@ class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     collect(plan)(pf) ++ cached.flatMap(p => deepCollect(p)(pf))
   }
 
+  /** Every expression node matching `pf` in any operator of `plan`,
+    * cached subtrees included. */
+  private def exprsOf[T](plan: org.apache.spark.sql.execution.SparkPlan)(
+      pf: PartialFunction[org.apache.spark.sql.catalyst.expressions.Expression, T]): Seq[T] =
+    deepCollect(plan) { case p => p }.flatMap(_.expressions.flatMap(_.collect(pf)))
+
   test("filter and projection reach the parquet scan (pushdown + pruning)") {
     val q = GraftSession.table(spark, dir, "lineitem")
       .filter(col("l_quantity") > 25)
@@ -611,6 +617,25 @@ class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(deepCollect(plan) {
       case w: org.apache.spark.sql.execution.window.WindowExec => w
     }.isEmpty, plan.toString)
+    // the verify is the merge-count kernel, not the generic hash-set
+    // intersect (which ran three times per candidate pair)
+    assert(exprsOf(plan) { case e: org.apache.spark.sql.catalyst.expressions.ArrayIntersect => e }
+      .isEmpty, plan.toString)
+    // at most one pass in the join condition, one in the projection
+    val kernels = exprsOf(plan) { case e: graft.functions.SortedIntersectSize => e }
+    assert(kernels.nonEmpty && kernels.size <= 2, plan.toString)
+  }
+
+  test("minhash banding: one band_hashes pass, no interpreted transform/concat_ws lambda") {
+    val docs = GraftSession.table(spark, dir, "documents")
+      .withColumn("_toks", graft.functions.TextFunctions.tokens(col("text")))
+    val plan = executed(graft.dedup.Dedup.minhash(docs, "doc_id",
+      graft.functions.TextFunctions.shinglesOf(col("_toks"), 3), threshold = 0.5))
+    assert(exprsOf(plan) {
+      case e: org.apache.spark.sql.catalyst.expressions.ArrayTransform => e
+      case e: org.apache.spark.sql.catalyst.expressions.ConcatWs => e
+    }.isEmpty, plan.toString)
+    assert(exprsOf(plan) { case e: graft.functions.BandHashes => e }.nonEmpty, plan.toString)
   }
 
   test("winsorize: thresholds broadcast back; the cumulative window sees counts, not rows") {
