@@ -318,13 +318,10 @@ object Bench {
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,"sf":"$sfDir","cpus":$cpus,"contended":$contended,"busySiblings":{"start":$busyStart,"end":$busyEnd},"loadNoisy":$loadNoisy,"loadClimbQueries":$loadClimbJson,"failed":$failedJson,"queries_min":$qsMin,"queries":$qs,"queries_med":$qs,"queries_runs":$qsRuns,"diag":$qsDiag}"""
     System.out.println(line)
-    // a SPARK_GRAFT_ONLY subset run must NEVER clobber the committed
-    // round artifact: a later `git add -u` would silently promote a
-    // 4-query iteration file to the round's bench (it happened — r12),
-    // which is exactly the artifact drift tools/freshness.py polices.
-    // Subset runs default to /tmp; the full set defaults to an artifact
-    // stamped with the core count, so an 8-core rerun cannot overwrite
-    // the 32-core numbers.
+    // a SPARK_GRAFT_ONLY subset run must never be mistaken for a
+    // full-set record: subset runs default to /tmp; the full set defaults
+    // to a file stamped with the core count, so an 8-core rerun cannot
+    // overwrite the 32-core numbers.
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       if (only.isDefined) s"${sys.props("java.io.tmpdir")}/BENCH_SUBSET.json"
       else s"BENCH_LAST_c$cpus.json")

@@ -53,9 +53,9 @@ object GraftSession {
     *    every codegen unit run on the stream thread, although the
     *    generated bodies are byte-identical — measured as 13-30 compiles
     *    (~0.5-1.2 s) per rerun on every stream_* query (stream_window
-    *    compilesRuns [23,13,13] → [23,0,0] with this off; the cache-key
-    *    diff tool graft.tools.CodegenCacheDiff showed the 13 recompiled
-    *    keys differing only in the classloader weak-ref). This engine
+    *    compilesRuns [23,13,13] → [23,0,0] with this off; a diff of the
+    *    compile cache's keys across reruns showed the 13 recompiled keys
+    *    differing only in the classloader weak-ref). This engine
     *    never calls addArtifact, so isolation is inert here and disabling
     *    it is semantics-identical; a deployment that adds session JARs
     *    should turn it back on and pay the restart recompiles.

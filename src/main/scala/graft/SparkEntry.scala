@@ -71,10 +71,9 @@ object SparkEntry {
     * session) via the query modules' memo/persistedIndex discipline, so
     * within one bench session run 1 used to pay the one-off training +
     * index write while runs 2+ hit the memo — a timed region that
-    * differed across runs of the same query (r15 VERDICT item 1 of
-    * "What's wrong"). Bench executes these once UNTIMED at startup (the
-    * same place its JIT/parquet warm-up lives) so every timed run
-    * measures the identical serving-only region. Index-BUILD queries
+    * differed across runs of the same query. Bench executes these once
+    * UNTIMED at startup (the same place its JIT/parquet warm-up lives) so
+    * every timed run measures the identical serving-only region. Index-BUILD queries
     * (`ann_ivf`, `semdedup`, `cluster_prune`, …) are deliberately NOT
     * here: there the build is the measured operator.
     */

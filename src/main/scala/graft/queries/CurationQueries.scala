@@ -462,7 +462,7 @@ object CurationQueries {
       * any fixture where selection does anything at all, while still
       * failing if the Gumbel draw ignores the weights. r6's midpoint
       * (0.5·gap) bar STILL flaked on a regenerated fixture
-      * (CORRECTNESS_r06 hash_match=false); quarter-gap keeps the
+      * (its oracle hash stopped matching); quarter-gap keeps the
       * discriminating power — a uniform draw concentrates at base with
       * σ ≈ √(p(1−p)/100) ≈ 0.05, so a ≥ 0.13-wide quarter-gap sits
       * ~2.5σ above it — while giving the weighted draw (measured at
@@ -907,7 +907,7 @@ object CurationQueries {
         .select(col("doc_id"), col("text"))
       graft.streaming.StreamOps.drainToBatch(
         dedupLinesCols(withDupLinePlants(stream, "\n")),
-        outputMode = "append", statePartitions = 8)
+        outputMode = "append")
     },
 
     /** The COMPLETE Gopher n-gram repetition gate in one query: top-gram
@@ -946,8 +946,7 @@ object CurationQueries {
       val gated = repetitionGateCols(stream
         .select(explode(gatePlantVariants).as("_v"))
         .select(col("_v.doc_id").as("doc_id"), col("_v.text").as("text")))
-      graft.streaming.StreamOps.drainToBatch(gated, outputMode = "append",
-        statePartitions = 8)
+      graft.streaming.StreamOps.drainToBatch(gated, outputMode = "append")
     },
 
     /** The C4 cleaning pass ([[c4FilterCols]]): line rules (terminal
@@ -977,8 +976,7 @@ object CurationQueries {
       val cleaned = c4FilterCols(stream
         .select(explode(c4PlantVariants).as("_v"))
         .select(col("_v.doc_id").as("doc_id"), col("_v.text").as("text")))
-      graft.streaming.StreamOps.drainToBatch(cleaned, outputMode = "append",
-        statePartitions = 8)
+      graft.streaming.StreamOps.drainToBatch(cleaned, outputMode = "append")
     },
 
     /** EXACT set-similarity self-join ([[graft.operators.SetJoin

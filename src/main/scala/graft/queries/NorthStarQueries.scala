@@ -88,7 +88,7 @@ object NorthStarQueries {
   private def memoCentroids(s: SparkSession, tag: String, dir: String,
       corpus: DataFrame, nCells: Int = 16): Array[Array[Double]] =
     // nCells is part of the key: a tag reused with a different cell count
-    // must retrain, not alias the other shape's centroids (ADVICE r15)
+    // must retrain, not alias the other shape's centroids
     centroidMemo.computeIfAbsent(s"$tag|$nCells|$dir|${s.sparkContext.applicationId}",
       _ => graft.similarity.Ivf.trainCentroids(corpus, "vec_id", "embedding", nCells))
 
@@ -472,8 +472,7 @@ object NorthStarQueries {
         .select(col("doc_id"), graft.functions.UrlFunctions.canonicalHost(cu).as("host"))
       val kept = graft.operators.Blocklist.filterBlockedBroadcast(
         stream, col("host"), blocklist)
-      graft.streaming.StreamOps.drainToBatch(kept, outputMode = "append",
-        statePartitions = 8)
+      graft.streaming.StreamOps.drainToBatch(kept, outputMode = "append")
     },
 
     /** Boilerplate-line removal ([[Dedup.stripFrequentLines]] — the
@@ -530,8 +529,7 @@ object NorthStarQueries {
         .parquetStream(s, s"$dir/documents.parquet")
         .filter(col("doc_id") >= 400)
       val cleaned = Dedup.stripLinesBroadcast(stream, idx, "doc_id", boilerplateMtext)
-      graft.streaming.StreamOps.drainToBatch(cleaned, outputMode = "append",
-        statePartitions = 8)
+      graft.streaming.StreamOps.drainToBatch(cleaned, outputMode = "append")
     },
 
     /** Canonical text normalization ([[TextFunctions.normalizeText]] —
@@ -933,8 +931,7 @@ object NorthStarQueries {
         .select(col("vec_id"), col("embedding"))
       val agg = graft.similarity.Ivf.searchTopKAgg(qs, indexed,
         "vec_id", "embedding", centroids, k = AnnK, nProbe = 16)
-      graft.streaming.StreamOps.drainToBatch(agg, outputMode = "complete",
-          statePartitions = 8)
+      graft.streaming.StreamOps.drainToBatch(agg, outputMode = "complete")
         .select(col("query_id"), posexplode(col("_top")))
         .select(col("query_id"), col("col.id").as("neighbor_id"),
           (col("pos") + 1).as("rank"))

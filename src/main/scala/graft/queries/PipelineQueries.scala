@@ -540,12 +540,12 @@ object PipelineQueries {
       daily.withColumn("n",
           when(col("event_date").isin(badDays: _*), lit(-1L)).otherwise(col("n")))
         .write.mode("overwrite").partitionBy("event_date").parquet(out)
-      // backfill: recompute ONLY the bad days' rows, dynamic overwrite
-      graft.GraftSession.withConfs(s,
-        Map("spark.sql.sources.partitionOverwriteMode" -> "dynamic")) {
-        daily.filter(col("event_date").isin(badDays: _*))
-          .write.mode("overwrite").partitionBy("event_date").parquet(out)
-      }
+      // backfill: recompute ONLY the bad days' rows, dynamic overwrite.
+      // The writer option takes precedence over the session conf, so the
+      // session (shared with concurrently running flows) is never touched.
+      daily.filter(col("event_date").isin(badDays: _*))
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("event_date").parquet(out)
       s.read.parquet(out)
         .select(col("event_date").cast(StringType).as("event_date"),
           col("event_type"), col("n"), col("sum_uid"))
@@ -728,7 +728,7 @@ object PipelineQueries {
         aggs = Seq(count(lit(1)).as("n"),
           sum(col("value").cast(DecimalType(18, 6))).cast(DecimalType(28, 6))
             .cast(DoubleType).as("sum_v")))
-      StreamOps.drainToBatch(agg, statePartitions = 8)
+      StreamOps.drainToBatch(agg)
         .select(col("window.start").as("window_start"), col("event_type"), col("n"), col("sum_v"))
     },
 
@@ -749,7 +749,7 @@ object PipelineQueries {
           sum(col("value").cast(DecimalType(18, 2))).cast(DoubleType)
             .as("sum_v")),
         slide = Some("30 minutes"))
-      StreamOps.drainToBatch(agg, statePartitions = 8)
+      StreamOps.drainToBatch(agg)
         .select(unix_micros(col("window.start").cast(TimestampType))
             .as("win_start_us"),
           col("event_type"), col("n"), col("sum_v"))
@@ -767,7 +767,7 @@ object PipelineQueries {
         StreamOps.parquetStream(s, s"$dir/events.parquet"))
       val out = StreamOps.resampleStream(raw, keyCol = "user_id",
         tsCol = "ts", valueCol = "value", intervalUs = 21600000000L)
-      StreamOps.drainToBatch(out.toDF(), outputMode = "append", statePartitions = 8)
+      StreamOps.drainToBatch(out.toDF(), outputMode = "append")
         .select(col("key").as("user_id"), col("bucket_us"),
           col("n_events"), col("v_fill"))
     },
@@ -786,7 +786,7 @@ object PipelineQueries {
         StreamOps.parquetStream(s, s"$dir/events.parquet"))
       val out = StreamOps.sessionizeStream(raw, keyCol = "user_id",
         tsCol = "ts", gapSeconds = 86400L)
-      StreamOps.drainToBatch(out.toDF(), outputMode = "append", statePartitions = 8,
+      StreamOps.drainToBatch(out.toDF(), outputMode = "append",
           confOverrides = Map("spark.sql.streaming.stateStore.providerClass" ->
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
         .select(col("key").as("user_id"), col("start_us"), col("end_us"),
@@ -806,7 +806,7 @@ object PipelineQueries {
       val agg = StreamOps.windowedAgg(raw, "ts", "1 day", "2 hours",
         keys = Seq(),
         aggs = Seq(approx_count_distinct(col("user_id")).as("approx_users")))
-      val drained = StreamOps.drainToBatch(agg, statePartitions = 8)
+      val drained = StreamOps.drainToBatch(agg)
         .select(col("window.start").as("day_start"), col("approx_users"))
       val exact = table(s, dir, "events")
         .groupBy(date_trunc("day", col("ts")).as("day_start"))
@@ -873,7 +873,7 @@ object PipelineQueries {
           (col("valid_to").isNull || col("_tus") < col("valid_to")))
       val agg = joined.groupBy(col("version_id"))
         .agg(count(lit(1)).as("n_clicks"))
-      StreamOps.drainToBatch(agg, outputMode = "complete", statePartitions = 8)
+      StreamOps.drainToBatch(agg, outputMode = "complete")
         .select(col("version_id"), col("n_clicks"))
     },
 
@@ -896,7 +896,7 @@ object PipelineQueries {
         aggs = Seq(count(lit(1)).as("n"),
           sum(col("value").cast(DecimalType(18, 6))).cast(DecimalType(28, 6))
             .cast(DoubleType).as("sum_v")))
-      StreamOps.drainToBatch(agg, statePartitions = 8)
+      StreamOps.drainToBatch(agg)
         .select(col("window.start").as("day_start"), col("c_mktsegment"),
           col("n"), col("sum_v"))
     },
@@ -913,7 +913,7 @@ object PipelineQueries {
         StreamOps.parquetStream(s, s"$dir/events.parquet"))
       val out = StreamOps.quotaStream(raw, keyCol = "user_id", tsCol = "ts",
         idCol = "event_id", k = 10)
-      StreamOps.drainToBatch(out.toDF(), outputMode = "append", statePartitions = 8,
+      StreamOps.drainToBatch(out.toDF(), outputMode = "append",
           confOverrides = Map("spark.sql.streaming.stateStore.providerClass" ->
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
         .select(col("key").as("user_id"), col("us"), col("event_id"))
@@ -934,7 +934,7 @@ object PipelineQueries {
         steps = Seq(col("event_type") === "view", col("event_type") === "click",
           col("event_type") === "purchase"),
         windowUs = 7L * 86400L * 1000000L)
-      StreamOps.drainToBatch(out.toDF(), outputMode = "append", statePartitions = 8,
+      StreamOps.drainToBatch(out.toDF(), outputMode = "append",
           confOverrides = Map("spark.sql.streaming.stateStore.providerClass" ->
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
         .select(col("key").as("user_id"), col("steps_reached"), col("t0_us"))
@@ -956,7 +956,7 @@ object PipelineQueries {
           col("event_type") === "purchase"),
         exclude = col("event_type") === "error",
         windowUs = 7L * 86400L * 1000000L)
-      StreamOps.drainToBatch(out.toDF(), outputMode = "append", statePartitions = 8,
+      StreamOps.drainToBatch(out.toDF(), outputMode = "append",
           confOverrides = Map("spark.sql.streaming.stateStore.providerClass" ->
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
         .select(col("key").as("user_id"), col("t0_us"), col("t_last_us"))
@@ -978,7 +978,7 @@ object PipelineQueries {
       val joined = StreamOps.intervalJoin(
         side("click", "c"), "c_ts", side("purchase", "p"), "p_ts",
         keys = Seq("c_user" -> "p_user"), within = "30 minutes", watermark = "2 hours")
-      StreamOps.drainToBatch(joined, outputMode = "append", statePartitions = 8)
+      StreamOps.drainToBatch(joined, outputMode = "append")
         .select(col("c_user").as("user_id"), col("c_id").as("click_id"),
           col("p_id").as("purchase_id"), col("p_value").as("purchase_value"))
     },
@@ -1003,7 +1003,7 @@ object PipelineQueries {
         side("click", "c"), "c_ts", side("purchase", "p"), "p_ts",
         keys = Seq("c_user" -> "p_user"), within = "30 minutes",
         watermark = "2 hours", joinType = "left_outer")
-      StreamOps.drainToBatch(joined, outputMode = "append", statePartitions = 8)
+      StreamOps.drainToBatch(joined, outputMode = "append")
         .select(col("c_user").as("user_id"), col("c_id").as("click_id"),
           col("p_id").as("purchase_id"), col("p_value").as("purchase_value"))
     },
@@ -1025,7 +1025,7 @@ object PipelineQueries {
       val perHour = perUser
         .groupBy(col("window"))
         .agg(count(lit(1)).as("n_users"), sum(col("_n")).as("n_events"))
-      StreamOps.drainToBatch(perHour, outputMode = "append", statePartitions = 8)
+      StreamOps.drainToBatch(perHour, outputMode = "append")
         .select(col("window.start").as("window_start"), col("n_users"),
           col("n_events"))
     },
@@ -1049,7 +1049,7 @@ object PipelineQueries {
         .groupBy(window(col("ts"), "1 hour"))
         .agg(graft.functions.AggExpressions.topkPairAgg(
           col("value_c"), col("event_id"), 3).as("_top"))
-      StreamOps.drainToBatch(agg, outputMode = "append", statePartitions = 8)
+      StreamOps.drainToBatch(agg, outputMode = "append")
         .select(col("window.start").as("window_start"), posexplode(col("_top")))
         .select(col("window_start"), (col("pos") + 1).as("rank"),
           col("col.score").as("value_c"), col("col.id").as("event_id"))
@@ -1065,7 +1065,7 @@ object PipelineQueries {
         StreamOps.parquetStream(s, s"$dir/events.parquet"))
       val deduped = StreamOps.dedupStream(raw, "ts", watermark = "2 hours",
         keys = Seq("user_id", "event_type"))
-      StreamOps.drainToBatch(deduped, outputMode = "append", statePartitions = 8)
+      StreamOps.drainToBatch(deduped, outputMode = "append")
         .select(col("user_id"), col("event_type"))
     }
   )

@@ -680,20 +680,21 @@ object StreamOps {
     * "append" for plain transforms, "update" for stateful operators.
     */
   def drainToBatch(stream: DataFrame, outputMode: String = "complete",
-      statePartitions: Int = -1,
       confOverrides: Map[String, String] = Map.empty): DataFrame = {
     val spark = stream.sparkSession
     val name = s"graft_stream_${nameCounter.incrementAndGet()}"
     // Pinned for the query's START, restored after (GraftSession.withConfs):
     // - confOverrides: what a stateful operator needs at start (e.g. the
     //   RocksDB provider transformWithState requires);
-    // - shuffle partitions: the stateful-operator partition count is a
-    //   first-class streaming knob — frozen into the checkpoint at first
-    //   start, and every micro-batch commits one state-store delta PER
-    //   partition PER stateful operator, so it must be sized to state
-    //   volume (keys in the watermark horizon), not the batch shuffle
-    //   default; tiny local streams wear 32 near-empty store commits per
-    //   batch otherwise, a 100 TB/day stream sizes it up instead.
+    // - shuffle partitions = statePartitions: the stateful-operator
+    //   partition count is frozen into the checkpoint at first start, and
+    //   every micro-batch commits one state-store delta PER partition PER
+    //   stateful operator, so it is sized to state volume (keys in the
+    //   watermark horizon), not the batch shuffle default. Every drained
+    //   stream here is small and local, and would otherwise wear 32
+    //   near-empty store commits per batch; a 100 TB/day stream would size
+    //   it up instead. Results do not depend on the count.
+    val statePartitions = 8
     // complete-mode drains skip the trailing NO-DATA micro-batch: its only
     // purposes are advancing the watermark to EMIT append-mode results and
     // firing update-mode state timeouts — a complete-mode sink re-emits the
@@ -705,9 +706,7 @@ object StreamOps {
         Map("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
       else Map.empty[String, String]) ++
       confOverrides ++
-      (if (statePartitions > 0)
-        Map("spark.sql.shuffle.partitions" -> statePartitions.toString)
-      else Map.empty)
+      Map("spark.sql.shuffle.partitions" -> statePartitions.toString)
     // the drain is a synchronous test/verify sink, so its checkpoint needs
     // no durability — put state-store deltas on the RAM disk when one
     // exists (a production stream would point checkpointLocation at

@@ -364,7 +364,7 @@ object Scale10 {
     * for exactly the same reason (spark.local.dir is static conf, so it
     * must land in the builder, not on a live session).
     */
-  private[tools] def probeSession(): SparkSession = {
+  private def probeSession(): SparkSession = {
     val shm = new java.io.File("/dev/shm")
     val scratch = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
       if (shm.isDirectory && shm.canWrite) "/dev/shm/graft_local"

@@ -63,10 +63,14 @@ class SessionProfileSpec extends SparkSpec {
       val pins =
         if ("conf[P]ins".r.findFirstIn(src).isDefined) Seq(s"$rel mentions the per-query pin map")
         else Nil
-      val harnessConfs =
-        if (Set("Bench.scala", "Verify.scala")(f.getName) && src.contains("withConfs("))
+      // a harness or a query that pins confs on its session changes what
+      // a concurrently running sibling flow plans with
+      val sessionConfs =
+        if ((Set("Bench.scala", "Verify.scala")(f.getName) ||
+              rel.toString.startsWith("src/main/scala/graft/queries/")) &&
+            src.contains("withConfs("))
           Seq(s"$rel calls withConfs(") else Nil
-      builders ++ keys ++ pins ++ harnessConfs
+      builders ++ keys ++ pins ++ sessionConfs
     }
     assert(violations.isEmpty, violations.mkString("\n"))
   }

@@ -5,8 +5,8 @@ import org.scalacheck.Gen
 import graft.SparkSpec
 import graft.operators.{Intervals, RangeJoin}
 
-/** Round-11 seam fuzz: the two Long-extreme edges this round's ADVICE
-  * named — [[Intervals.merge]]'s negative-`minGap` branch (the island
+/** Round-11 seam fuzz: the two Long-extreme edges of
+  * [[Intervals.merge]]'s negative-`minGap` branch (the island
   * test now runs in pure long arithmetic with a compile-time sliver
   * guard; the underflow side is a NEW code path) and
   * [[RangeJoin.rangeJoin]]'s default bucket width for windows spanning

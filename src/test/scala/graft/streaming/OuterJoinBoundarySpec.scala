@@ -47,8 +47,7 @@ class OuterJoinBoundarySpec extends SparkSpec {
       side("click", "c"), "c_ts", side("purchase", "p"), "p_ts",
       keys = Seq("c_user" -> "p_user"), within = "30 minutes",
       watermark = "2 hours", joinType = "left_outer")
-    val got = StreamOps.drainToBatch(joined, outputMode = "append",
-        statePartitions = 4)
+    val got = StreamOps.drainToBatch(joined, outputMode = "append")
       .filter(col("p_id").isNull).select("c_id").as[Long].collect().toSet
     // wm = maxUs − 2h; eviction needs c_ts + 30min < wm STRICTLY:
     // off 9000 s sits exactly ON the boundary and must NOT emit
@@ -72,8 +71,7 @@ class OuterJoinBoundarySpec extends SparkSpec {
       .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "1 hour"))
       .agg(count(lit(1)).as("n"))
-    val ends = StreamOps.drainToBatch(agg, outputMode = "append",
-        statePartitions = 4)
+    val ends = StreamOps.drainToBatch(agg, outputMode = "append")
       .select((col("window.end").cast("long") * 1000000L - base).as("e"))
       .as[Long].collect().toSet
     assert(ends.contains(9L * h), "window below the watermark failed to emit")

@@ -323,7 +323,7 @@ class ApproxSpec extends SparkSpec {
       slide = Some("30 minutes"))
     def asSet(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-    val got = asSet(StreamOps.drainToBatch(agg, statePartitions = 4)
+    val got = asSet(StreamOps.drainToBatch(agg)
       .select(unix_micros(col("window.start").cast("timestamp")).as("w"),
         col("event_type"), col("n")))
     val ev = graft.GraftSession.table(spark, dir, "events")

@@ -7,7 +7,7 @@
 # to be ~2.4% FASTER. This script exports OLD_SHA with `git archive`,
 # compiles both sides, and runs the same query subset ALTERNATING old/new
 # binaries (each pass pairs the two sides inside the same minutes of host
-# weather), then writes per-query paired min ratios to BENCH_AB.json.
+# weather), then writes per-query paired min ratios to OUT.
 # Judge regressions on these ratios (<= 1.05 = clean).
 #
 # Usage: QUERIES=q1,q2 tools/bench_ab.sh [OLD_SHA]
@@ -16,7 +16,7 @@
 #   QUERIES  comma list of SparkEntry query names (required)
 #   PASSES   alternating passes per binary (default 3)
 #   RUNS     Bench runs per query per pass (default 2)
-#   OUT      output artifact (default BENCH_AB.json)
+#   OUT      output file (default /tmp/BENCH_AB.json)
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -28,7 +28,7 @@ OLD_SHA=$(git rev-parse "${1:-HEAD^}")
 NEW_SHA=$(git rev-parse HEAD)
 PASSES=${PASSES:-3}
 RUNS=${RUNS:-2}
-OUT=${OUT:-BENCH_AB.json}
+OUT=${OUT:-/tmp/BENCH_AB.json}
 OLD_DIR=$(mktemp -d /tmp/graft_ab_old.XXXXXX)
 echo "[bench_ab] old=$OLD_SHA new=$NEW_SHA"
 echo "[bench_ab] subset: $QUERIES"
