@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Session bootstrap for the graft engine: [[GraftSession.builder]] is
-  * its one session profile.
+  * its one session profile, and [[GraftSession.pinned]] is the one route
+  * for work that needs confs the profile lacks.
   *
   * The reference engine forces Kryo and broadcasts the Hadoop conf at
   * startup (reference: runtime/src/main/scala/com/asakusafw/spark/runtime/
@@ -156,21 +157,18 @@ object GraftSession {
     }
   }
 
-  /** Run `body` with session confs pinned, restoring previous values
-    * (or unsetting) afterwards — the shared form of the save/set/try/
-    * finally-restore pattern the sinks and streaming drains need around
-    * plan-time settings. The pins are visible to every flow on `spark`
-    * while `body` runs; a flow that must not share them runs on
-    * `spark.newSession()` instead (as `metadata_agg` does).
+  /** A short-lived clone of `spark` with `pins` set on it: the one route
+    * for work that needs confs the profile lacks. The clone keeps the
+    * caller's runtime confs, temp views and `QueryExecutionListener`s, so
+    * listeners on the caller still see the work, and the caller's confs
+    * are never written, so a flow running concurrently on `spark` plans
+    * as before. Each call clones afresh: a cached clone would hold a stale
+    * copy of the caller's confs.
     */
-  def withConfs[A](spark: SparkSession, pins: Map[String, String])(body: => A): A = {
-    val saved = pins.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    pins.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
+  def pinned(spark: SparkSession, pins: Map[String, String]): SparkSession = {
+    val clone = org.apache.spark.sql.graftbridge.Bridge.cloneSession(spark)
+    pins.foreach { case (k, v) => clone.conf.set(k, v) }
+    clone
   }
 
   /** Load one of the fixture tables from a scale-factor directory, with

@@ -839,19 +839,12 @@ object Dedup {
     // - !cacheInput (banding cheap to recompute, e.g. hyperplane signs):
     //   the output cache is the ONLY materialization, so it is the frame
     //   whose lazy fill would stampede the recompute — fill it eagerly.
-    //
-    // `spark.graft.bucketGuard.eagerFill=false` skips the
-    // construction-time action for plan-audit / explain / dry-run paths
-    // that never execute the frame (the fill is a perf guard, not a
-    // correctness requirement — lazy fills produce identical results).
-    val eager = df.sparkSession.conf
-      .get("spark.graft.bucketGuard.eagerFill", "true").toBoolean
     if (cache && cacheInput) {
-      if (eager) cached.count()
+      cached.count()
       graft.Caches.track(guarded.persist())
     } else if (cache) {
       val out = graft.Caches.track(guarded.persist())
-      if (eager) out.count()
+      out.count()
       out
     } else guarded
   }

@@ -47,25 +47,6 @@ object PipelineQueries {
     out
   }
 
-  /** One footer-read child session per caller session (`newSession`,
-    * same SparkContext) with parquet aggregate pushdown on and parquet
-    * removed from the v1 fallback list. It is built once and reused: a
-    * fresh child per call paid its first analysis and planning every
-    * time. Nothing but `metadata_agg` uses it and its confs are fixed at
-    * creation, so reuse shares no mutable state; the caller's confs are
-    * never touched. Weak keys let a dropped caller session go.
-    */
-  private val footerSessions =
-    java.util.Collections.synchronizedMap(new java.util.WeakHashMap[SparkSession, SparkSession]())
-
-  private[graft] def footerSession(s: SparkSession): SparkSession =
-    footerSessions.computeIfAbsent(s, _ => {
-      val footer = s.newSession()
-      footer.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-      footer.conf.set("spark.sql.sources.useV1SourceList", "")
-      footer
-    })
-
   /** Decimal-exact per-status aggregate of the valid port, quarantine
     * count riding every row.
     */
@@ -175,14 +156,18 @@ object PipelineQueries {
       * COUNT/MIN/MAX answered from row-group statistics without reading a
       * single data page — the 100 TB "how big is this table" query at
       * metadata cost. Pushdown exists only on the DSv2 read path, so the
-      * aggregate runs on the caller's footer child session
-      * ([[footerSession]]); its one row comes back on `s` with the same
-      * schema. The caller's session confs are never touched, so no
-      * concurrent flow sees them. MetadataAggSpec checks
-      * PushedAggregation in the scan.
+      * aggregate runs on a [[graft.GraftSession.pinned]] clone with
+      * parquet aggregate pushdown on and parquet removed from the v1
+      * fallback list; its one row comes back on `s` with the same schema.
+      * The caller's session confs are never touched, so no concurrent
+      * flow sees them. MetadataAggSpec checks PushedAggregation in the
+      * scan.
       */
     "metadata_agg" -> { (s, dir) =>
-      val agg = footerSession(s).read.parquet(s"$dir/lineitem.parquet")
+      val footer = graft.GraftSession.pinned(s, Map(
+        "spark.sql.parquet.aggregatePushdown" -> "true",
+        "spark.sql.sources.useV1SourceList" -> ""))
+      val agg = footer.read.parquet(s"$dir/lineitem.parquet")
         .agg(count(lit(1)).as("n"),
           min(col("l_orderkey")).as("min_key"), max(col("l_orderkey")).as("max_key"),
           min(col("l_partkey")).as("min_part"), max(col("l_partkey")).as("max_part"))
@@ -786,9 +771,7 @@ object PipelineQueries {
         StreamOps.parquetStream(s, s"$dir/events.parquet"))
       val out = StreamOps.sessionizeStream(raw, keyCol = "user_id",
         tsCol = "ts", gapSeconds = 86400L)
-      StreamOps.drainToBatch(out.toDF(), outputMode = "append",
-          confOverrides = Map("spark.sql.streaming.stateStore.providerClass" ->
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
+      StreamOps.drainToBatch(out.toDF(), outputMode = "append")
         .select(col("key").as("user_id"), col("start_us"), col("end_us"),
           col("n_events"))
     },
@@ -913,9 +896,7 @@ object PipelineQueries {
         StreamOps.parquetStream(s, s"$dir/events.parquet"))
       val out = StreamOps.quotaStream(raw, keyCol = "user_id", tsCol = "ts",
         idCol = "event_id", k = 10)
-      StreamOps.drainToBatch(out.toDF(), outputMode = "append",
-          confOverrides = Map("spark.sql.streaming.stateStore.providerClass" ->
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
+      StreamOps.drainToBatch(out.toDF(), outputMode = "append")
         .select(col("key").as("user_id"), col("us"), col("event_id"))
     },
 
@@ -934,9 +915,7 @@ object PipelineQueries {
         steps = Seq(col("event_type") === "view", col("event_type") === "click",
           col("event_type") === "purchase"),
         windowUs = 7L * 86400L * 1000000L)
-      StreamOps.drainToBatch(out.toDF(), outputMode = "append",
-          confOverrides = Map("spark.sql.streaming.stateStore.providerClass" ->
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
+      StreamOps.drainToBatch(out.toDF(), outputMode = "append")
         .select(col("key").as("user_id"), col("steps_reached"), col("t0_us"))
     },
 
@@ -956,9 +935,7 @@ object PipelineQueries {
           col("event_type") === "purchase"),
         exclude = col("event_type") === "error",
         windowUs = 7L * 86400L * 1000000L)
-      StreamOps.drainToBatch(out.toDF(), outputMode = "append",
-          confOverrides = Map("spark.sql.streaming.stateStore.providerClass" ->
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
+      StreamOps.drainToBatch(out.toDF(), outputMode = "append")
         .select(col("key").as("user_id"), col("t0_us"), col("t_last_us"))
     },
 

@@ -1,6 +1,7 @@
 package graft.sinks
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Write-side file sizing: the OTHER answer to the small-files problem.
   * [[Compact]] repairs a table after many tiny writes; this prevents them
@@ -23,20 +24,22 @@ import org.apache.spark.sql.DataFrame
 object Sized {
 
   /** Write `df` with AQE choosing the file count from `targetShuffleBytes`
-    * per output partition. Conf pins are applied for this write and
-    * restored after (plan-time settings, results never depend on them).
+    * per output partition. The write runs on a [[graft.GraftSession.pinned]]
+    * clone carrying the advisory and minimum partition sizes (plan-time
+    * settings, results never depend on them); the caller's session is
+    * never written. The minimum has no per-node twin: AQE's coalesce
+    * target is max(min(total / parallelism, advisory), minPartitionSize),
+    * so both stay session confs.
     */
   def rebalancedWrite(df: DataFrame, path: String, targetShuffleBytes: Long,
       format: String = "parquet",
       options: Map[String, String] = Map.empty): Unit = {
     require(targetShuffleBytes > 0, "rebalancedWrite: target must be positive")
-    val spark = df.sparkSession
-    graft.GraftSession.withConfs(spark, Map(
+    val sized = graft.GraftSession.pinned(df.sparkSession, Map(
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> targetShuffleBytes.toString,
       "spark.sql.adaptive.coalescePartitions.minPartitionSize" ->
-        math.max(targetShuffleBytes / 4, 1L).toString)) {
-      df.hint("rebalance").write.mode("overwrite")
-        .format(format).options(options).save(path)
-    }
+        math.max(targetShuffleBytes / 4, 1L).toString))
+    Bridge.ofRows(sized, df.queryExecution.analyzed).hint("rebalance")
+      .write.mode("overwrite").format(format).options(options).save(path)
   }
 }

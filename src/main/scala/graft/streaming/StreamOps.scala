@@ -3,6 +3,7 @@ package graft.streaming
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -276,8 +277,8 @@ object StreamOps {
     * Emits one row per FINAL session (Append mode): a session is final
     * when the event-time watermark has passed its end by more than the
     * gap. Requires the RocksDB state store provider
-    * (`transformWithState`'s backing store — pass it via
-    * [[drainToBatch]]'s `confOverrides` or set it on the session).
+    * (`transformWithState`'s backing store — [[drainToBatch]] picks it
+    * for such a stream; any other sink must set it on the session).
     */
   def sessionizeStream(events: DataFrame, keyCol: String, tsCol: String,
       gapSeconds: Long, watermarkDelay: String = "0 seconds"):
@@ -677,15 +678,14 @@ object StreamOps {
     * return the materialized result — lets a file-backed stream be
     * verified against the equivalent batch query. `outputMode` must match
     * the stream shape: "complete" for aggregations (the default here),
-    * "append" for plain transforms, "update" for stateful operators.
+    * "append" for plain transforms, "update" for stateful operators. A
+    * stream with a `transformWithState` operator runs on the RocksDB
+    * state store, which that operator requires.
     */
-  def drainToBatch(stream: DataFrame, outputMode: String = "complete",
-      confOverrides: Map[String, String] = Map.empty): DataFrame = {
+  def drainToBatch(stream: DataFrame, outputMode: String = "complete"): DataFrame = {
     val spark = stream.sparkSession
     val name = s"graft_stream_${nameCounter.incrementAndGet()}"
-    // Pinned for the query's START, restored after (GraftSession.withConfs):
-    // - confOverrides: what a stateful operator needs at start (e.g. the
-    //   RocksDB provider transformWithState requires);
+    // Pinned for the query's START only, restored as soon as it returns:
     // - shuffle partitions = statePartitions: the stateful-operator
     //   partition count is frozen into the checkpoint at first start, and
     //   every micro-batch commits one state-store delta PER partition PER
@@ -694,6 +694,7 @@ object StreamOps {
     //   stream here is small and local, and would otherwise wear 32
     //   near-empty store commits per batch; a 100 TB/day stream would size
     //   it up instead. Results do not depend on the count.
+    // - the RocksDB provider a transformWithState operator requires.
     val statePartitions = 8
     // complete-mode drains skip the trailing NO-DATA micro-batch: its only
     // purposes are advancing the watermark to EMIT append-mode results and
@@ -702,11 +703,14 @@ object StreamOps {
     // nothing and costs a full replan + state-store commit cycle (the
     // per-restart floor is per-BATCH machinery; measured ~25% of the
     // stream family's drain time). Append/update drains keep the default.
-    val pins = (if (outputMode == "complete")
+    val pins = Map("spark.sql.shuffle.partitions" -> statePartitions.toString) ++
+      (if (outputMode == "complete")
         Map("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
-      else Map.empty[String, String]) ++
-      confOverrides ++
-      Map("spark.sql.shuffle.partitions" -> statePartitions.toString)
+      else Map.empty) ++
+      (if (stream.queryExecution.logical.exists(_.isInstanceOf[TransformWithState]))
+        Map("spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      else Map.empty)
     // the drain is a synchronous test/verify sink, so its checkpoint needs
     // no durability — put state-store deltas on the RAM disk when one
     // exists (a production stream would point checkpointLocation at
@@ -715,14 +719,26 @@ object StreamOps {
     val ckptBase = if (shm.isDirectory && shm.canWrite) shm.toPath
       else java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
     val ckpt = java.nio.file.Files.createTempDirectory(ckptBase, "graft_ckpt_")
-    try graft.GraftSession.withConfs(spark, pins) {
-      val q = stream.writeStream
-        .outputMode(outputMode)
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
+    // The pins go on the caller's session, not a GraftSession.pinned
+    // clone: each session that starts a stream gets its own
+    // StreamingQueryListenerBus, registered on the LiveListenerBus for
+    // good and reporting only that session's queries, so a drain on a
+    // clone would hide from the caller's stream listeners and leak one bus
+    // per drain. Holding them across start() alone is enough: the
+    // StreamExecution constructor, run inside start(), snapshots the
+    // session (cloneSession → sparkSessionForStream) and every micro-batch
+    // plans on that snapshot, so a sibling flow can see them only while
+    // start() runs.
+    def put(confs: Map[String, Option[String]]): Unit = confs.foreach {
+      case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+    try {
+      val saved = pins.map { case (k, _) => k -> spark.conf.getOption(k) }
+      put(pins.map { case (k, v) => k -> Some(v) })
+      val q =
+        try stream.writeStream.outputMode(outputMode).format("memory").queryName(name)
+          .option("checkpointLocation", ckpt.toString).trigger(Trigger.AvailableNow()).start()
+        finally put(saved)
       q.awaitTermination()
     } finally {
       // best-effort cleanup so repeated drains don't fill the tmpfs

@@ -189,13 +189,11 @@ object PlanLint {
       } finally graft.Caches.clear(spark, blocking = true)
     }
     println(s"[planlint] ${names.size - bad.size}/${names.size} clean")
-    // a subset lint must NEVER clobber the committed round artifact
-    // (same guard as Bench's SPARK_GRAFT_ONLY rule, added r12 after a
-    // 4-query iteration file got committed as the round bench): only an
-    // "all" run defaults to the repo file
+    // the record goes to the temp dir, so running the gate leaves the
+    // working tree clean; a subset run never overwrites a full run's file
     val outFile = sys.env.getOrElse("SPARK_GRAFT_PLANLINT_OUT",
-      if (names0 == "all") "PLANLINT_LAST.json"
-      else s"${sys.props("java.io.tmpdir")}/PLANLINT_SUBSET.json")
+      s"${sys.props("java.io.tmpdir")}/" +
+        (if (names0 == "all") "PLANLINT_LAST.json" else "PLANLINT_SUBSET.json"))
     val json =
       s"""{"sf":"$dir","nQueries":${names.size},"nGatingFail":${bad.size},""" +
         s""""failed":${bad.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +

@@ -1,14 +1,16 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, ExpressionUtils}
 
-/** Bridge to Spark 4's `private[sql]` Column ↔ catalyst Expression
-  * conversion for our custom expressions. Lives under org.apache.spark.sql
-  * to satisfy the package-private accessors — the only place we step
-  * outside the public API, and only to wrap our own Catalyst expressions
-  * as Columns.
+/** Bridge to Spark 4's `private[sql]` accessors: Column ↔ catalyst
+  * Expression conversion for our custom expressions, and a session clone
+  * with a frame rebound onto it. Lives under org.apache.spark.sql to
+  * satisfy the package-private accessors — the only place we step
+  * outside the public API.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -23,4 +25,11 @@ object Bridge {
     * catalyst nodes that the analyzer then resolves normally.
     */
   def expression(c: Column): Expression = ColumnNodeToExpressionConverter(c.node)
+
+  /** A copy of `s` with its runtime confs, temp views and listeners. */
+  def cloneSession(s: SparkSession): SparkSession = s.asInstanceOf[classic.SparkSession].cloneSession()
+
+  /** `plan` as a frame on `s`. */
+  def ofRows(s: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(s.asInstanceOf[classic.SparkSession], plan)
 }

@@ -17,6 +17,24 @@ trait SparkSpec extends AnyFunSuite {
     s
   }
 
+  /** Run `body` with `pins` set on the shared session, restoring the
+    * previous values (or unsetting) afterwards. Tests only: graft itself
+    * never writes a shared session (see [[GraftSession.pinned]]).
+    */
+  def withConfs[A](pins: Map[String, String])(body: => A): A = {
+    val saved = pins.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    pins.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** The state store `transformWithState` requires, as a [[withConfs]] pin. */
+  val rocksDbStateStore: Map[String, String] = Map("spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+
   /** The repository root: the nearest directory above the working
     * directory that holds build.sbt. */
   lazy val repoRoot: File =

@@ -82,9 +82,7 @@ class BucketedSpec extends SparkSpec {
   import spark.implicits._
 
   test("bucketed tables join with no shuffle exchange") {
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConfs(Map("spark.sql.autoBroadcastJoinThreshold" -> "-1")) {
       graft.sinks.Bucketed.write(
         (1 to 100).map(i => (i.toLong, i * 2)).toDF("k", "a"),
         "graft_test_ba", bucketBy = Seq("k"), nBuckets = 4, sortBy = Seq("k"))
@@ -97,7 +95,7 @@ class BucketedSpec extends SparkSpec {
       assert(plan.contains("SortMergeJoin"), plan)
       assert(!plan.contains("Exchange"), s"bucketed join should not shuffle:\n$plan")
       assert(j.count() === 100)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 }
 

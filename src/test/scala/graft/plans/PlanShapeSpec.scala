@@ -813,7 +813,7 @@ class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-    GraftSession.withConfs(spark, pins) {
+    withConfs(pins) {
       val q = left.join(right, "k").agg(count(lit(1)), max(length(col("p"))))
       q.collect()
       val plan = q.queryExecution.executedPlan match {

@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{GraftSession, SparkSpec}
+import graft.SparkSpec
 
 class TopOneRuleSpec extends SparkSpec {
   import spark.implicits._
@@ -18,7 +18,7 @@ class TopOneRuleSpec extends SparkSpec {
       .toDF("k", "s", "v")
 
     // baseline without the rule
-    val expected = GraftSession.withConfs(spark,
+    val expected = withConfs(
         Map("spark.sql.optimizer.excludedRules" -> TopOneWindowToAggregate.ruleName)) {
       assert(top1(df).queryExecution.optimizedPlan.toString.contains("Window"))
       top1(df).collect().toSet

@@ -12,10 +12,9 @@ import graft.functions.UrlFunctions
 /** Round-12 seam fuzz, same discipline as Round10/11PropertiesSpec:
   *
   *  - [[Dedup.boundedBuckets]] was restructured (eager fill moved from
-  *    the guarded OUTPUT to the cached INPUT, gated by
-  *    `spark.graft.bucketGuard.eagerFill`) — every (cache, cacheInput,
-  *    eagerFill) arm must return EXACTLY the naive survivor set, on
-  *    random bucket distributions;
+  *    the guarded OUTPUT to the cached INPUT) — every (cache, cacheInput)
+  *    arm must return EXACTLY the naive survivor set, on random bucket
+  *    distributions;
   *  - [[UrlFunctions.canonicalizeUrl]] became a one-pass custom
   *    expression — random messifications of one logical page must
   *    collapse to a single canonical string, canonicalization must be
@@ -48,23 +47,13 @@ class Round12PropertiesSpec extends SparkSpec {
         val sizes = distinctRows.groupBy(_._2).view.mapValues(_.size).toMap
         distinctRows.filter { case (_, b) => sizes(b) <= bound }.toSet
       }
-      for {
-        (cache, cacheInput) <- Seq((true, true), (true, false), (false, true))
-        eager <- Seq("true", "false")
-      } {
-        val prev = spark.conf.getOption("spark.graft.bucketGuard.eagerFill")
-        spark.conf.set("spark.graft.bucketGuard.eagerFill", eager)
-        try {
-          val df = distinctRows.toDF("_id", "_bucket")
-          val got = Dedup.boundedBuckets(df, Seq("_bucket"), bound,
-              s"r12_bb_${obsN.incrementAndGet()}", cache = cache, cacheInput = cacheInput)
-            .select("_id", "_bucket").as[(Long, Int)].collect().toSet
-          assert(got === naive,
-            s"cache=$cache cacheInput=$cacheInput eager=$eager bound=$bound data=$distinctRows")
-        } finally prev match {
-          case Some(v) => spark.conf.set("spark.graft.bucketGuard.eagerFill", v)
-          case None => spark.conf.unset("spark.graft.bucketGuard.eagerFill")
-        }
+      for ((cache, cacheInput) <- Seq((true, true), (true, false), (false, true))) {
+        val df = distinctRows.toDF("_id", "_bucket")
+        val got = Dedup.boundedBuckets(df, Seq("_bucket"), bound,
+            s"r12_bb_${obsN.incrementAndGet()}", cache = cache, cacheInput = cacheInput)
+          .select("_id", "_bucket").as[(Long, Int)].collect().toSet
+        assert(got === naive,
+          s"cache=$cache cacheInput=$cacheInput bound=$bound data=$distinctRows")
       }
     }
   }

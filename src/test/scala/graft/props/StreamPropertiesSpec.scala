@@ -42,14 +42,7 @@ class StreamPropertiesSpec extends SparkSpec {
     bounds.zip(bounds.tail).map { case (a, b) => xs.slice(a, b) }
   }
 
-  private def withRocksDb[A](body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally saved.fold(spark.conf.unset(key))(v => spark.conf.set(key, v))
-  }
+  private def withRocksDb[A](body: => A): A = withConfs(rocksDbStateStore)(body)
 
   // streams: (user 1..3, seconds 1..60) with heavy time collisions —
   // identical times within a user (one timer instant, several events)

@@ -15,15 +15,11 @@ class FunnelParitySpec extends SparkSpec {
   import spark.implicits._
 
   private val S = 1000000L
-  private val providerKey = "spark.sql.streaming.stateStore.providerClass"
 
   private def withStream(windowSec: Long, delay: String)(
       body: (MemoryStream[(Long, Long, String)],
-             org.apache.spark.sql.streaming.StreamingQuery) => Unit): Unit = {
+             org.apache.spark.sql.streaming.StreamingQuery) => Unit): Unit = withConfs(rocksDbStateStore) {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val saved = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val input = MemoryStream[(Long, Long, String)] // (user, sec, type)
     val stream = StreamOps.funnelStream(
       input.toDS().toDF("user_id", "sec", "t")
@@ -35,10 +31,7 @@ class FunnelParitySpec extends SparkSpec {
       .format("memory").queryName("tws_funnel")
       .trigger(Trigger.ProcessingTime(0)).start()
     try body(input, q)
-    finally {
-      q.stop()
-      saved.fold(spark.conf.unset(providerKey))(v => spark.conf.set(providerKey, v))
-    }
+    finally q.stop()
   }
 
   test("funnelStream: out-of-order t0, strict ordering, window bound, finality") {

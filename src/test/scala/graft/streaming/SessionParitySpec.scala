@@ -59,82 +59,72 @@ class SessionParitySpec extends SparkSpec {
   }
 
   test("sessionizeStream (transformWithState): batch break rule, timer flush, open sessions held") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[(Long, Long)]
-    val stream = StreamOps.sessionizeStream(
-      input.toDS().toDF("user_id", "sec")
-        .withColumn("ts", timestamp_seconds(col("sec"))),
-      keyCol = "user_id", tsCol = "ts", gapSeconds = 300L)
-    val q = stream.toDF().writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName("tws_sessions")
-      .trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      // all times offset +1000 s: an event at EXACTLY the initial
-      // watermark (epoch 0) is dropped by the operator's late-row filter
-      // — a degenerate corner no real stream hits, not the semantics
-      // under test here
-      // user 5 probes the boundary: 301 s EXCEEDS the gap → two sessions
-      input.addData((1L, 1000L), (1L, 1100L), (2L, 1050L), (5L, 1000L), (5L, 1301L))
-      q.processAllAvailable()
-      // 1400-1100 = 300 s = the gap EXACTLY → same session (the batch
-      // operator's strictly-greater break; session_window would split)
-      input.addData((1L, 1400L), (3L, 10000L))
-      q.processAllAvailable()
-      // watermark jumps to 20000 s: users 1/2/5 flush via timers with no
-      // new records of their own; user 3 becomes final too
-      input.addData((4L, 20000L))
-      q.processAllAvailable()
-      val got = spark.table("tws_sessions")
-        .as[(Long, Long, Long, Long)].collect().toSeq.sorted
-      val S = 1000000L // seconds → micros
-      assert(got === Seq(
-        (1L, 1000L * S, 1400L * S, 3L),  // bridged across batches, gap-inclusive
-        (2L, 1050L * S, 1050L * S, 1L),  // timer flush, no further records
-        (3L, 10000L * S, 10000L * S, 1L),
-        (5L, 1000L * S, 1000L * S, 1L),  // 301 s split into two sessions
-        (5L, 1301L * S, 1301L * S, 1L)))
-      // user 4's session (deadline 20300 s > watermark 20000 s) stays open
-      assert(!got.exists(_._1 == 4L))
-    } finally {
-      q.stop()
-      saved.fold(spark.conf.unset(providerKey))(v => spark.conf.set(providerKey, v))
+    withConfs(rocksDbStateStore) {
+      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+      val input = MemoryStream[(Long, Long)]
+      val stream = StreamOps.sessionizeStream(
+        input.toDS().toDF("user_id", "sec")
+          .withColumn("ts", timestamp_seconds(col("sec"))),
+        keyCol = "user_id", tsCol = "ts", gapSeconds = 300L)
+      val q = stream.toDF().writeStream.outputMode(OutputMode.Append())
+        .format("memory").queryName("tws_sessions")
+        .trigger(Trigger.ProcessingTime(0)).start()
+      try {
+        // all times offset +1000 s: an event at EXACTLY the initial
+        // watermark (epoch 0) is dropped by the operator's late-row filter
+        // — a degenerate corner no real stream hits, not the semantics
+        // under test here
+        // user 5 probes the boundary: 301 s EXCEEDS the gap → two sessions
+        input.addData((1L, 1000L), (1L, 1100L), (2L, 1050L), (5L, 1000L), (5L, 1301L))
+        q.processAllAvailable()
+        // 1400-1100 = 300 s = the gap EXACTLY → same session (the batch
+        // operator's strictly-greater break; session_window would split)
+        input.addData((1L, 1400L), (3L, 10000L))
+        q.processAllAvailable()
+        // watermark jumps to 20000 s: users 1/2/5 flush via timers with no
+        // new records of their own; user 3 becomes final too
+        input.addData((4L, 20000L))
+        q.processAllAvailable()
+        val got = spark.table("tws_sessions")
+          .as[(Long, Long, Long, Long)].collect().toSeq.sorted
+        val S = 1000000L // seconds → micros
+        assert(got === Seq(
+          (1L, 1000L * S, 1400L * S, 3L),  // bridged across batches, gap-inclusive
+          (2L, 1050L * S, 1050L * S, 1L),  // timer flush, no further records
+          (3L, 10000L * S, 10000L * S, 1L),
+          (5L, 1000L * S, 1000L * S, 1L),  // 301 s split into two sessions
+          (5L, 1301L * S, 1301L * S, 1L)))
+        // user 4's session (deadline 20300 s > watermark 20000 s) stays open
+        assert(!got.exists(_._1 == 4L))
+      } finally q.stop()
     }
   }
 
   test("sessionizeStream: a late event (behind the watermark) is dropped, not merged") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[(Long, Long)]
-    val stream = StreamOps.sessionizeStream(
-      input.toDS().toDF("user_id", "sec")
-        .withColumn("ts", timestamp_seconds(col("sec"))),
-      keyCol = "user_id", tsCol = "ts", gapSeconds = 300L)
-    val q = stream.toDF().writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName("tws_sessions_late")
-      .trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      input.addData((1L, 1000L), (2L, 5000L))
-      q.processAllAvailable()
-      // watermark is now 5000 s (delay 0): a user-1 event at 1100 s is
-      // LATE — the operator must drop it, and the finality rule is sound
-      // exactly because it does (a finalized rank/session never changes)
-      input.addData((1L, 1100L), (9L, 20000L))
-      q.processAllAvailable()
-      val got = spark.table("tws_sessions_late")
-        .as[(Long, Long, Long, Long)].collect().toSeq.filter(_._1 == 1L)
-      val S = 1000000L
-      assert(got === Seq((1L, 1000L * S, 1000L * S, 1L)),
-        s"late event must not extend the session: $got")
-    } finally {
-      q.stop()
-      saved.fold(spark.conf.unset(providerKey))(v => spark.conf.set(providerKey, v))
+    withConfs(rocksDbStateStore) {
+      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+      val input = MemoryStream[(Long, Long)]
+      val stream = StreamOps.sessionizeStream(
+        input.toDS().toDF("user_id", "sec")
+          .withColumn("ts", timestamp_seconds(col("sec"))),
+        keyCol = "user_id", tsCol = "ts", gapSeconds = 300L)
+      val q = stream.toDF().writeStream.outputMode(OutputMode.Append())
+        .format("memory").queryName("tws_sessions_late")
+        .trigger(Trigger.ProcessingTime(0)).start()
+      try {
+        input.addData((1L, 1000L), (2L, 5000L))
+        q.processAllAvailable()
+        // watermark is now 5000 s (delay 0): a user-1 event at 1100 s is
+        // LATE — the operator must drop it, and the finality rule is sound
+        // exactly because it does (a finalized rank/session never changes)
+        input.addData((1L, 1100L), (9L, 20000L))
+        q.processAllAvailable()
+        val got = spark.table("tws_sessions_late")
+          .as[(Long, Long, Long, Long)].collect().toSeq.filter(_._1 == 1L)
+        val S = 1000000L
+        assert(got === Seq((1L, 1000L * S, 1000L * S, 1L)),
+          s"late event must not extend the session: $got")
+      } finally q.stop()
     }
   }
 }

@@ -10,7 +10,7 @@ class PlanLintSpec extends SparkSpec {
     val a = spark.range(2000).toDF("x")
     val b = spark.range(2000).toDF("y")
     // inequality-only condition + no broadcastable side → cartesian
-    val (gate, _) = graft.GraftSession.withConfs(spark,
+    val (gate, _) = withConfs(
       Map("spark.sql.autoBroadcastJoinThreshold" -> "-1")) {
       PlanLint.lint(a.join(b, col("x") < col("y")))
     }

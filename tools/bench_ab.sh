@@ -7,7 +7,8 @@
 # to be ~2.4% FASTER. This script exports OLD_SHA with `git archive`,
 # compiles both sides, and runs the same query subset ALTERNATING old/new
 # binaries (each pass pairs the two sides inside the same minutes of host
-# weather), then writes per-query paired min ratios to OUT.
+# weather, and which side goes first alternates by pass), then writes
+# per-query paired min ratios to OUT.
 # Judge regressions on these ratios (<= 1.05 = clean).
 #
 # Usage: QUERIES=q1,q2 tools/bench_ab.sh [OLD_SHA]
@@ -72,11 +73,14 @@ run_side() {  # side classes_root pass
   fi
 }
 
+# odd passes run old first, even passes new first, so an order effect
+# (the second JVM of a pass reading slower) lands on both sides
 for pass in $(seq 1 "$PASSES"); do
-  echo "[bench_ab] pass $pass/$PASSES: old"
-  run_side old "$OLD_DIR" "$pass"
-  echo "[bench_ab] pass $pass/$PASSES: new"
-  run_side new "$PWD" "$pass"
+  if (( pass % 2 )); then order="old new"; else order="new old"; fi
+  for side in $order; do
+    echo "[bench_ab] pass $pass/$PASSES: $side"
+    if [[ $side == old ]]; then run_side old "$OLD_DIR" "$pass"; else run_side new "$PWD" "$pass"; fi
+  done
 done
 
 python3 - "$OUT" "$OLD_SHA" "$NEW_SHA" "$PASSES" <<'EOF'
@@ -99,7 +103,7 @@ minsum_new = sum(new[q] for q in common)
 ratio = round(minsum_new / minsum_old, 3) if minsum_old else None
 result = {
     "metric": "bench_ab", "old_sha": old_sha, "new_sha": new_sha,
-    "passes": passes, "paired": "alternating old/new per pass, same host",
+    "passes": passes, "paired": "old/new per pass, first side alternating, same host",
     "minsum_old": round(minsum_old, 3), "minsum_new": round(minsum_new, 3),
     "ratio_minsum": ratio, "clean": ratio is not None and ratio <= 1.05,
     "new_only": sorted(set(new) - set(old)),
