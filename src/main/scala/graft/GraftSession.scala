@@ -185,6 +185,17 @@ object GraftSession {
     * parallelizes by itself and this explicit shuffle is unnecessary — use
     * plain `table` there; use this for compute-bound paths over
     * small-file inputs.
+    *
+    * Filters reach the scan stage through this shuffle (a round-robin
+    * repartition does not stop predicate pushdown), and so does every
+    * expression a pushed filter computes. Spark's InferFiltersFromGenerate
+    * adds `size(arr) > 0` below a non-outer `explode(arr)`: with `arr`
+    * a `tokens(text)` column, that filter tokenizes every document again
+    * in the ONE scan task, on one core: measured 0.7–0.85 s per scan of
+    * the pseudo-sf1 documents, twice per `SetJoin.prefixJaccard` run,
+    * against 0.13 s for the scan stage of `explode_outer` + `isNotNull`,
+    * which infers nothing (`tools/stage_timeline.sh heavy_sf1 1`, 4
+    * cores). Keep per-row work out of filters over a spread table.
     */
   def tableSpread(spark: SparkSession, dir: String, name: String): DataFrame =
     table(spark, dir, name).repartition(spark.sparkContext.defaultParallelism)

@@ -409,90 +409,105 @@ object SigMatchFrac {
   }
 }
 
-/** Size of the intersection of two SORTED arrays of (df, token) structs —
-  * the exact verify step of [[graft.operators.SetJoin.prefixJaccard]], in
-  * one merge pass. Both arrays must be in `sort_array` ascending order:
-  * nulls first, then by the long field, then by the string field's bytes
-  * (`binaryCompare`, the order `sort_array` uses for strings). Counts
-  * distinct common elements, as `size(array_intersect(a, b))` does: a null
-  * element present on both sides counts once, and duplicates count once.
-  *
-  * The generic `array_intersect` hashes every element of both arrays into
-  * a fresh set per call; this walks the two arrays once with no
-  * allocation beyond the element views. Null input → null.
+/** Size of the intersection of two ascending arrays of distinct longs —
+  * the exact verify step of [[graft.operators.SetJoin.prefixJaccard]],
+  * which holds each set as its sorted token ranks. One merge pass, no
+  * allocation, equal to `size(array_intersect(a, b))` (a repeated common
+  * value counts once). The arrays hold no nulls (the type check pins
+  * `containsNull = false`). Null input → null.
   */
-case class SortedIntersectSize(left: Expression, right: Expression)
+case class SortedLongIntersectSize(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def dataType: DataType = IntegerType
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (Seq(left, right).forall(e => SortedIntersectSize.isOrdArray(e.dataType)))
+    if (Seq(left, right).forall(_.dataType == ArrayType(LongType, containsNull = false)))
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
     else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"sorted_intersect_size needs two array<struct<bigint, string>>, got " +
+      s"sorted_long_intersect_size needs two null-free array<bigint>, got " +
         s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
 
   override def nullSafeEval(a: Any, b: Any): Any =
-    SortedIntersectSize.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+    SortedLongIntersectSize.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.SortedIntersectSize.compute($a, $b)")
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.SortedLongIntersectSize.compute($a, $b)")
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression)
-      : SortedIntersectSize = copy(left = newLeft, right = newRight)
+      : SortedLongIntersectSize = copy(left = newLeft, right = newRight)
 }
 
-object SortedIntersectSize {
-  private def isOrdArray(t: DataType): Boolean = t match {
-    case ArrayType(StructType(Array(StructField(_, LongType, _, _),
-        StructField(_, StringType, _, _))), _) => true
-    case _ => false
-  }
-
-  /** The element at `i` (null for a null element or past the end). */
-  @inline private def at(arr: ArrayData, n: Int, i: Int): InternalRow =
-    if (i >= n || arr.isNullAt(i)) null else arr.getStruct(i, 2)
-
-  /** `sort_array` ascending order: nulls first at both levels. */
-  private def compare(x: InternalRow, y: InternalRow): Int = {
-    if (x == null || y == null) return (if (x == null) 0 else 1) - (if (y == null) 0 else 1)
-    val xn = x.isNullAt(0)
-    val yn = y.isNullAt(0)
-    if (xn != yn) return if (xn) -1 else 1
-    if (!xn) {
-      val c = java.lang.Long.compare(x.getLong(0), y.getLong(0))
-      if (c != 0) return c
-    }
-    val xs = x.isNullAt(1)
-    val ys = y.isNullAt(1)
-    if (xs != ys) return if (xs) -1 else 1
-    if (xs) 0 else x.getUTF8String(1).binaryCompare(y.getUTF8String(1))
-  }
-
+object SortedLongIntersectSize {
   def compute(a: ArrayData, b: ArrayData): Int = {
     val na = a.numElements()
     val nb = b.numElements()
     var i = 0
     var j = 0
-    var x = at(a, na, 0)
-    var y = at(b, nb, 0)
     var count = 0
     while (i < na && j < nb) {
-      val c = compare(x, y)
-      if (c < 0) { i += 1; x = at(a, na, i) }
-      else if (c > 0) { j += 1; y = at(b, nb, j) }
+      val x = a.getLong(i)
+      val y = b.getLong(j)
+      if (x < y) i += 1
+      else if (x > y) j += 1
       else {
         count += 1
-        // step both sides past every copy of the common element
-        val m = x
-        i += 1; x = at(a, na, i)
-        while (i < na && compare(x, m) == 0) { i += 1; x = at(a, na, i) }
-        j += 1; y = at(b, nb, j)
-        while (j < nb && compare(y, m) == 0) { j += 1; y = at(b, nb, j) }
+        // step both sides past every copy of the common value
+        i += 1
+        while (i < na && a.getLong(i) == x) i += 1
+        j += 1
+        while (j < nb && b.getLong(j) == x) j += 1
       }
     }
     count
+  }
+}
+
+/** Whitespace tokens of a string, one pass: exactly
+  * `filter(split(text, " "), t => t =!= "")`, the maximal runs of bytes
+  * other than the space 0x20 (tabs and newlines stay inside tokens; 0x20
+  * never occurs inside a multi-byte UTF-8 sequence, so a byte scan splits
+  * where the char-level split does). The higher-order form ran on Spark's
+  * interpreted lambda path and built the split array before filtering it.
+  * Null → null; empty or all-space → empty array. The tokens share one
+  * copy of the text's bytes.
+  */
+case class Tokens(child: Expression) extends UnaryExpression {
+
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def nullable: Boolean = child.nullable
+
+  override protected def nullSafeEval(input: Any): Any =
+    Tokens.compute(input.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = graft.functions.Tokens.compute($c);")
+
+  override protected def withNewChildInternal(newChild: Expression): Tokens =
+    copy(child = newChild)
+}
+
+object Tokens {
+  def compute(s: UTF8String): ArrayData = {
+    val bytes = s.getBytes
+    val n = bytes.length
+    var count = 0
+    var i = 0
+    while (i < n) {
+      if (bytes(i) != ' ' && (i == 0 || bytes(i - 1) == ' ')) count += 1
+      i += 1
+    }
+    val out = new Array[Any](count)
+    var k = 0
+    i = 0
+    while (k < count) {
+      while (bytes(i) == ' ') i += 1
+      val start = i
+      while (i < n && bytes(i) != ' ') i += 1
+      out(k) = UTF8String.fromBytes(bytes, start, i - start)
+      k += 1
+    }
+    new GenericArrayData(out)
   }
 }
 
@@ -531,8 +546,10 @@ object HashFunctions {
   def band_hashes(sig: Column, bands: Int, rows: Int): Column =
     column(BandHashes(expression(sig), bands, rows))
 
-  def sorted_intersect_size(a: Column, b: Column): Column =
-    column(SortedIntersectSize(expression(a), expression(b)))
+  def sorted_long_intersect_size(a: Column, b: Column): Column =
+    column(SortedLongIntersectSize(expression(a), expression(b)))
+
+  def tokens(text: Column): Column = column(Tokens(expression(text)))
 
   def normalize_text(text: Column): Column =
     column(NormalizeText(expression(text)))

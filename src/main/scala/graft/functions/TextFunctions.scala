@@ -15,11 +15,12 @@ import org.apache.spark.sql.functions._
   */
 object TextFunctions {
 
-  /** Whitespace tokens, empties removed. Single-space split + filter keeps
-    * exact parity with `string_split(text, ' ')` oracles.
+  /** Whitespace tokens, empties removed: exactly
+    * `filter(split(text, " "), t => t =!= "")`, the form the
+    * `string_split(text, ' ')` oracles mirror, computed in one codegen'd
+    * pass ([[Tokens]]).
     */
-  def tokens(text: Column): Column =
-    filter(split(text, " "), t => t =!= lit(""))
+  def tokens(text: Column): Column = HashFunctions.tokens(text)
 
   /** One-pass codegen'd token count (== `size(tokens(text))`, which walks
     * the interpreted HOF path and allocates the array).

@@ -377,6 +377,55 @@ class DedupSpec extends SparkSpec {
     assert(m.getAs[Long]("bb_spec_dropped_buckets") === 1L)
   }
 
+  test("pairableBuckets: same pairs and drop metrics as the guard + self-join, no singleton kept") {
+    // random buckets: mostly singletons, some pairs and triples, one
+    // bucket of exactly `bound` rows and one over-bound bucket
+    val bound = 6
+    val rnd = new scala.util.Random(3)
+    val sizes = Seq.fill(400)(if (rnd.nextInt(10) < 7) 1 else 2 + rnd.nextInt(3)) ++
+      Seq(bound, bound + 1)
+    val rows = sizes.zipWithIndex.flatMap { case (n, b) =>
+      Seq.fill(n)((rnd.nextLong(), b % 3, b.toLong * 7919L))
+    }
+    val df = rows.toDF("_id", "_band", "_bucket")
+    val keys = Seq("_band", "_bucket")
+    def pairs(frame: org.apache.spark.sql.DataFrame) = {
+      val a = frame.select(col("_band"), col("_bucket"), col("_id").as("a"))
+      val b = frame.select(col("_band"), col("_bucket"), col("_id").as("b"))
+      a.join(b, keys).filter(col("a") < col("b")).select("a", "b")
+        .as[(Long, Long)].collect().toSet
+    }
+    // observe metrics as every execution reports them
+    val seen = new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.Row]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+        qe.observedMetrics.foreach { case (k, v) => seen.put(k, v) }
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val ref = pairs(Dedup.boundedBuckets(df, keys, bound, "pb_ref"))
+      val pruned = Dedup.pairableBuckets(df, keys, bound, "pb_new")
+      val got = pairs(pruned)
+      assert(ref.nonEmpty && got === ref)
+      // only multi-member buckets survive, the bound-sized one included
+      val kept = pruned.groupBy(keys.map(col): _*).count().select("count").as[Long].collect()
+      assert(kept.nonEmpty && kept.forall(_ >= 2), kept.toSeq)
+      assert(kept.contains(bound.toLong))
+      assert(pruned.count() === sizes.filter(n => n >= 2 && n <= bound).sum)
+      org.apache.spark.ListenerBusTestHook.waitUntilEmpty(spark.sparkContext)
+      val (r, n) = (seen.get("pb_ref"), seen.get("pb_new"))
+      assert(r != null && n != null, seen.keySet.toString)
+      assert(n.getAs[Long]("pb_new_dropped_rows") === r.getAs[Long]("pb_ref_dropped_rows"))
+      assert(n.getAs[Long]("pb_new_dropped_buckets") === r.getAs[Long]("pb_ref_dropped_buckets"))
+      assert(n.getAs[Long]("pb_new_dropped_rows") === bound + 1L)
+      assert(n.getAs[Long]("pb_new_dropped_buckets") === 1L)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      graft.Caches.clear(spark, blocking = true)
+    }
+  }
+
   test("minhash signature determinism across partitioning") {
     val a = Dedup.minhash(docs.repartition(1), "doc_id",
       TextFunctions.wordShingles(col("text"), 3), 0.5).collect().toSet

@@ -62,3 +62,33 @@ class SetJoinSpec extends SparkSpec {
     assert(run(1, 1, sets: _*) === Set((1L, 2L, 2L, 2L)))
   }
 }
+
+/** The vocabulary ranks behind [[SetJoin.prefixJaccard]]: one long per
+  * token, injective (so equal rank means equal token), increasing along
+  * (occurrence count, token), and the same on every read of the frame.
+  */
+class SetJoinRanksSpec extends graft.SparkSpec {
+  import spark.implicits._
+
+  test("ranks are injective, follow (count, token) and repeat across evaluations") {
+    val rnd = new scala.util.Random(5)
+    val vocab = (0 until 300).map(i => s"w${i % 97}_${i / 97}") ++ Seq("é", "日本", "😀", "a b")
+    // skewed occurrence counts, so many tokens tie on count
+    val occ = Seq.fill(5000)(vocab(math.min(rnd.nextInt(vocab.size), rnd.nextInt(vocab.size))))
+    val tok = occ.toDF("_t").repartition(4)
+    val rk = SetJoin.ranks(tok)
+    val first = rk.as[(String, Long)].collect().toMap
+    val second = rk.as[(String, Long)].collect().toMap
+    assert(first === second)
+    assert(first.keySet === occ.toSet)
+    assert(first.values.toSet.size === first.size, "two tokens share a rank")
+    val counts = occ.groupBy(identity).map { case (t, ts) => t -> ts.size.toLong }
+    // tokens compare by UTF-8 bytes, as orderBy compares strings
+    def bytes(t: String) = org.apache.spark.unsafe.types.UTF8String.fromString(t)
+    val byKey = first.keys.toSeq.sortWith((x, y) =>
+      if (counts(x) != counts(y)) counts(x) < counts(y)
+      else bytes(x).binaryCompare(bytes(y)) < 0)
+    assert(byKey.map(first) === byKey.map(first).sorted, "ranks do not follow (count, token)")
+    graft.Caches.clear(spark, blocking = true)
+  }
+}

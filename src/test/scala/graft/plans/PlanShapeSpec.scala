@@ -622,20 +622,42 @@ class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(exprsOf(plan) { case e: org.apache.spark.sql.catalyst.expressions.ArrayIntersect => e }
       .isEmpty, plan.toString)
     // at most one pass in the join condition, one in the projection
-    val kernels = exprsOf(plan) { case e: graft.functions.SortedIntersectSize => e }
+    val kernels = exprsOf(plan) { case e: graft.functions.SortedLongIntersectSize => e }
     assert(kernels.nonEmpty && kernels.size <= 2, plan.toString)
+    graft.Caches.clear(spark, blocking = true)
   }
 
   test("minhash banding: one band_hashes pass, no interpreted transform/concat_ws lambda") {
     val docs = GraftSession.table(spark, dir, "documents")
       .withColumn("_toks", graft.functions.TextFunctions.tokens(col("text")))
-    val plan = executed(graft.dedup.Dedup.minhash(docs, "doc_id",
-      graft.functions.TextFunctions.shinglesOf(col("_toks"), 3), threshold = 0.5))
+    val shingles = graft.functions.TextFunctions.shinglesOf(col("_toks"), 3)
+    val q = graft.dedup.Dedup.minhash(docs, "doc_id", shingles, threshold = 0.5)
+    q.collect() // this query's own run: its scans' row counts are read below
+    val plan = q.queryExecution.executedPlan
     assert(exprsOf(plan) {
       case e: org.apache.spark.sql.catalyst.expressions.ArrayTransform => e
       case e: org.apache.spark.sql.catalyst.expressions.ConcatWs => e
     }.isEmpty, plan.toString)
     assert(exprsOf(plan) { case e: graft.functions.BandHashes => e }.nonEmpty, plan.toString)
+    // the candidate self-join reads only the rows of multi-member buckets:
+    // both scans feeding it output exactly the rows of the buckets with
+    // 2 to maxBucket members, counted here from the band index
+    val bucketSizes = graft.dedup.Dedup.minhashIndex(docs, "doc_id", shingles)
+      .groupBy("_band", "_bucket").count().select("count").collect().map(_.getLong(0))
+    val multi = bucketSizes.filter(n => n >= 2 && n <= 10000).sum
+    assert(multi > 0 && multi < bucketSizes.sum, s"$multi of ${bucketSizes.sum}")
+    val candJoins = collect(plan) {
+      case j: org.apache.spark.sql.execution.joins.BaseJoinExec
+        if j.leftKeys.exists(_.references.exists(_.name == "_band")) => j
+    }
+    assert(candJoins.size == 1, plan.toString)
+    val inputRows = candJoins.head.children.flatMap(side => collect(side) {
+      case t: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+        t.metrics("numOutputRows").value
+    })
+    assert(inputRows.size == 2 && inputRows.forall(_ == multi),
+      s"candidate join inputs $inputRows, multi-member rows $multi:\n$plan")
+    graft.Caches.clear(spark, blocking = true)
   }
 
   test("winsorize: thresholds broadcast back; the cumulative window sees counts, not rows") {

@@ -8,7 +8,9 @@
 # compiles both sides, and runs the same query subset ALTERNATING old/new
 # binaries (each pass pairs the two sides inside the same minutes of host
 # weather, and which side goes first alternates by pass), then writes
-# per-query paired min ratios to OUT.
+# per-query paired min ratios to OUT, and the median over passes of each
+# pass's own new/old ratio. The min-of-minimums ratio is set by the one
+# luckiest run of either side; the per-pass median is the steadier read.
 # Judge regressions on these ratios (<= 1.05 = clean).
 #
 # Usage: QUERIES=q1,q2 tools/bench_ab.sh [OLD_SHA]
@@ -84,28 +86,43 @@ for pass in $(seq 1 "$PASSES"); do
 done
 
 python3 - "$OUT" "$OLD_SHA" "$NEW_SHA" "$PASSES" <<'EOF'
-import json, sys
+import json, statistics, sys
 out, old_sha, new_sha, passes = sys.argv[1], sys.argv[2], sys.argv[3], int(sys.argv[4])
-def mins(side):
+def per_pass(side):
+    """[{query: min over the pass's runs}] per pass"""
+    return [{q: v for q, v in (json.load(open(f"/tmp/bench_ab_{side}_{p}.json"))
+                                .get("queries_min") or {}).items() if v is not None}
+            for p in range(1, passes + 1)]
+old_p, new_p = per_pass("old"), per_pass("new")
+def mins(ps):
     acc = {}
-    for p in range(1, passes + 1):
-        d = json.load(open(f"/tmp/bench_ab_{side}_{p}.json"))
-        for q, v in (d.get("queries_min") or {}).items():
-            if v is not None:
-                acc.setdefault(q, []).append(v)
+    for d in ps:
+        for q, v in d.items():
+            acc.setdefault(q, []).append(v)
     return {q: min(vs) for q, vs in acc.items()}
-old, new = mins("old"), mins("new")
+old, new = mins(old_p), mins(new_p)
 common = sorted(set(old) & set(new))
+def pass_ratios(qs):
+    rs = []
+    for o, n in zip(old_p, new_p):
+        if all(q in o and q in n for q in qs) and sum(o[q] for q in qs):
+            rs.append(sum(n[q] for q in qs) / sum(o[q] for q in qs))
+    return rs
+def median(rs):
+    return round(statistics.median(rs), 3) if rs else None
 qs = {q: {"old_min": old[q], "new_min": new[q],
-          "ratio": round(new[q] / old[q], 3)} for q in common}
+          "ratio": round(new[q] / old[q], 3),
+          "ratio_pass_median": median(pass_ratios([q]))} for q in common}
 minsum_old = sum(old[q] for q in common)
 minsum_new = sum(new[q] for q in common)
 ratio = round(minsum_new / minsum_old, 3) if minsum_old else None
+ratios = pass_ratios(common)
 result = {
     "metric": "bench_ab", "old_sha": old_sha, "new_sha": new_sha,
     "passes": passes, "paired": "old/new per pass, first side alternating, same host",
     "minsum_old": round(minsum_old, 3), "minsum_new": round(minsum_new, 3),
     "ratio_minsum": ratio, "clean": ratio is not None and ratio <= 1.05,
+    "ratio_pass_median": median(ratios), "pass_ratios": [round(r, 3) for r in ratios],
     "new_only": sorted(set(new) - set(old)),
     "queries": qs,
 }
@@ -114,7 +131,8 @@ with open(out, "w") as f:
     f.write("\n")
 flagged = {q: v["ratio"] for q, v in qs.items() if v["ratio"] > 1.2}
 print(f"[bench_ab] wrote {out}: minsum {minsum_old:.2f} -> {minsum_new:.2f} "
-      f"(ratio {ratio}, clean={ratio is not None and ratio <= 1.05})")
+      f"(ratio {ratio}, clean={ratio is not None and ratio <= 1.05}); "
+      f"median of per-pass ratios {median(ratios)} over {[round(r, 3) for r in ratios]}")
 if flagged:
     print(f"[bench_ab] per-query ratios > 1.2: {flagged}")
 EOF
