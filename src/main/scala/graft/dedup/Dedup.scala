@@ -391,7 +391,7 @@ object Dedup {
     // band_hashes pass over one-row-per-doc signatures).
     val pairable = pairableBuckets(
       mhBandRows(sigs, bands, rows).select(col("_band"), col("_bucket"), col("_id")),
-      Seq("_band", "_bucket"), maxBucket, "minhash_buckets", cacheInput = false)
+      Seq("_band", "_bucket"), maxBucket, "minhash_buckets")
     val a = pairable.select(col("_band"), col("_bucket"), col("_id").as("a"))
     val b = pairable.select(col("_band"), col("_bucket"), col("_id").as("b"))
     a.join(b, Seq("_band", "_bucket")).filter(col("a") < col("b"))
@@ -561,11 +561,11 @@ object Dedup {
   def simhash(df: DataFrame, id: String, tokens: Column, maxHamming: Int = 3,
       maxBucket: Int = 10000): DataFrame = {
     val banded = shBanded(df, id, tokens, maxHamming)
-    val pairable =
-      pairableBuckets(banded, Seq("_band", "_bucket"), maxBucket, "simhash_buckets")
-    val a = pairable.select(col("_band"), col("_bucket"), col("_id").as("a"), col("_sig").as("sig_a"))
-    val b = pairable.select(col("_band"), col("_bucket"), col("_id").as("b"), col("_sig").as("sig_b"))
-    a.join(b, Seq("_band", "_bucket")).filter(col("a") < col("b"))
+    val guarded =
+      boundedBuckets(banded, Seq("_band", "_bucket"), maxBucket, "simhash_buckets")
+    val a = guarded.select(col("_band"), col("_bucket"), col("_id").as("a"), col("_sig").as("sig_a"))
+    val b = guarded.select(col("_band"), col("_bucket"), col("_id").as("b"), col("_sig").as("sig_b"))
+    a.hint("merge").join(b, Seq("_band", "_bucket")).filter(col("a") < col("b"))
       .withColumn("hamming", bit_count(col("sig_a").bitwiseXOR(col("sig_b"))))
       .filter(col("hamming") <= maxHamming)
       .select("a", "b", "hamming").dropDuplicates("a", "b")
@@ -699,13 +699,14 @@ object Dedup {
     val sigs = df.select(col(id).as("_id"), vec.cast("array<double>").as("_v"),
       VectorFunctions.hyperplaneSig(vec, ps).as("_bucket"))
     // cacheInput=false: the hyperplane signature is 8 dot products per
-    // row — recomputing it for the counts pass is cheaper than a cache
-    // fill of every vector (the r6 double-persist 4x'd this operator)
-    val pairable = pairableBuckets(sigs, Seq("_bucket"), maxBucket,
+    // row — recomputing it for the guard's counts pass is cheaper than a
+    // second full cache fill of the vectors (the r6 double-persist 4x'd
+    // this operator vs r5)
+    val guarded = boundedBuckets(sigs, Seq("_bucket"), maxBucket,
       "embedding_buckets", cacheInput = false)
-    val a = pairable.select(col("_bucket"), col("_id").as("a"), col("_v").as("va"))
-    val b = pairable.select(col("_bucket"), col("_id").as("b"), col("_v").as("vb"))
-    a.join(b, "_bucket").filter(col("a") < col("b"))
+    val a = guarded.select(col("_bucket"), col("_id").as("a"), col("_v").as("va"))
+    val b = guarded.select(col("_bucket"), col("_id").as("b"), col("_v").as("vb"))
+    a.hint("merge").join(b, "_bucket").filter(col("a") < col("b"))
       .withColumn("cosine", VectorFunctions.cosineFused(col("va"), col("vb")))
       .filter(col("cosine") >= threshold)
       .select("a", "b", "cosine").dropDuplicates("a", "b")
@@ -773,34 +774,39 @@ object Dedup {
     * buckets are dropped and reported exactly as [[boundedBuckets]] does
     * (`<name>_dropped_rows`, `<name>_dropped_buckets`). A self-join of the
     * result yields the same pairs as a self-join of
-    * `boundedBuckets(df, ...)`.
+    * `boundedBuckets(df, ...)`. `df` is read twice, by the counts pass and
+    * by the row pick: it must be cheap to recompute.
     *
     * One counts pass (partial-aggregated, like the guard's) picks the
     * pairable keys; they are materialized first, so the semi-join that
     * picks their rows is planned on their measured size (a broadcast when
     * small: the rows then never cross an exchange), and the result is
-    * filled eagerly for the same reason — its callers' self-join is
+    * filled eagerly for the same reason — its caller's self-join is
     * planned on the pairable rows' true size, and AQE can broadcast it.
-    * `cacheInput`: persist `df`, which the counts pass and the row pick
-    * both read; pass false when it is cheap to compute twice.
     *
-    * Only pure self-joins may prune: [[minhashCandidates]], [[simhash]],
-    * [[embeddingCosine]], `FuzzyJoin.selfJoin` and `SemDedup.pairs`. The
-    * two-sided callers keep [[boundedBuckets]]: in the incremental dedups
-    * and `EntityLink` a bucket with one member on one side can still match
-    * the other side, and `ItemSim` counts every user's items, singleton
-    * buckets included.
+    * It pays where most rows are singletons: [[minhashCandidates]] at
+    * pseudo-sf1, where 92% of the band rows sit in singleton buckets. The
+    * other self-joins keep [[boundedBuckets]] and their `merge` hints,
+    * because their buckets are rarely singletons and the two extra
+    * materializations cost more than the pruning saves. At sf0.1 (4-core
+    * host, `tools/bench_ab.sh`, 6 passes, median of per-pass ratios)
+    * moving them here read: [[simhash]] 16% singleton rows, 1.58x
+    * slower; [[embeddingCosine]] (at most 2^8 buckets) 0.2%, 1.10x;
+    * `SemDedup.pairs` (k IVF cells) none, 1.35x; `FuzzyJoin.selfJoin`
+    * 72% at d = 1, 0.98x, and none at d = 2, 1.06x. The two-sided
+    * callers never prune: in the incremental dedups and `EntityLink` a
+    * bucket with one member on one side can still match the other side,
+    * and `ItemSim` counts every user's items, singleton buckets included.
     */
   private[graft] def pairableBuckets(df: DataFrame, keys: Seq[String], bound: Int,
-      name: String, cacheInput: Boolean = true): DataFrame = {
-    val input = if (cacheInput) graft.Caches.track(df.persist()) else df
+      name: String): DataFrame = {
     val size = col("_bucket_size")
-    val pairable = graft.Caches.track(bucketSizes(input, keys, bound, name)
+    val pairable = graft.Caches.track(bucketSizes(df, keys, bound, name)
       .filter(size >= 2 && size <= bound)
       .select(keys.map(col): _*)
       .persist())
     pairable.count()
-    val out = graft.Caches.track(input.join(pairable, keys, "left_semi").persist())
+    val out = graft.Caches.track(df.join(pairable, keys, "left_semi").persist())
     out.count()
     out
   }
@@ -823,43 +829,82 @@ object Dedup {
   /** Drop buckets with more than `bound` members; the number of ROWS in
     * dropped buckets is emitted as an observe metric named
     * `<name>_dropped_rows` (plus `<name>_dropped_buckets` for the distinct
-    * bucket count) so oversize buckets are visible, not silent. For a
-    * pure self-join, [[pairableBuckets]] also drops the singletons.
+    * bucket count) so oversize buckets are visible, not silent. For the
+    * MinHash self-join, [[pairableBuckets]] also drops the singletons.
     */
   private[graft] def boundedBuckets(df: DataFrame, keys: Seq[String], bound: Int,
-      name: String, cache: Boolean = true): DataFrame = {
+      name: String, cache: Boolean = true, cacheInput: Boolean = true): DataFrame = {
+    val kcols = keys.map(col)
     // Shuffle COUNTS, not rows: per-bucket sizes partial-aggregate
-    // map-side, and the over-bound keys — at most |rows|/bound — broadcast
-    // into an anti-join, so rows of a pathological bucket never travel (a
-    // per-bucket count(*) window routed the whole hot bucket through one
-    // task).
+    // map-side (8-byte keys + longs cross the exchange), and the
+    // over-bound keys — at most |rows|/bound by construction — broadcast
+    // into an anti-join, so rows of a pathological bucket never travel.
+    // The previous form (count(*) over a per-bucket window) routed every
+    // row of the hot bucket through ONE task's window buffer before the
+    // filter dropped it — surviving only by spilling, at the exact scale
+    // the guard exists for.
     //
-    // With `cache` (default) this persists, not the callers:
-    // - the input: the counts side and the anti-join probe read one run
-    //   of the banding, and the cache is an optimizer leaf, so
-    //   PushDownLeftSemiAntiJoin cannot clone the counts subtree into every
-    //   branch of a Union inside `df` (a quadratic plan blow-up on unioned
-    //   batches);
-    // - the guarded OUTPUT, which callers read more than once (dropping
-    //   that cache tripled dedup_embedding and dedup_*_incremental at
-    //   sf0.1).
-    // Pass cache=false for a single-consumer, union-free input such as a
-    // banded INDEX (~16x the source data per band).
-    val cached = if (cache) graft.Caches.track(df.persist()) else df
+    // With `cache` (default), up to TWO frames are persisted HERE, not by
+    // callers:
+    // - the input (`cacheInput`, default true): the counts side and the
+    //   anti-join probe read one materialization of the possibly-expensive
+    //   banding computation, and — critically — the cache boundary is an
+    //   optimizer leaf, so PushDownLeftSemiAntiJoin cannot push the
+    //   guard's anti-join below a Union inside `df` (measured: that
+    //   rewrite clones the whole counts subtree, broadcast build and all,
+    //   into EVERY union branch — a quadratic plan blow-up on unioned
+    //   batches). Pass cacheInput=false when the banding is cheap to
+    //   recompute (e.g. hyperplane signs: 8 dot products per row) and the
+    //   input holds no Union — the counts pass then re-runs the banding
+    //   once instead of paying a second full cache fill (the r6
+    //   double-persist 4x'd dedup_embedding vs r5);
+    // - the guarded OUTPUT: every consumer of this frame (the callers
+    //   all self-join it, referencing it twice) reads one run of the
+    //   counts + broadcast-anti-join subtree instead of re-executing it
+    //   per reference (measured at sf0.1: output-cache removal tripled
+    //   dedup_embedding and dedup_*_incremental — the r5→r6 guard
+    //   rewrite's one regression).
+    // Pass cache=false for single-consumer, union-free inputs where
+    // materializing would cost more than a second pass — e.g. a banded
+    // INDEX, whose per-band signature duplication makes the cache ~16x
+    // the source data.
+    val cached =
+      if (cache && cacheInput) graft.Caches.track(df.persist()) else df
     val overKeys = bucketSizes(cached, keys, bound, name)
       .filter(col("_bucket_size") > bound)
-      .select(keys.map(col): _*)
+      .select(kcols: _*)
     val guarded = cached.join(broadcast(overKeys), keys, "left_anti")
-    // EAGER FILL of the expensive subtree only: AQE materializes a join's
-    // exchanges concurrently, and a lazy cache read by both is computed
-    // once per consumer (the 10x probe ran the banding subtree six
-    // times). One count() of the input serializes the banding; the output
-    // persists lazily, since a concurrent fill of it re-runs only a scan
-    // + broadcast anti-join (eagerly counting the output too 3x'd the
-    // one-shot dedups at sf0.1).
-    if (cache) {
+    // EAGER FILL of the *expensive* subtree only. Every caller self-joins
+    // the guarded frame, and AQE materializes the join's exchanges
+    // CONCURRENTLY — left lazy, the banding subtree is then computed once
+    // per concurrent consumer (first fill wins, the others redundantly
+    // re-run it; same stampede triangleCount documents on its
+    // oriented-edge cache). At sf0.1 the duplicate runs cost milliseconds
+    // and hid; at the 10x probe the stage dump showed the 8.5 GB banding
+    // subtree executed SIX times and the candidate join re-paid three
+    // 13.6 GB shuffle reads.
+    //
+    // What to fill differs by path (the r11 form — eager count() of the
+    // guarded OUTPUT — serialized the fill but paid a second full
+    // materialization job per query; at sf0.1 that 3x'd dedup_minhash /
+    // dedup_simhash for zero benefit, since the work it fronted was work
+    // the first consumer fused into its own action anyway):
+    // - cacheInput: one count() of the INPUT cache serializes exactly the
+    //   expensive banding compute; the guarded output still persists
+    //   LAZILY — a concurrent first-consumer fill of it now re-runs only
+    //   an in-memory scan + broadcast anti-join (block-level cache locks
+    //   serialize per-partition computes within an executor), never the
+    //   banding.
+    // - !cacheInput (banding cheap to recompute, e.g. hyperplane signs):
+    //   the output cache is the ONLY materialization, so it is the frame
+    //   whose lazy fill would stampede the recompute — fill it eagerly.
+    if (cache && cacheInput) {
       cached.count()
       graft.Caches.track(guarded.persist())
+    } else if (cache) {
+      val out = graft.Caches.track(guarded.persist())
+      out.count()
+      out
     } else guarded
   }
 }

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, UnaryExpression, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -470,10 +470,12 @@ object SortedLongIntersectSize {
   * where the char-level split does). The higher-order form ran on Spark's
   * interpreted lambda path and built the split array before filtering it.
   * Null → null; empty or all-space → empty array. The tokens share one
-  * copy of the text's bytes.
+  * copy of the text's bytes. A non-string argument is cast to string, as
+  * `split` casts it.
   */
-case class Tokens(child: Expression) extends UnaryExpression {
+case class Tokens(child: Expression) extends UnaryExpression with ImplicitCastInputTypes {
 
+  override def inputTypes = Seq(StringType)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullable: Boolean = child.nullable
 

@@ -19,9 +19,8 @@ import org.apache.spark.sql.functions._
   * verification pulls strings back by id through two hash joins of the
   * (small) candidate-pair set. Hash collisions only ever ADD candidates,
   * which verification removes. Ubiquitous keys (mass-duplicated strings)
-  * are capped by the same counts-first bucket guard the banded dedups use,
-  * which also drops the keys only one string emits
-  * ([[graft.dedup.Dedup.pairableBuckets]]; drops reported via observe
+  * are capped by the same counts-first bucket guard the banded dedups use
+  * ([[graft.dedup.Dedup.boundedBuckets]]; drops reported via observe
   * metric `fuzzy_buckets`).
   */
 object FuzzyJoin {
@@ -64,14 +63,14 @@ object FuzzyJoin {
     val keyed = base.select(col("_id"), explode(neighborhood).as("_v"))
       .select(col("_id"), xxhash64(col("_v")).as("_k"))
       .distinct()
-    // the input cache (the helper's default): the counts pass and the
-    // pairable-row pick would otherwise each recompute the
-    // explode+distinct subtree; the cached frame is (id, 8-byte hash)
-    // pairs — small by construction
-    val pairable = graft.dedup.Dedup.pairableBuckets(keyed, Seq("_k"), maxBucket,
+    // cache=true: the guard's counts pass, and the a/b sides of the
+    // candidate self-join below, would otherwise each recompute the
+    // explode+distinct subtree (4 runs of its shuffle); the cached frame
+    // is (id, 8-byte hash) pairs — small by construction
+    val guarded = graft.dedup.Dedup.boundedBuckets(keyed, Seq("_k"), maxBucket,
       "fuzzy_buckets")
-    val a = pairable.select(col("_k"), col("_id").as("a"))
-    val b = pairable.select(col("_k"), col("_id").as("b"))
+    val a = guarded.select(col("_k"), col("_id").as("a"))
+    val b = guarded.select(col("_k"), col("_id").as("b"))
     // the pair join carries NO join-strategy hint, deliberately, in both
     // directions (A/B'd r12 at the 100x probe + sf0.1 idle bench):
     // - at scale, shuffled-hash beat sort-merge here (the two SortExecs

@@ -50,14 +50,14 @@ object SemDedup {
       iters: Int = 10, sampleN: Int = 10000, seed: Long = 11L,
       sampleMod: Int = 1, maxCluster: Int = 10000): DataFrame = {
     val cs = Ivf.trainCentroids(vecs, id, vec, k, iters, sampleN, seed, sampleMod)
-    val clustered = Dedup.pairableBuckets(
+    val clustered = Dedup.boundedBuckets(
       Ivf.index(vecs, id, vec, cs).withColumnRenamed("_cell", "_bucket"),
       Seq("_bucket"), maxCluster, "semdedup_clusters")
     val a = clustered.select(col("_bucket"), col("neighbor_id").as("a"), col("_cv").as("_va"))
     val b = clustered.select(col("_bucket"), col("neighbor_id").as("b"), col("_cv").as("_vb"))
     // one cluster per vector → each (a, b) arises from exactly one join
     // key; no cross-band dedup pass needed (unlike the LSH operators)
-    a.join(b, "_bucket").filter(col("a") < col("b"))
+    a.hint("merge").join(b, "_bucket").filter(col("a") < col("b"))
       .withColumn("cosine", VectorFunctions.cosineFused(col("_va"), col("_vb")))
       .filter(col("cosine") >= threshold)
       .select("a", "b", "cosine")

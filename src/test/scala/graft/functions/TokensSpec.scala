@@ -61,6 +61,17 @@ class TokensSpec extends SparkSpec {
       df.select(reference(col("text"))).schema.head.dataType)
   }
 
+  test("non-string input is cast to string, as split casts it") {
+    val df = Seq((123, "b c"), (-4, "  "), (0, null)).toDF("n", "s")
+      .select(col("n"), col("s").cast("binary").as("b"))
+    Seq("n", "b").foreach { c =>
+      val got = df.selectExpr(s"graft_tokens($c)").collect().map(r => Option(r.getSeq[String](0)))
+      val ref = df.select(reference(col(c))).collect().map(r => Option(r.getSeq[String](0)))
+      assert(got.toSeq === ref.toSeq, c)
+    }
+    assert(df.selectExpr("graft_tokens(n)").head().getSeq[String](0) === Seq("123"))
+  }
+
   test("graft_tokens SQL function goes through the kernel") {
     val r = spark.sql("SELECT graft_tokens(' x  y\tz ') AS t").head().getSeq[String](0)
     assert(r === Seq("x", "y\tz"))

@@ -11,9 +11,10 @@ import graft.functions.UrlFunctions
 
 /** Round-12 seam fuzz, same discipline as Round10/11PropertiesSpec:
   *
-  *  - [[Dedup.boundedBuckets]] (both `cache` arms) and
-  *    [[Dedup.pairableBuckets]] (both `cacheInput` arms) must return
-  *    EXACTLY the naive survivor set, on random bucket distributions;
+  *  - [[Dedup.boundedBuckets]] was restructured (eager fill moved from
+  *    the guarded OUTPUT to the cached INPUT) — every (cache, cacheInput)
+  *    arm, and [[Dedup.pairableBuckets]], must return EXACTLY the naive
+  *    survivor set, on random bucket distributions;
   *  - [[UrlFunctions.canonicalizeUrl]] became a one-pass custom
   *    expression — random messifications of one logical page must
   *    collapse to a single canonical string, canonicalization must be
@@ -45,21 +46,19 @@ class Round12PropertiesSpec extends SparkSpec {
       val sizes = distinctRows.groupBy(_._2).view.mapValues(_.size).toMap
       val naive = distinctRows.filter { case (_, b) => sizes(b) <= bound }.toSet
       val df = distinctRows.toDF("_id", "_bucket")
-      for (cache <- Seq(true, false)) {
+      for ((cache, cacheInput) <- Seq((true, true), (true, false), (false, true))) {
         val got = Dedup.boundedBuckets(df, Seq("_bucket"), bound,
-            s"r12_bb_${obsN.incrementAndGet()}", cache = cache)
+            s"r12_bb_${obsN.incrementAndGet()}", cache = cache, cacheInput = cacheInput)
           .select("_id", "_bucket").as[(Long, Int)].collect().toSet
-        assert(got === naive, s"cache=$cache bound=$bound data=$distinctRows")
+        assert(got === naive,
+          s"cache=$cache cacheInput=$cacheInput bound=$bound data=$distinctRows")
       }
-      // the self-join variant also drops singletons, in both input arms
+      // the self-join variant also drops singletons
       val naivePairable = naive.filter { case (_, b) => sizes(b) >= 2 }
-      for (cacheInput <- Seq(true, false)) {
-        val got = Dedup.pairableBuckets(df, Seq("_bucket"), bound,
-            s"r12_pb_${obsN.incrementAndGet()}", cacheInput = cacheInput)
-          .select("_id", "_bucket").as[(Long, Int)].collect().toSet
-        assert(got === naivePairable,
-          s"pairable cacheInput=$cacheInput bound=$bound data=$distinctRows")
-      }
+      val got = Dedup.pairableBuckets(df, Seq("_bucket"), bound,
+          s"r12_pb_${obsN.incrementAndGet()}")
+        .select("_id", "_bucket").as[(Long, Int)].collect().toSet
+      assert(got === naivePairable, s"pairable bound=$bound data=$distinctRows")
       graft.Caches.clear(spark, blocking = true)
     }
   }
