@@ -63,6 +63,16 @@ object GraftSession {
     *  - `spark.sql.warehouse.dir` under the temp dir, `spark.ui.enabled`
     *    off: no stray `spark-warehouse/` in the working directory, no UI
     *    server per run.
+    *  - `spark.hadoop.fs.file.impl` and
+    *    `spark.hadoop.fs.AbstractFileSystem.file.impl`: local file I/O never
+    *    forks. Without Hadoop's native library (absent from the Spark
+    *    distribution) the stock local file system starts a `chmod` process
+    *    per file created and per directory made, and a `readlink` process
+    *    per `FileContext` rename: 1,737 processes in one `commit_upsert`
+    *    perfbench run, 1,030 in `batch_mix`. [[ForkFreeLocalFileSystem]]
+    *    and [[ForkFreeLocalFs]] (the `FileContext` route of the streaming
+    *    checkpoint and state store files) set the same permission bits
+    *    and return the same statuses without a child process.
     *  - [[GraftExtensions]], installed at build: the graft SQL functions
     *    and optimizer rules are part of every session made from this
     *    builder, including `newSession()` and the clones streaming queries
@@ -86,6 +96,8 @@ object GraftSession {
       .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.sql.warehouse.dir", sys.props("java.io.tmpdir") + "/graft_warehouse")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[ForkFreeLocalFs].getName)
       .withExtensions(new GraftExtensions)
 
   def local(): SparkSession = {

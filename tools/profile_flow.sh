@@ -12,6 +12,12 @@
 # tasks.cpu_s); the recording covers the whole JVM, session start and the
 # untimed warm-up included.
 #
+# It then counts the run's jdk.ProcessStart events (child processes the
+# JVM forked), by command and by the first graft or Spark frame that led
+# to them, and how many had Hadoop's Shell on the stack: the local file
+# system is meant to fork none (see graft.ForkFreeLocalFileSystem), so a
+# nonzero Shell count is a regression.
+#
 # Usage: tools/profile_flow.sh <workload> <seed>
 # Env:
 #   TOP    frames per table (default 25)
@@ -34,27 +40,36 @@ JAVA_TOOL_OPTIONS="-XX:StartFlightRecording=filename=$OUT/$NAME.jfr,settings=pro
   >"$OUT/$NAME.log" 2>&1
 tail -1 "$OUT/$NAME.log" >&2
 jfr print --events jdk.ExecutionSample --stack-depth 512 "$OUT/$NAME.jfr" >"$OUT/$NAME.samples.txt"
+jfr print --events jdk.ProcessStart --stack-depth 512 "$OUT/$NAME.jfr" >"$OUT/$NAME.processes.txt"
 
-python3 - "$OUT/$NAME.samples.txt" "$TOP" <<'EOF'
+python3 - "$OUT/$NAME.samples.txt" "$OUT/$NAME.processes.txt" "$TOP" <<'EOF'
 import re
 import sys
 from collections import Counter
 
-path, top = sys.argv[1], int(sys.argv[2])
-samples = []  # (thread, [frame, ...]) with the top frame first
-thread, frames = None, None
-for line in open(path, errors="replace"):
-    s = line.strip()
-    if s.startswith("sampledThread = "):
-        thread = s[len("sampledThread = "):]
-    elif s == "stackTrace = [":
-        frames = []
-    elif frames is not None and s == "]":
-        samples.append((thread, frames))
-        frames = None
-    elif frames is not None and s and s != "...":
-        # "pkg.Class.method(args) line: N" -> "pkg.Class.method"
-        frames.append(re.sub(r"\(.*$", "", s.split(" line:")[0]))
+samples_path, processes_path, top = sys.argv[1], sys.argv[2], int(sys.argv[3])
+
+
+def events(path, field):
+    """(value of `field`, [frame, ...] with the top frame first) for each
+    event of a `jfr print` dump."""
+    out, value, frames = [], None, None
+    for line in open(path, errors="replace"):
+        s = line.strip()
+        if s.startswith(field + " = "):
+            value = s[len(field) + 3:]
+        elif s == "stackTrace = [":
+            frames = []
+        elif frames is not None and s == "]":
+            out.append((value, frames))
+            value, frames = None, None
+        elif frames is not None and s and s != "...":
+            # "pkg.Class.method(args) line: N" -> "pkg.Class.method"
+            frames.append(re.sub(r"\(.*$", "", s.split(" line:")[0]))
+    return out
+
+
+samples = events(samples_path, "sampledThread")
 
 # task-runner plumbing that sits under every task stack: left out of the
 # inclusive table so the operators and kernels show
@@ -80,4 +95,27 @@ def table(title, subset):
 
 table("all threads", samples)
 table("task threads", [x for x in samples if "Executor task launch worker" in (x[0] or "")])
+
+starts = [((cmd or "?").strip('"'), f) for cmd, f in events(processes_path, "command")]
+
+
+def caller(frames):
+    """The first graft frame, else the first Spark frame, else the top one."""
+    for prefix in ("graft.", "org.apache.spark."):
+        for f in frames:
+            if f.startswith(prefix):
+                return f
+    return frames[0] if frames else "?"
+
+
+shell = sum(1 for _, f in starts if any(x.startswith("org.apache.hadoop.util.Shell") for x in f))
+print(f"\n== processes started (jdk.ProcessStart): {len(starts)}, "
+      f"{shell} with org.apache.hadoop.util.Shell on the stack ==")
+if starts:
+    print(f"-- top {top} by command")
+    for c, n in Counter(cmd.split(" ")[0] for cmd, _ in starts).most_common(top):
+        print(f"{n:7d}  {c}")
+    print(f"-- top {top} by first graft or Spark caller frame")
+    for c, n in Counter(caller(f) for _, f in starts).most_common(top):
+        print(f"{n:7d}  {c}")
 EOF

@@ -9,7 +9,10 @@ property `--prop` is set to the end of the last such job (perfbench sets
 and warm-up jobs carry none). For that window it prints:
 
 - per stage: start (s into the window), wall, tasks, summed task run
-  and CPU time, and the slowest task;
+  and CPU time, the slowest task, the shuffle MB its tasks wrote and
+  read, and the SQL execution id of its job (`spark.sql.execution.id`;
+  most stage names read `$anonfun$withThreadLocalCaptured`, so the id is
+  what ties a stage to its query);
 - a histogram of how many tasks ran at once, as a share of the window;
 - the gaps in which no task ran, longest first.
 
@@ -26,8 +29,8 @@ def load(lines, prop):
     """Parse event-log lines into (window, stages, tasks) for the jobs that
     carry `prop`. Times are epoch ms; `stages` maps (stage, attempt) to a
     dict, `tasks` is a list of (launch, finish, stage, attempt, run_ms,
-    cpu_ms)."""
-    jobs = {}            # job id -> [submit, end, prop value]
+    cpu_ms, shuffle_write_bytes, shuffle_read_bytes)."""
+    jobs = {}            # job id -> [submit, end, prop value, SQL execution id]
     stage_job = {}       # stage id -> job id
     stages = {}
     tasks = []
@@ -40,7 +43,9 @@ def load(lines, prop):
         if kind == "SparkListenerJobStart":
             if (e.get("Properties") or {}).get(prop) is None:
                 continue
-            jobs[e["Job ID"]] = [e["Submission Time"], None, e["Properties"][prop]]
+            props = e["Properties"]
+            jobs[e["Job ID"]] = [e["Submission Time"], None, props[prop],
+                                 props.get("spark.sql.execution.id")]
             for s in e.get("Stage IDs", []):
                 stage_job[s] = e["Job ID"]
         elif kind == "SparkListenerJobEnd" and e["Job ID"] in jobs:
@@ -49,9 +54,11 @@ def load(lines, prop):
             info = e["Stage Info"]
             if info["Stage ID"] not in stage_job:
                 continue
+            job = jobs[stage_job[info["Stage ID"]]]
             stages[(info["Stage ID"], info.get("Stage Attempt ID", 0))] = {
                 "name": info.get("Stage Name", ""),
-                "flow": jobs[stage_job[info["Stage ID"]]][2],
+                "flow": job[2],
+                "sql": job[3],
                 "submit": info.get("Submission Time"),
                 "end": info.get("Completion Time"),
                 "tasks": info.get("Number of Tasks", 0),
@@ -61,9 +68,12 @@ def load(lines, prop):
                 continue
             ti = e["Task Info"]
             m = e.get("Task Metrics") or {}
+            w = m.get("Shuffle Write Metrics") or {}
+            r = m.get("Shuffle Read Metrics") or {}
             tasks.append((ti["Launch Time"], ti["Finish Time"], e["Stage ID"],
                           e.get("Stage Attempt ID", 0), m.get("Executor Run Time", 0),
-                          m.get("Executor CPU Time", 0) / 1e6))
+                          m.get("Executor CPU Time", 0) / 1e6, w.get("Shuffle Bytes Written", 0),
+                          r.get("Remote Bytes Read", 0) + r.get("Local Bytes Read", 0)))
     if not jobs:
         return None, stages, tasks
     start = min(j[0] for j in jobs.values())
@@ -101,26 +111,34 @@ def report(window, stages, tasks, gap_ms=20, out=sys.stdout):
     start, end = window
     wall = end - start
     print(f"timed window: {wall / 1000:.3f} s, {len(stages)} stages, {len(tasks)} tasks", file=out)
+    mb = 1e6  # decimal MB, as perfbench reports shuffle.write_mb
     per = {}
-    for launch, finish, sid, att, run, cpu in tasks:
-        p = per.setdefault((sid, att), [0, 0.0, 0.0, 0])
+    for launch, finish, sid, att, run, cpu, wrote, read in tasks:
+        p = per.setdefault((sid, att), [0, 0.0, 0.0, 0, 0, 0])
         p[0] += 1
         p[1] += run
         p[2] += cpu
         p[3] = max(p[3], finish - launch)
+        p[4] += wrote
+        p[5] += read
     print(f"{'stage':>9} {'start_s':>8} {'wall_s':>7} {'tasks':>5} {'run_s':>7} {'cpu_s':>7} "
-          f"{'slowest_s':>9}  flow / name", file=out)
+          f"{'slowest_s':>9} {'wr_mb':>7} {'rd_mb':>7} {'sql':>5}  flow / name", file=out)
     for key in sorted(stages, key=lambda k: (stages[k]["submit"] or 0, k)):
         st = stages[key]
-        n, run, cpu, slow = per.get(key, [0, 0, 0.0, 0])
+        n, run, cpu, slow, wrote, read = per.get(key, [0, 0, 0.0, 0, 0, 0])
         sub = st["submit"] or start
         dur = (st["end"] or sub) - sub
         sid = f"{key[0]}" + (f".{key[1]}" if key[1] else "")
+        sql = st["sql"] if st["sql"] is not None else "-"
         print(f"{sid:>9} {(sub - start) / 1000:8.3f} {dur / 1000:7.3f} {n:5d} {run / 1000:7.3f} "
-              f"{cpu / 1000:7.3f} {slow / 1000:9.3f}  {st['flow']} / {st['name'][:50]}", file=out)
+              f"{cpu / 1000:7.3f} {slow / 1000:9.3f} {wrote / mb:7.2f} {read / mb:7.2f} {sql:>5}  "
+              f"{st['flow']} / {st['name'][:50]}", file=out)
     tot_run = sum(t[4] for t in tasks) / 1000
     tot_cpu = sum(t[5] for t in tasks) / 1000
-    print(f"{'total':>9} {'':8} {'':7} {len(tasks):5d} {tot_run:7.3f} {tot_cpu:7.3f}", file=out)
+    tot_wr = sum(t[6] for t in tasks) / mb
+    tot_rd = sum(t[7] for t in tasks) / mb
+    print(f"{'total':>9} {'':8} {'':7} {len(tasks):5d} {tot_run:7.3f} {tot_cpu:7.3f} {'':9} "
+          f"{tot_wr:7.2f} {tot_rd:7.2f}", file=out)
     hist, gaps = concurrency(window, tasks)
     print("tasks running at once (share of the window):", file=out)
     for k in sorted(hist):
