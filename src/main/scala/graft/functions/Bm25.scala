@@ -24,23 +24,9 @@ object Bm25 {
     */
   def scores(docs: DataFrame, id: String, text: Column,
       k1: Double = 1.2, b: Double = 0.75,
-      onlyTerms: Option[Seq[String]] = None): DataFrame = {
-    val toks = docs.select(col(id), explode(TextFunctions.tokens(text)).as("term"))
-    val toksForTf = onlyTerms.fold(toks)(ts => toks.filter(col("term").isin(ts: _*)))
-    val tf = toksForTf.groupBy(col(id), col("term"))
-      .agg(count(lit(1)).cast("double").as("tf"))
-    val dl = toks.groupBy(col(id))
-      .agg(count(lit(1)).cast("double").as("dl"))
-    val stats = dl.agg(count(lit(1)).cast("double").as("n_docs"), avg(col("dl")).as("avgdl"))
-    val dfr = tf.groupBy(col("term")).agg(count(lit(1)).cast("double").as("df"))
-    val idf = log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1)
-    val tfNorm = col("tf") * (k1 + 1) /
-      (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / col("avgdl")))
-    tf.join(dl, id)
-      .crossJoin(broadcast(stats))
-      .join(dfr, "term")
-      .select(col(id), col("term"), (idf * tfNorm).as("score"))
-  }
+      onlyTerms: Option[Seq[String]] = None): DataFrame =
+    score(docs, id, text, k1, b)(toks =>
+      onlyTerms.fold(toks)(ts => toks.filter(col("term").isin(ts: _*))))
 
   /** [[scores]] with the query terms as a (distinct, small) DATAFRAME —
     * the entry for DATA-DEPENDENT term sets (pseudo-relevance-feedback
@@ -52,10 +38,18 @@ object Bm25 {
     * literal path.
     */
   def scoresFor(docs: DataFrame, id: String, text: Column, terms: DataFrame,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+      k1: Double = 1.2, b: Double = 0.75): DataFrame =
+    score(docs, id, text, k1, b)(
+      _.join(broadcast(terms.select(col("term"))), Seq("term")))
+
+  /** The scoring body of [[scores]] and [[scoresFor]]: `prune` maps the
+    * (id, term) token frame to the tokens whose term frequencies are
+    * scored; document lengths and corpus stats use every token.
+    */
+  private def score(docs: DataFrame, id: String, text: Column, k1: Double,
+      b: Double)(prune: DataFrame => DataFrame): DataFrame = {
     val toks = docs.select(col(id), explode(TextFunctions.tokens(text)).as("term"))
-    val toksForTf = toks.join(broadcast(terms.select(col("term"))), Seq("term"))
-    val tf = toksForTf.groupBy(col(id), col("term"))
+    val tf = prune(toks).groupBy(col(id), col("term"))
       .agg(count(lit(1)).cast("double").as("tf"))
     val dl = toks.groupBy(col(id))
       .agg(count(lit(1)).cast("double").as("dl"))

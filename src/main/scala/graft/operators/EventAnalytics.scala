@@ -40,33 +40,38 @@ object Funnel {
     require(windowUs.forall(_ > 0), "funnel: windowUs must be positive")
     val ev = events.select(Seq(user.as("_u"), tsUs.as("_ts")) ++
       steps.zipWithIndex.map { case ((_, p), i) => p.as(s"_m$i") }: _*)
-    // chained min-reductions: pass i joins the (user, t_0..t_{i-1})
-    // frame — one row per SURVIVING user — against the step-i events;
-    // every pass is map-side combined before its exchange. Each step's
-    // reach count is folded off the intermediate frame as a 1-row
-    // aggregate; the union of those is the funnel.
-    var cur = ev.filter(col("_m0")).groupBy(col("_u"))
-      .agg(min(col("_ts")).as("_t0"))
-    val counts = scala.collection.mutable.Buffer(
+    // each step's reach count is folded off its chain frame as a 1-row
+    // aggregate; the union of those is the funnel
+    chain(ev, steps.size, windowUs).zipWithIndex.map { case (cur, i) =>
       cur.agg(count(lit(1)).as("n_users"))
-        .select(lit(1).as("step_seq"), lit(steps.head._1).as("step_name"),
-          col("n_users")))
-    for (i <- 1 until steps.size) {
-      val prev = col(s"_t${i - 1}")
-      val inWindow = windowUs.fold(lit(true))(w => col("_ts") <= col("_t0") + w)
-      cur = ev.filter(col(s"_m$i"))
-        .join(cur, "_u")
-        .filter(col("_ts") > prev && inWindow)
-        .groupBy(col("_u"))
-        // first() over values identical within the group (t_j rides the
-        // join from a one-row-per-user frame) — deterministic
-        .agg(min(col("_ts")).as(s"_t$i"),
-          (0 until i).map(j => first(col(s"_t$j")).as(s"_t$j")): _*)
-      counts += cur.agg(count(lit(1)).as("n_users"))
         .select(lit(i + 1).as("step_seq"), lit(steps(i)._1).as("step_name"),
           col("n_users"))
+    }.reduce(_.unionAll(_))
+  }
+
+  /** The greedy step chain shared by [[reach]] and [[Sequences
+    * .matchPattern]], over `ev` = (_u, _ts, _m0.._m{nSteps-1}, ...): frame
+    * i holds (_u, _t0.._ti), one row per key that reached step i+1, where
+    * _t0 is the key's earliest _m0 event and each later _ti its earliest
+    * _mi event strictly after _t{i-1} (within `windowUs` of _t0). Chained min-reductions: pass i joins the previous frame — one
+    * row per SURVIVING key — against the step-i events; every pass is
+    * map-side combined before its exchange.
+    */
+  private[operators] def chain(ev: DataFrame, nSteps: Int,
+      windowUs: Option[Long]): Seq[DataFrame] = {
+    val t0 = ev.filter(col("_m0")).groupBy(col("_u"))
+      .agg(min(col("_ts")).as("_t0"))
+    (1 until nSteps).scanLeft(t0) { (cur, i) =>
+      val inWindow = windowUs.fold(lit(true))(w => col("_ts") <= col("_t0") + w)
+      ev.filter(col(s"_m$i"))
+        .join(cur, "_u")
+        .filter(col("_ts") > col(s"_t${i - 1}") && inWindow)
+        .groupBy(col("_u"))
+        // first() over values identical within the group (t_j rides the
+        // join from a one-row-per-key frame) — deterministic
+        .agg(min(col("_ts")).as(s"_t$i"),
+          (0 until i).map(j => first(col(s"_t$j")).as(s"_t$j")): _*)
     }
-    counts.reduce(_.unionAll(_))
   }
 }
 
@@ -135,11 +140,12 @@ object Sequences {
     * Output: one row per matched key — (key, t_<name> per step), all
     * BIGINT microseconds.
     *
-    * Scale shape: the chained min-reductions are [[Funnel.reach]]'s —
-    * each pass partial-aggregates (key, min ts) before its exchange, one
-    * row per surviving key — and the negation is ONE anti-join of the
-    * survivors against the excluded events, keyed by `key`. No per-key
-    * event buffer, no ordered scan, no window over raw events.
+    * Scale shape: the chained min-reductions are [[Funnel.chain]], the
+    * same passes as [[Funnel.reach]] — each pass partial-aggregates
+    * (key, min ts) before its exchange, one row per surviving key — and
+    * the negation is ONE anti-join of the survivors against the excluded
+    * events, keyed by `key`. No per-key event buffer, no ordered scan, no
+    * window over raw events.
     */
   def matchPattern(events: DataFrame, key: Column, tsUs: Column,
       steps: Seq[(String, Column)], exclude: Column,
@@ -150,17 +156,7 @@ object Sequences {
         tsUs.as("_ts"), exclude.as("_x")) ++
         steps.zipWithIndex.map { case ((_, p), i) => p.as(s"_m$i") }: _*)
       .persist())
-    var cur = ev.filter(col("_m0")).groupBy(col("_u"))
-      .agg(min(col("_ts")).as("_t0"))
-    for (i <- 1 until steps.size) {
-      val inWindow = windowUs.fold(lit(true))(w => col("_ts") <= col("_t0") + w)
-      cur = ev.filter(col(s"_m$i"))
-        .join(cur, "_u")
-        .filter(col("_ts") > col(s"_t${i - 1}") && inWindow)
-        .groupBy(col("_u"))
-        .agg(min(col("_ts")).as(s"_t$i"),
-          (0 until i).map(j => first(col(s"_t$j")).as(s"_t$j")): _*)
-    }
+    val cur = Funnel.chain(ev, steps.size, windowUs).last
     val last = col(s"_t${steps.size - 1}")
     val poison = ev.filter(col("_x")).select(col("_u"), col("_ts").as("_xts"))
     val clean = cur.join(poison,

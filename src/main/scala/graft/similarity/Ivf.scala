@@ -197,11 +197,6 @@ object Ivf {
       excludeSelf: Boolean = true): DataFrame =
     probe(queries, indexed, qId, qVec, centroids, k, nProbe, excludeSelf)
 
-  /** Shared probe: explode each query's nProbe nearest cells, equi-join
-    * the cell index, score, keep top-k per query. `corpusVec` is evaluated
-    * AFTER the join, so a compressed index representation stays compressed
-    * across the exchange.
-    */
   /** [[search]] for STREAMING query frames: the per-query rank window —
     * which does not exist on an unbounded stream — is replaced by the
     * bounded arg-top-k aggregate ([[graft.functions.BoundedTopKPair]])
@@ -231,6 +226,11 @@ object Ivf {
         col("_key"), col("neighbor_id"), k).as("_top"))
   }
 
+  /** Shared probe: explode each query's nProbe nearest cells, equi-join
+    * the cell index, score, keep top-k per query. `corpusVec` is evaluated
+    * AFTER the join, so a compressed index representation stays compressed
+    * across the exchange.
+    */
   private def probe(queries: DataFrame, indexed: DataFrame, qId: String, qVec: String,
       centroids: Array[Array[Double]], k: Int, nProbe: Int,
       excludeSelf: Boolean, corpusVec: Column = col("_cv")): DataFrame = {

@@ -193,6 +193,21 @@ object StreamOps {
     }
   }
 
+  /** The input of a `transformWithState` stream: (key, us, `payload`...,
+    * ts), with `tsCol` normalized BEFORE the watermark and passed through
+    * UNCAST as `ts`. A real cast (TIMESTAMP_NTZ input) would mint a new
+    * attribute without the event-time metadata the watermark attached,
+    * and transformWithState would then silently skip late-row filtering:
+    * a late event could re-open an already-emitted session, re-rank a
+    * final quota rank or change a final chain outcome.
+    */
+  private def keyedEvents(events: DataFrame, keyCol: String, tsCol: String,
+      watermarkDelay: String, payload: org.apache.spark.sql.Column*): DataFrame =
+    graft.GraftSession.normalizeTsStrict(events, tsCol)
+      .withWatermark(tsCol, watermarkDelay)
+      .select(Seq(col(keyCol).cast("long").as("key"),
+        unix_micros(col(tsCol)).as("us")) ++ payload :+ col(tsCol).as("ts"): _*)
+
   // ---- streaming sessionization (transformWithState) --------------------
 
   final case class SessEvent(key: Long, us: Long, ts: java.sql.Timestamp)
@@ -286,21 +301,10 @@ object StreamOps {
     require(gapSeconds > 0, "sessionizeStream: gapSeconds must be positive")
     import events.sparkSession.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    // normalize ts BEFORE the watermark and pass the attribute through
-    // UNCAST: a real cast (TIMESTAMP_NTZ input) would mint a new
-    // attribute without the event-time metadata the watermark attached,
-    // and transformWithState would then silently skip late-row filtering
-    // — a late event could re-open an already-emitted session
-    val ev = graft.GraftSession.normalizeTsStrict(events, tsCol)
-    val typed = ev
-      .withWatermark(tsCol, watermarkDelay)
-      .select(col(keyCol).cast("long").as("key"),
-        unix_micros(col(tsCol)).as("us"),
-        col(tsCol).as("ts"))
-      .as[SessEvent]
-    typed.groupByKey(_.key).transformWithState(
-      new GapSessionProcessor(gapSeconds * 1000000L),
-      TimeMode.EventTime(), OutputMode.Append())
+    keyedEvents(events, keyCol, tsCol, watermarkDelay).as[SessEvent]
+      .groupByKey(_.key).transformWithState(
+        new GapSessionProcessor(gapSeconds * 1000000L),
+        TimeMode.EventTime(), OutputMode.Append())
   }
 
   // ---- streaming per-key quota (transformWithState) ----------------------
@@ -390,50 +394,52 @@ object StreamOps {
     require(k > 0, "quotaStream: k must be positive")
     import events.sparkSession.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    // same pre-watermark normalization as sessionizeStream: the cast-free
-    // ts passthrough keeps the watermark's event-time metadata alive into
-    // the stateful operator (late-row filtering is what makes a
-    // finalized rank immutable)
-    val ev = graft.GraftSession.normalizeTsStrict(events, tsCol)
-    val typed = ev
-      .withWatermark(tsCol, watermarkDelay)
-      .select(col(keyCol).cast("long").as("key"),
-        unix_micros(col(tsCol)).as("us"),
-        col(idCol).cast("long").as("eventId"),
-        col(tsCol).as("ts"))
-      .as[QuotaEvent]
-    typed.groupByKey(_.key).transformWithState(
-      new QuotaProcessor(k), TimeMode.EventTime(), OutputMode.Append())
+    keyedEvents(events, keyCol, tsCol, watermarkDelay,
+        col(idCol).cast("long").as("eventId")).as[QuotaEvent]
+      .groupByKey(_.key).transformWithState(
+        new QuotaProcessor(k), TimeMode.EventTime(), OutputMode.Append())
   }
 
-  // ---- streaming conversion funnel (transformWithState) ------------------
+  // ---- streaming step chains: funnel and CEP pattern (transformWithState) -
 
   final case class FunnelEvent(key: Long, us: Long, mask: Int,
       ts: java.sql.Timestamp)
   final case class FunnelOut(key: Long, steps_reached: Int, t0_us: Long)
+  final case class PatternOut(key: Long, t0_us: Long, t_last_us: Long)
+  private[streaming] final case class ChainOut(key: Long, reached: Int,
+      t0_us: Long, t_last_us: Long, poisoned: Boolean)
 
-  /** Per-key funnel state machine for [[funnelStream]] — the streaming
-    * twin of [[graft.operators.Funnel.reach]]. A key's funnel anchors at
-    * t0 = the earliest step-1 event; each later step is the earliest
-    * matching event strictly after the previous step's time, within
-    * `windowUs` of t0. The outcome is FINAL once the watermark passes
-    * t0 + window: t0 itself can no longer decrease (later arrivals have
-    * ts ≥ watermark) and every event that could participate is already
-    * final — one row (key, steps_reached, t0_us) emits, a tombstone
-    * replaces the state, and the key goes quiet.
+  /** Greedy step-chain state machine for [[funnelStream]] and
+    * [[patternStream]] — the streaming twin of [[graft.operators.Funnel
+    * .chain]]. An event's mask bit i (i < nSteps) says it matches step
+    * i+1; bit `nSteps` marks an EXCLUDED event (patterns only). A key's
+    * chain anchors at t0 = the earliest step-1 event; each later step is
+    * the earliest matching event strictly after the previous step's time,
+    * within `windowUs` of t0. The outcome is FINAL once the watermark
+    * passes t0 + window: t0 itself can no longer decrease (later arrivals
+    * have ts ≥ watermark) and every event that could participate is
+    * already final — the chained strictly-after replay runs over the
+    * immutable in-window events, one row (key, reached, t0, t_last,
+    * poisoned) emits, a tombstone replaces the state, and the key goes
+    * quiet. `poisoned`: the chain completed all steps and an excluded
+    * event lies strictly inside (t0, t_last).
     *
     * State bound: before t0 is known, only events the watermark hasn't
     * passed are kept (an earlier t0 can still arrive, but only at
-    * ts ≥ watermark); once a t0 candidate exists, only step-2+ events
-    * with ts ≤ t0cand + window are kept — t0 only ever DECREASES, so the
-    * window end tightens monotonically and the buffer is bounded by the
-    * window span plus the in-flight horizon, never a key's history.
+    * ts ≥ watermark); once a t0 candidate exists, only step-2+ and
+    * excluded events with ts ≤ t0cand + window are kept — t0 only ever
+    * DECREASES, so the window end tightens monotonically and the buffer
+    * is bounded by the window span plus the in-flight horizon, never a
+    * key's history.
     */
-  private class FunnelProcessor(nSteps: Int, windowUs: Long)
+  private class ChainProcessor(nSteps: Int, windowUs: Long)
       extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, FunnelEvent, FunnelOut] {
+        Long, FunnelEvent, ChainOut] {
     import org.apache.spark.sql.streaming._
 
+    // the names and encoders of `done`, `t0` and `buf` are the state
+    // schema of every funnel and pattern checkpoint: changing one breaks
+    // restarting a query from its checkpoint
     @transient private var done: ValueState[Boolean] = _
     @transient private var t0: ValueState[Long] = _
     @transient private var buf: ListState[(Long, Int)] = _
@@ -450,7 +456,7 @@ object StreamOps {
     }
 
     private def step(key: Long, incoming: List[(Long, Int)],
-        wmUs: Long): Iterator[FunnelOut] = {
+        wmUs: Long): Iterator[ChainOut] = {
       val stored: Long = Option(t0.get()).getOrElse(Long.MaxValue)
       val incomingMin: Long = incoming.filter(e => (e._2 & 1) == 1).map(_._1)
         .reduceOption((a: Long, b: Long) => math.min(a, b))
@@ -469,8 +475,11 @@ object StreamOps {
             if reached < nSteps && us > t && ((mask >> reached) & 1) == 1) {
           t = us; reached += 1
         }
+        val poisoned = reached == nSteps && laterSteps.exists { case (us, mask) =>
+          ((mask >> nSteps) & 1) == 1 && us > t0cand && us < t
+        }
         buf.clear(); t0.clear(); done.update(true)
-        Iterator.single(FunnelOut(key, reached, t0cand))
+        Iterator.single(ChainOut(key, reached, t0cand, t, poisoned))
       } else {
         buf.clear()
         if (laterSteps.nonEmpty) buf.put(laterSteps.toArray)
@@ -484,17 +493,33 @@ object StreamOps {
     }
 
     override def handleInputRows(key: Long, rows: Iterator[FunnelEvent],
-        tv: TimerValues): Iterator[FunnelOut] = {
+        tv: TimerValues): Iterator[ChainOut] = {
       if (done.exists()) return Iterator.empty
       step(key, rows.map(e => (e.us, e.mask)).toList,
         tv.getCurrentWatermarkInMs() * 1000L)
     }
 
     override def handleExpiredTimer(key: Long, tv: TimerValues,
-        info: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[FunnelOut] = {
+        info: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[ChainOut] = {
       if (done.exists()) return Iterator.empty
       step(key, Nil, tv.getCurrentWatermarkInMs() * 1000L)
     }
+  }
+
+  /** One [[ChainOut]] per watermark-final key, over the events whose
+    * `mask` (see [[ChainProcessor]]) is nonzero.
+    */
+  private def chainStream(events: DataFrame, keyCol: String, tsCol: String,
+      mask: org.apache.spark.sql.Column, nSteps: Int, windowUs: Long,
+      watermarkDelay: String): org.apache.spark.sql.Dataset[ChainOut] = {
+    import events.sparkSession.implicits._
+    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
+    keyedEvents(events, keyCol, tsCol, watermarkDelay, mask.cast("int").as("mask"))
+      .filter(col("mask") =!= 0)
+      .as[FunnelEvent]
+      .groupByKey(_.key).transformWithState(
+        new ChainProcessor(nSteps, windowUs),
+        TimeMode.EventTime(), OutputMode.Append())
   }
 
   /** Streaming conversion funnel: one row (key, steps_reached, t0_us)
@@ -514,107 +539,12 @@ object StreamOps {
         "1 << 32 would alias step 33 into step 1)")
     require(windowUs > 0, "funnelStream: windowUs must be positive")
     import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     val mask = steps.zipWithIndex
       .map { case (p, i) => when(p, 1 << i).otherwise(0) }
       .reduce(_ + _)
-    val ev = graft.GraftSession.normalizeTsStrict(events, tsCol)
-    val typed = ev
-      .withWatermark(tsCol, watermarkDelay)
-      .select(col(keyCol).cast("long").as("key"),
-        unix_micros(col(tsCol)).as("us"),
-        mask.cast("int").as("mask"),
-        col(tsCol).as("ts"))
-      .filter(col("mask") =!= 0)
-      .as[FunnelEvent]
-    typed.groupByKey(_.key).transformWithState(
-      new FunnelProcessor(steps.size, windowUs),
-      TimeMode.EventTime(), OutputMode.Append())
-  }
-
-  // ---- streaming CEP pattern with negation (transformWithState) ----------
-
-  final case class PatternOut(key: Long, t0_us: Long, t_last_us: Long)
-
-  /** Per-key pattern state machine for [[patternStream]] — the streaming
-    * twin of [[graft.operators.Sequences.matchPattern]]. Identical
-    * anchoring and finality to [[FunnelProcessor]] (t0 = earliest step-1
-    * event, final once the watermark passes t0 + window), with one more
-    * event class in the buffer: EXCLUDED events, marked by mask bit
-    * `nSteps`. At finality the chained strictly-after replay runs over
-    * the immutable in-window events; the key emits only if the chain
-    * completed ALL steps and no excluded event lies strictly inside
-    * (t0, t_last). Same state bound as the funnel — the buffer holds
-    * in-window step and excluded events, never a key's history.
-    */
-  private class PatternProcessor(nSteps: Int, windowUs: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, FunnelEvent, PatternOut] {
-    import org.apache.spark.sql.streaming._
-
-    @transient private var done: ValueState[Boolean] = _
-    @transient private var t0: ValueState[Long] = _
-    @transient private var buf: ListState[(Long, Int)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      done = getHandle.getValueState("done",
-        org.apache.spark.sql.Encoders.scalaBoolean, TTLConfig.NONE)
-      t0 = getHandle.getValueState("t0",
-        org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
-      buf = getHandle.getListState("buf",
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.scalaInt), TTLConfig.NONE)
-    }
-
-    private def step(key: Long, incoming: List[(Long, Int)],
-        wmUs: Long): Iterator[PatternOut] = {
-      val stored: Long = Option(t0.get()).getOrElse(Long.MaxValue)
-      val incomingMin: Long = incoming.filter(e => (e._2 & 1) == 1).map(_._1)
-        .reduceOption((a: Long, b: Long) => math.min(a, b))
-        .getOrElse(Long.MaxValue)
-      val t0cand = math.min(stored, incomingMin)
-      val laterSteps = (buf.get().toList ++ incoming.filter(e => (e._2 & ~1) != 0))
-        .filter(e =>
-          if (t0cand == Long.MaxValue) e._1 >= wmUs
-          else e._1 <= t0cand + windowUs)
-      if (t0cand != Long.MaxValue && t0cand + windowUs < wmUs) {
-        var t = t0cand
-        var reached = 1
-        for ((us, mask) <- laterSteps.sorted
-            if reached < nSteps && us > t && ((mask >> reached) & 1) == 1) {
-          t = us; reached += 1
-        }
-        val poisoned = reached == nSteps && laterSteps.exists { case (us, mask) =>
-          ((mask >> nSteps) & 1) == 1 && us > t0cand && us < t
-        }
-        buf.clear(); t0.clear(); done.update(true)
-        if (reached == nSteps && !poisoned)
-          Iterator.single(PatternOut(key, t0cand, t))
-        else Iterator.empty
-      } else {
-        buf.clear()
-        if (laterSteps.nonEmpty) buf.put(laterSteps.toArray)
-        if (t0cand != Long.MaxValue) {
-          t0.update(t0cand)
-          getHandle.registerTimer((t0cand + windowUs) / 1000L + 1L)
-        }
-        Iterator.empty
-      }
-    }
-
-    override def handleInputRows(key: Long, rows: Iterator[FunnelEvent],
-        tv: TimerValues): Iterator[PatternOut] = {
-      if (done.exists()) return Iterator.empty
-      step(key, rows.map(e => (e.us, e.mask)).toList,
-        tv.getCurrentWatermarkInMs() * 1000L)
-    }
-
-    override def handleExpiredTimer(key: Long, tv: TimerValues,
-        info: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[PatternOut] = {
-      if (done.exists()) return Iterator.empty
-      step(key, Nil, tv.getCurrentWatermarkInMs() * 1000L)
-    }
+    chainStream(events, keyCol, tsCol, mask, steps.size, windowUs, watermarkDelay)
+      .select(col("key"), col("reached").as("steps_reached"), col("t0_us"))
+      .as[FunnelOut]
   }
 
   /** Streaming CEP pattern with negation: one row (key, t0_us, t_last_us)
@@ -634,23 +564,14 @@ object StreamOps {
       "patternStream: at most 30 steps (bit nSteps marks excluded events)")
     require(windowUs > 0, "patternStream: windowUs must be positive")
     import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     val mask = (steps.zipWithIndex
       .map { case (p, i) => when(p, 1 << i).otherwise(0) } :+
       when(exclude, 1 << steps.size).otherwise(0))
       .reduce(_ + _)
-    val ev = graft.GraftSession.normalizeTsStrict(events, tsCol)
-    val typed = ev
-      .withWatermark(tsCol, watermarkDelay)
-      .select(col(keyCol).cast("long").as("key"),
-        unix_micros(col(tsCol)).as("us"),
-        mask.cast("int").as("mask"),
-        col(tsCol).as("ts"))
-      .filter(col("mask") =!= 0)
-      .as[FunnelEvent]
-    typed.groupByKey(_.key).transformWithState(
-      new PatternProcessor(steps.size, windowUs),
-      TimeMode.EventTime(), OutputMode.Append())
+    chainStream(events, keyCol, tsCol, mask, steps.size, windowUs, watermarkDelay)
+      .filter(col("reached") === steps.size && !col("poisoned"))
+      .select(col("key"), col("t0_us"), col("t_last_us"))
+      .as[PatternOut]
   }
 
   /** Custom stateful processing: per-key state folded over arriving
@@ -879,22 +800,6 @@ object StreamOps {
       }
       .start()
 
-  /** Stream a CDC feed into a maintained [[graft.sinks.Upsert]] table:
-    * each micro-batch of I/U/D change rows is applied copy-on-write —
-    * only the buckets containing the batch's keys are rewritten, one
-    * transaction per batch. Create the table ([[graft.sinks.Upsert
-    * .create]]) before starting the sink.
-    *
-    * Exactly-once: an `_applied/<writerId>-<batchId>` marker records each
-    * applied batch, so a replayed batch (restart before the checkpoint
-    * advanced) is skipped; a crash between the upsert's commit and the
-    * marker write re-applies the SAME changes, which is a state no-op
-    * (same winners, same values — only a generation number is burned).
-    * The writer id hashes the CHECKPOINT path: a fresh checkpoint replays
-    * history under a new id instead of colliding with the old markers —
-    * and a full-history replay is itself idempotent as long as `seq` is
-    * globally ordered (the max-seq winner per key IS the current state).
-    */
   /** Streaming CSV ingest with corrupt-record QUARANTINE routing — the
     * continuous form of [[graft.sources.Sources.csvQuarantine]]: each
     * micro-batch parses once (PERMISSIVE + `_corrupt_record`), splits
@@ -934,6 +839,22 @@ object StreamOps {
       .start()
   }
 
+  /** Stream a CDC feed into a maintained [[graft.sinks.Upsert]] table:
+    * each micro-batch of I/U/D change rows is applied copy-on-write —
+    * only the buckets containing the batch's keys are rewritten, one
+    * transaction per batch. Create the table ([[graft.sinks.Upsert
+    * .create]]) before starting the sink.
+    *
+    * Exactly-once: an `_applied/<writerId>-<batchId>` marker records each
+    * applied batch, so a replayed batch (restart before the checkpoint
+    * advanced) is skipped; a crash between the upsert's commit and the
+    * marker write re-applies the SAME changes, which is a state no-op
+    * (same winners, same values — only a generation number is burned).
+    * The writer id hashes the CHECKPOINT path: a fresh checkpoint replays
+    * history under a new id instead of colliding with the old markers —
+    * and a full-history replay is itself idempotent as long as `seq` is
+    * globally ordered (the max-seq winner per key IS the current state).
+    */
   def upsertSink(changes: DataFrame, tableDir: String, checkpoint: String,
       op: String = "_op", seq: String = "_seq",
       trigger: Trigger = Trigger.AvailableNow())

@@ -72,4 +72,37 @@ class FunnelParitySpec extends SparkSpec {
       assert(got === Seq((1L, 1, 100L * S)))
     }
   }
+
+  test("funnelStream parity: per-step reach equals batch Funnel.reach on a replayed feed") {
+    withStream(windowSec = 1000L, delay = "500 seconds") { (input, q) =>
+      // pseudo-random feed over 20 users and twice the window, so reach
+      // drops at every step and the window cuts some chains; "x" matches
+      // no step
+      val feed = (0 until 120).map { i =>
+        val h = i * 2654435761L
+        val u = 1L + math.abs(h % 20)
+        val ts = 10L + math.abs((h >> 7) % 2000)
+        val t = Seq("a", "b", "c", "x")(math.abs((h >> 17) % 4).toInt)
+        (u, ts, t)
+      }
+      input.addData(feed: _*)
+      q.processAllAvailable()
+      input.addData((99L, 100000L, "a")) // close every window
+      q.processAllAvailable()
+      val streamed = spark.table("tws_funnel")
+        .as[(Long, Int, Long)].collect().toSeq
+      val batch = graft.operators.Funnel.reach(
+        feed.toDF("u", "sec", "t")
+          .select(col("u"), (col("sec") * S).as("us"), col("t")),
+        col("u"), col("us"),
+        steps = Seq("a" -> (col("t") === "a"), "b" -> (col("t") === "b"),
+          "c" -> (col("t") === "c")),
+        windowUs = Some(1000L * S))
+        .as[(Int, String, Long)].collect().map(r => r._1 -> r._3).toMap
+      assert(batch.keySet === Set(1, 2, 3))
+      assert(batch(1) > batch(2) && batch(2) > batch(3) && batch(3) > 0L)
+      for (i <- 1 to 3)
+        assert(streamed.count(_._2 >= i).toLong === batch(i), s"step $i")
+    }
+  }
 }

@@ -11,7 +11,9 @@
 # per-query paired min ratios to OUT, and the median over passes of each
 # pass's own new/old ratio. The min-of-minimums ratio is set by the one
 # luckiest run of either side; the per-pass median is the steadier read.
-# Judge regressions on these ratios (<= 1.05 = clean).
+# Judge regressions on these ratios (<= 1.05 = clean). A query that fails
+# any run on either side is listed under `failed`, makes the result
+# unclean and the script exit 1 (tools/bench_ab_merge.py).
 #
 # Usage: QUERIES=q1,q2 tools/bench_ab.sh [OLD_SHA]
 #   OLD_SHA defaults to HEAD^ (the parent of the change under test)
@@ -62,7 +64,8 @@ run_side() {  # side classes_root pass
   local out="/tmp/bench_ab_${side}_${pass}.json"
   rm -f "$out"
   # a query name the old binary does not know is silently absent from its
-  # JSON — the merge intersects, so mixed subsets are safe
+  # JSON — the merge intersects, so mixed subsets are safe (a query that
+  # FAILS stays in the JSON's `failed` list, which the merge reads)
   SPARK_GRAFT_ONLY="$QUERIES" SPARK_GRAFT_RUNS="$RUNS" \
   SPARK_GRAFT_SF_DIR=${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1} \
   SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-$(nproc)} \
@@ -85,54 +88,9 @@ for pass in $(seq 1 "$PASSES"); do
   done
 done
 
-python3 - "$OUT" "$OLD_SHA" "$NEW_SHA" "$PASSES" <<'EOF'
-import json, statistics, sys
-out, old_sha, new_sha, passes = sys.argv[1], sys.argv[2], sys.argv[3], int(sys.argv[4])
-def per_pass(side):
-    """[{query: min over the pass's runs}] per pass"""
-    return [{q: v for q, v in (json.load(open(f"/tmp/bench_ab_{side}_{p}.json"))
-                                .get("queries_min") or {}).items() if v is not None}
-            for p in range(1, passes + 1)]
-old_p, new_p = per_pass("old"), per_pass("new")
-def mins(ps):
-    acc = {}
-    for d in ps:
-        for q, v in d.items():
-            acc.setdefault(q, []).append(v)
-    return {q: min(vs) for q, vs in acc.items()}
-old, new = mins(old_p), mins(new_p)
-common = sorted(set(old) & set(new))
-def pass_ratios(qs):
-    rs = []
-    for o, n in zip(old_p, new_p):
-        if all(q in o and q in n for q in qs) and sum(o[q] for q in qs):
-            rs.append(sum(n[q] for q in qs) / sum(o[q] for q in qs))
-    return rs
-def median(rs):
-    return round(statistics.median(rs), 3) if rs else None
-qs = {q: {"old_min": old[q], "new_min": new[q],
-          "ratio": round(new[q] / old[q], 3),
-          "ratio_pass_median": median(pass_ratios([q]))} for q in common}
-minsum_old = sum(old[q] for q in common)
-minsum_new = sum(new[q] for q in common)
-ratio = round(minsum_new / minsum_old, 3) if minsum_old else None
-ratios = pass_ratios(common)
-result = {
-    "metric": "bench_ab", "old_sha": old_sha, "new_sha": new_sha,
-    "passes": passes, "paired": "old/new per pass, first side alternating, same host",
-    "minsum_old": round(minsum_old, 3), "minsum_new": round(minsum_new, 3),
-    "ratio_minsum": ratio, "clean": ratio is not None and ratio <= 1.05,
-    "ratio_pass_median": median(ratios), "pass_ratios": [round(r, 3) for r in ratios],
-    "new_only": sorted(set(new) - set(old)),
-    "queries": qs,
-}
-with open(out, "w") as f:
-    json.dump(result, f, separators=(",", ":"))
-    f.write("\n")
-flagged = {q: v["ratio"] for q, v in qs.items() if v["ratio"] > 1.2}
-print(f"[bench_ab] wrote {out}: minsum {minsum_old:.2f} -> {minsum_new:.2f} "
-      f"(ratio {ratio}, clean={ratio is not None and ratio <= 1.05}); "
-      f"median of per-pass ratios {median(ratios)} over {[round(r, 3) for r in ratios]}")
-if flagged:
-    print(f"[bench_ab] per-query ratios > 1.2: {flagged}")
-EOF
+pass_files=()
+for pass in $(seq 1 "$PASSES"); do
+  pass_files+=("/tmp/bench_ab_old_${pass}.json" "/tmp/bench_ab_new_${pass}.json")
+done
+# exits 1 when any run of a query failed on either side
+python3 tools/bench_ab_merge.py "$OUT" "$OLD_SHA" "$NEW_SHA" "${pass_files[@]}"
